@@ -6,10 +6,10 @@ missing" #2).
 commits: compute from a base version, then atomically advance the
 table's commit state ONLY IF nobody advanced it in between (the Delta
 commit protocol's shape). On a host-local filesystem that
-"only if" needs a lock, because POSIX has no compare-and-swap across
-files. On every real object store it does not: S3 (conditional
-writes: ``If-Match`` / ``If-None-Match`` on PUT), GCS
-(``ifGenerationMatch``), and Azure Blob (ETag preconditions) all
+"only if" needs a transactional store, because POSIX has no
+compare-and-swap across files. On every real object store it does
+not: S3 (conditional writes: ``If-Match`` / ``If-None-Match`` on
+PUT), GCS (``ifGenerationMatch``), and Azure Blob (ETag preconditions) all
 provide server-side conditional-put — which is exactly the primitive
 Delta Lake commits through on those stores.
 
@@ -41,18 +41,18 @@ a docstring:
   nothing; its orphan version directory is reclaimed by the same
   age-gated GC).
 
-``incremental._FileCommitStore`` adapts the host-local file layout
-(``_CURRENT``/``_VERSIONS``/``_BUCKETS``) to this interface, using the
-per-table commit lock as the filesystem's conditional-put emulation —
-so the file-backed table and an object-store table run the SAME
-publish code path, differing only in which store they hand it.
-
 Durable/network backends: ``sqlite_store.SqliteConditionalStore``
 (transactional CAS — one BEGIN IMMEDIATE per put_if) and
 ``http_store.HttpConditionalStore`` (the S3 wire shape itself:
 GET/PUT + If-Match/If-None-Match + 412, tested against a reference
-etag server over real sockets). All backends run the identical
-publish script in tests/test_commit_protocol.py.
+etag server over real sockets). Their table adapters
+(``SqliteTableCommitStore``, the host-local default, and
+``HttpTableCommitStore``) project each committed state onto the
+table's ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files, so a host-local
+table and an object-store table run the SAME publish code path,
+differing only in which store ``incremental._commit_store`` hands it.
+All backends run the identical publish script in
+tests/test_commit_protocol.py.
 """
 
 from __future__ import annotations

@@ -39,30 +39,24 @@ contracts are carried by an explicit bucketed + versioned layout:
 **Concurrent writers** (a 100 TB lake has streaming + backfill writers
 by construction) are handled with optimistic concurrency, the Delta
 commit protocol's shape: every merge records the version it computed
-FROM, and the publish — serialized by a per-table commit lock —
-CAS-checks ``_CURRENT`` against that base before flipping the pointer.
-A writer that lost the race gets ``ConcurrentWriteError`` and re-runs
-its merge off the new current (automatic, ``MERGE_MAX_ATTEMPTS``), so
-both merges land and neither is silently discarded. The lock is a
-host-local kernel lock (``fcntl.flock`` on a persistent per-table
-file — crashed holders release automatically, so no break path
-exists; valid here because this layout targets a host-local
-filesystem); on an object store the same CAS is
-the store's conditional-put on the log object. Two conscious
-trade-offs of the flock design: (1) the lock file is world-writable
-(0o666) so a table shared across OS users works — which also means
-any local user can hold the lock and stall that table's commits (a
-local DoS, acceptable on single-tenant hosts; multi-tenant
-deployments should use a ``ConditionalStore`` backend, where no lock
-exists to hold); (2) exclusion assumes nothing unlinks/replaces the
-lock file — no code in this release does, but mixed-version
-deployments (an old release's unlink-on-release) or out-of-band
-tooling can, so the commit re-verifies the held inode at publish
-time and fails retryably rather than writing without exclusion. GC distinguishes
-logged directories (safe to remove immediately — log appends happen
-only inside the critical section) from never-logged ones, which might
-be a concurrent writer's merge awaiting publish and are only reclaimed
-past ``ORPHAN_GRACE_SECONDS``. The legacy unbucketed fallback remains
+FROM, and the publish CAS-checks the table's commit state against that
+base before flipping the pointer. A writer that lost the race gets
+``ConcurrentWriteError`` and re-runs its merge off the new current
+(automatic, ``MERGE_MAX_ATTEMPTS``), so both merges land and neither is
+silently discarded. The whole commit is ONE conditional put of the
+table's ``CommitState`` (``commit_protocol.cas_publish``), arbitered
+per table by :func:`_commit_store`: the sqlite store
+(``<table>/_commit.sqlite``, one ``BEGIN IMMEDIATE`` transaction per
+put — sqlite's journal rolls back a writer that dies mid-commit, so
+there is no lock to break) on every host-local table, or the HTTP/S3
+conditional-put store where the table carries that marker. Either way
+the ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files are a read projection
+written inside the arbiter's critical section, so readers never touch
+the arbiter. GC distinguishes logged directories (safe to remove
+immediately — the arbiter's log only gains a name inside a commit, so
+a logged directory's writer is finished or dead) from never-logged
+ones, which might be a concurrent writer's merge awaiting publish and
+are only reclaimed past ``ORPHAN_GRACE_SECONDS``. The legacy unbucketed fallback remains
 single-writer (documented at the call site).
 
 Scale notes: the MERGE shuffle is one hash partition by key (the
@@ -75,15 +69,11 @@ the old full-rewrite + directory-swap path, kept as a fallback.
 
 from __future__ import annotations
 
-import fcntl
-import hashlib
 import json
 import os
 import shutil
-import socket
 import time
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -112,163 +102,21 @@ _PTR = "_CURRENT"
 _NB = "_BUCKETS"
 _LOG = "_VERSIONS"
 _SCHEMA_FILE = "_SCHEMA.json"
-_LOCK = "_COMMIT.lock"
-# Optimistic-concurrency knobs. The commit lock is kernel-owned
-# (flock), so crashed holders release automatically and no staleness
-# knob exists. The orphan grace window protects a CONCURRENT writer's
-# not-yet-published version directory (written before it reaches the
-# commit lock) from being GC'd as a crashed merge's leftover:
+# Optimistic-concurrency knobs. The orphan grace window protects a
+# CONCURRENT writer's not-yet-published version directory (written
+# before its commit) from being GC'd as a crashed merge's leftover:
 # never-logged v-* dirs are only removed once older than the grace
-# window. Logged-but-unpointed tails carry no such risk (the log is
-# only appended inside the commit critical section, so a logged
-# orphan's writer is dead by construction) and GC immediately.
+# window. Logged-but-unpointed tails carry no such risk (the arbiter's
+# log only names a version inside a commit, so a logged orphan's
+# writer is dead by construction) and GC immediately.
 ORPHAN_GRACE_SECONDS = 600.0
 MERGE_MAX_ATTEMPTS = 5
 _UNSET = object()
 
 
 # ConcurrentWriteError is defined by the store-agnostic protocol
-# module and re-exported here (its historical home) — the file-backed
-# table and an object-store table raise the SAME class.
-
-
-def _parse_lock_token(raw: str) -> tuple[str, int]:
-    """(host, pid) from a ``host:pid:uuid`` lock token; ('', 0) for
-    anything unparseable. Diagnostic only — the flock-based lock never
-    makes control-flow decisions from file content."""
-    parts = raw.split(":")
-    if len(parts) != 3:
-        return "", 0
-    try:
-        return parts[0], int(parts[1])
-    except ValueError:
-        return "", 0
-
-
-class _HeldLock:
-    """Handle yielded by :func:`_commit_lock`: carries the held fd so
-    critical-section code can re-verify, at commit time, that the path
-    still names the inode it locked. The design invariant is that
-    nothing ever unlinks or replaces the lock file — but that invariant
-    is held by THIS release's code, not by the kernel: a process still
-    running an older release (whose release path unlinked the lock) or
-    out-of-band tooling can replace the file mid-hold, after the
-    acquisition-time inode check passed, and the next acquirer would
-    then lock a fresh inode and run concurrently. ``verify`` turns that
-    silent exclusion loss into a retryable precondition failure."""
-
-    def __init__(self, fd: int, lock_path: str):
-        self._fd = fd
-        self._lock_path = lock_path
-
-    def verify(self) -> None:
-        try:
-            ok = os.stat(self._lock_path).st_ino == os.fstat(self._fd).st_ino
-        except FileNotFoundError:
-            ok = False
-        if not ok:
-            raise PreconditionFailed(
-                f"{self._lock_path}: lock file was replaced or unlinked "
-                "while held — exclusion may be lost; abandoning this "
-                "commit attempt (retry re-acquires on the new inode)"
-            )
-
-
-@contextmanager
-def _commit_lock(target_path: str, timeout: float = 30.0):
-    """Host-local mutual exclusion for the commit critical section
-    (CAS check + log append + pointer flip), via ``fcntl.flock`` on a
-    persistent per-table lock file. Yields a :class:`_HeldLock` whose
-    ``verify()`` re-checks, at commit time, that the locked inode is
-    still the one the path names (see that class for the mixed-version
-    / out-of-band-tooling hazard it defends against; no code in THIS
-    release ever unlinks the file).
-
-    The kernel owns the lock, which is what makes this correct with NO
-    break path at all (Delta's commit protocol has none either):
-
-    - **crash safety**: a holder's death closes its fd and the kernel
-      releases the lock — there is no such thing as a stale lock, so
-      there is no staleness judgment, and no judgment means no
-      judge-then-break TOCTOU. (The previous O_EXCL-file design broke
-      'stale' locks by path operations; a path rename/unlink cannot be
-      conditioned on WHICH lock is present, so under churn a breaker
-      could claim a FRESH holder's lock — caught by the 4-process churn
-      test losing a counter increment, the classic lost update.)
-    - **threads and processes alike**: each acquisition opens its own
-      file description, and flock serializes per description, so two
-      threads of one process exclude each other exactly like two
-      processes do.
-    - **host-local by design**: this adapter targets a host-local
-      filesystem (module docstring); flock's cross-host behavior on
-      network filesystems is mount-dependent, which is one more reason
-      a multi-host lake should hand ``cas_publish`` an object-store
-      ``ConditionalStore`` (server-side conditional-put, no locks
-      anywhere) instead of sharing this directory.
-
-    The lock FILE persists (release closes the fd but never unlinks),
-    so every acquirer locks the same inode; the post-acquire inode
-    check below defends against out-of-band deletion of the lock file
-    (if the path was replaced while we waited, locking the orphaned
-    old inode excludes nobody — reopen and retry). The holder token
-    written into the file is diagnostic only — it names the current
-    holder in timeout errors; no control flow reads it."""
-    lock_path = os.path.join(target_path, _LOCK)
-    token = f"{socket.gethostname()}:{os.getpid()}:{uuid.uuid4().hex}"
-    deadline = time.monotonic() + timeout
-    while True:
-        # world-writable lock file: it persists across writers, and a
-        # table shared by several OS users must let each open it for
-        # writing (flock itself ignores open mode; write access is
-        # only for the diagnostic holder stamp). If another user's
-        # umask already made it unwritable to us, fall back to a
-        # read-only description — locking still works, stamping skips.
-        can_stamp = True
-        try:
-            fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o666)
-        except PermissionError:
-            fd = os.open(lock_path, os.O_RDONLY)
-            can_stamp = False
-        acquired = False
-        try:
-            while True:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    break
-                except (BlockingIOError, PermissionError):
-                    if time.monotonic() > deadline:
-                        try:
-                            with open(lock_path) as f:
-                                held = f.read().strip()
-                        except OSError:
-                            held = "?"
-                        host, pid = _parse_lock_token(held)
-                        who = f"{host} pid {pid}" if pid else held
-                        raise TimeoutError(
-                            f"{target_path}: commit lock held by {who!r} "
-                            f"for longer than {timeout}s"
-                        )
-                    time.sleep(0.02)
-            try:
-                acquired = os.stat(lock_path).st_ino == os.fstat(fd).st_ino
-            except FileNotFoundError:
-                acquired = False  # path replaced/unlinked while we waited
-        finally:
-            if not acquired:
-                os.close(fd)
-        if acquired:
-            break
-    try:
-        if can_stamp:
-            try:
-                os.fchmod(fd, 0o666)  # undo a restrictive creation umask
-            except OSError:
-                pass  # not the owner: someone else already created it
-            os.ftruncate(fd, 0)
-            os.write(fd, f"{token}\n".encode())
-        yield _HeldLock(fd, lock_path)
-    finally:
-        os.close(fd)  # closes the description -> kernel releases the lock
+# module and re-exported here (its historical home) — every table
+# arbiter raises the SAME class.
 
 
 def buckets_for_bytes(
@@ -425,10 +273,10 @@ def _doomed_versions(target_path: str, keep: set[str], logged: set[str]) -> list
     """Version directories outside the retention set, eligible for
     removal. Two classes, per the concurrency contract:
 
-    - **logged** dirs (in ``_VERSIONS`` at any point — superseded
-      published versions and crashed merges' unpointed tails) are
-      eligible immediately: log appends happen only inside the commit
-      critical section, so a logged-but-unretained dir's writer is
+    - **logged** dirs (in the commit state's log at any point —
+      superseded published versions and crashed merges' unpointed
+      tails) are eligible immediately: the log only gains a name
+      inside a commit, so a logged-but-unretained dir's writer is
       finished or dead, never in flight;
     - **never-logged** dirs are either a crashed merge that died before
       commit OR a concurrent writer's version still awaiting its
@@ -438,12 +286,13 @@ def _doomed_versions(target_path: str, keep: set[str], logged: set[str]) -> list
 
     Selection uses the kept/logged sets the commit itself returned (a
     consistent snapshot of the log/pointer state at commit time); the
-    actual ``rmtree`` runs after the lock is released and re-checks
-    the LIVE log first — see :func:`_remove_versions`. Deleting
-    outside the lock is safe because the pointer has already flipped,
-    a doomed dir can never re-enter any later publish's retention set
-    (the log only ever appends NEW version names), and concurrent
-    removers of the same dir are idempotent (``ignore_errors``).
+    actual ``rmtree`` runs after the commit and re-checks the LIVE log
+    first — see :func:`_remove_versions`. Deleting outside the
+    arbiter's critical section is safe because the pointer has already
+    flipped, a doomed dir can never re-enter any later publish's
+    retention set (the log only ever appends NEW version names), and
+    concurrent removers of the same dir are idempotent
+    (``ignore_errors``).
     Keeping rmtree out of the critical section keeps commits at a few
     milliseconds, so a publish never stalls waiters behind a large
     directory removal, no matter how big the superseded versions are."""
@@ -464,8 +313,8 @@ def _doomed_versions(target_path: str, keep: set[str], logged: set[str]) -> list
 
 
 def _remove_versions(target_path: str, doomed: list[str]) -> list[str]:
-    """rmtree the doomed version dirs — call AFTER the commit lock is
-    released (see :func:`_doomed_versions` for why that is safe).
+    """rmtree the doomed version dirs — call AFTER the commit (see
+    :func:`_doomed_versions` for why that is safe).
 
     The live log/pointer is re-read PER DIRECTORY, immediately before
     its rmtree, and anything it names is spared: the doomed list was
@@ -496,72 +345,11 @@ def _remove_versions(target_path: str, doomed: list[str]) -> list[str]:
     return removed
 
 
-class _FileCommitStore:
-    """:class:`~ad_data_lake_spark.commit_protocol.ConditionalStore`
-    over the table directory's ``_CURRENT``/``_VERSIONS``/``_BUCKETS``
-    files. ``get`` composes them into the protocol's single commit
-    object (etag = content hash); ``put_if`` re-composes UNDER the
-    per-table commit lock, verifies the precondition, and decomposes
-    the new state back to the files in the crash-safe order (buckets →
-    log → pointer). The lock is this filesystem's stand-in for the
-    conditional-put a real object store provides server-side — the
-    publish logic above this adapter (``cas_publish``) is identical
-    for both, which is the point: swapping the backend swaps the
-    durability story, not the protocol.
-
-    A get() can run concurrently with a put_if's decomposed writes
-    only by skipping the lock — it doesn't: both take the lock, so
-    composed reads are never torn and etags always correspond to a
-    real committed state."""
-
-    def __init__(self, target_path: str):
-        self.target_path = target_path
-
-    def _compose(self) -> tuple[bytes, str] | None:
-        current = _current_version(self.target_path)
-        versions = _version_history(self.target_path)
-        if current is None and not versions:
-            return None  # fresh table: no commit object yet
-        state = CommitState(
-            tuple(versions), current, _stored_buckets(self.target_path)
-        )
-        data = state.to_bytes()
-        return data, hashlib.sha256(data).hexdigest()
-
-    def get(self, key: str) -> tuple[bytes, str] | None:
-        assert key == COMMIT_KEY
-        with _commit_lock(self.target_path):
-            return self._compose()
-
-    def put_if(
-        self,
-        key: str,
-        data: bytes,
-        *,
-        if_match: str | None = None,
-        if_none_match: bool = False,
-    ) -> str:
-        assert key == COMMIT_KEY
-        with _commit_lock(self.target_path) as held:
-            cur = self._compose()
-            if if_none_match and cur is not None:
-                raise PreconditionFailed(f"{self.target_path}: already committed")
-            if if_match is not None and (cur is None or cur[1] != if_match):
-                raise PreconditionFailed(f"{self.target_path}: etag mismatch")
-            # commit-time inode re-verify: the acquisition check covers
-            # the WAIT; this covers the HOLD (out-of-band replacement
-            # of the lock file would silently void exclusion — fail the
-            # publish as a retryable precondition instead of writing)
-            held.verify()
-            _project_state(self.target_path, CommitState.from_bytes(data))
-            return hashlib.sha256(data).hexdigest()
-
-
 def _project_state(target_path: str, state: "CommitState") -> None:
     """Decompose a CommitState to the table's file layout (_BUCKETS
     sidecar -> _VERSIONS log -> _CURRENT pointer, in that crash-safe
-    order) — the ONE projection writer every commit backend shares
-    (file, sqlite, http), so the layout can never diverge per backend.
+    order) — the ONE projection writer every table arbiter shares
+    (sqlite, http), so the layout can never diverge per backend.
     Caller provides whatever serialization its arbiter requires."""
     if (
         state.n_buckets is not None
@@ -574,21 +362,20 @@ def _project_state(target_path: str, state: "CommitState") -> None:
 
 
 def _commit_store(target_path: str):
-    """The commit arbiter for this table: the sqlite-backed store when
-    the table carries its marker database (``_commit.sqlite``, planted
-    at table creation — see ``sqlite_store.SqliteTableCommitStore``),
-    the HTTP/S3-wire store when it carries the ``_commit.http`` marker
-    (see ``http_store.HttpTableCommitStore``), else the flock-emulated
-    file store. Per-table and layout-bound: the marker travels with the
-    directory, so every writer on every process picks the same arbiter
-    with no configuration to drift."""
+    """The commit arbiter for this table: the HTTP/S3-wire store when
+    the table carries the ``_commit.http`` marker (see
+    ``http_store.HttpTableCommitStore``), else the sqlite store
+    (``sqlite_store.SqliteTableCommitStore``, whose ``_commit.sqlite``
+    database is created on first use and adopts a table that so far
+    has only its ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files).
+    Per-table and layout-bound: the marker travels with the directory,
+    so every writer on every process picks the same arbiter with no
+    configuration to drift."""
     from ad_data_lake_spark import http_store, sqlite_store
 
-    if os.path.exists(os.path.join(target_path, sqlite_store.TABLE_COMMIT_DB)):
-        return sqlite_store.SqliteTableCommitStore(target_path)
     if os.path.exists(os.path.join(target_path, http_store.HTTP_COMMIT_MARKER)):
         return http_store.HttpTableCommitStore(target_path)
-    return _FileCommitStore(target_path)
+    return sqlite_store.SqliteTableCommitStore(target_path)
 
 
 def _publish(
@@ -606,8 +393,8 @@ def _publish(
     **Optimistic concurrency (the Delta commit protocol's CAS):** the
     commit runs through the store-agnostic protocol
     (:func:`~ad_data_lake_spark.commit_protocol.cas_publish`) against
-    this table's :class:`_FileCommitStore`. When ``base_version`` is
-    given, the publish first re-checks that the current pointer still
+    this table's arbiter (:func:`_commit_store`). When ``base_version``
+    is given, the publish first re-checks that the current pointer still
     equals the version this merge was computed FROM — if another
     writer published in between, committing would silently discard
     that writer's merge (lost update), so this raises
@@ -618,7 +405,7 @@ def _publish(
     conditional-put (see commit_protocol's backend mapping); only the
     store adapter differs.
 
-    Write order inside the adapter's critical section is
+    Write order inside the arbiter's critical section is
     buckets-sidecar → log → pointer, so a crash at any boundary
     leaves the table consistent: an unpointed log tail is just an
     orphaned directory a later publish GCs, never a dangling pointer.
@@ -698,16 +485,11 @@ def _apply_bucketed_once(
 
     prev_version = _current_version(target_path)
     has_foreign_content = prev_version is None and os.path.isdir(target_path) and any(
-        # commit metadata (the lock file, a pre-planted sqlite or http
-        # arbiter marker and their sidecars) is NOT legacy data — a
-        # fresh versioned table whose arbiter was planted before its
-        # first merge must take the versioned path below, not this
-        # fallback
-        not (
-            d == _LOCK
-            or d.startswith(TABLE_COMMIT_DB)
-            or d.startswith(HTTP_COMMIT_MARKER)
-        )
+        # commit metadata (a pre-planted sqlite or http arbiter marker
+        # and their sidecars) is NOT legacy data — a fresh versioned
+        # table whose arbiter was planted before its first merge must
+        # take the versioned path below, not this fallback
+        not (d.startswith(TABLE_COMMIT_DB) or d.startswith(HTTP_COMMIT_MARKER))
         for d in os.listdir(target_path)
     )
     if has_foreign_content:
@@ -941,12 +723,17 @@ def vacuum(target_path: str, retain: int = 1) -> list[str]:
     backfill calls this to reclaim the space early instead of waiting
     ``RETAIN_VERSIONS`` more merges.
 
-    The log rewrite and GC selection run under the commit lock (a
-    concurrent publish CASes against the log); the directory removal
-    itself runs after release (see :func:`_doomed_versions`).
+    The log rewrite is one conditional put against the table's arbiter
+    (a publish that lands in between makes it re-read and re-derive);
+    the directory removal itself runs after that commit (see
+    :func:`_doomed_versions`).
     Never-logged version directories — possibly a concurrent writer's
     merge awaiting publish — are only removed past the orphan grace
     window; logged tails GC immediately."""
+    if _current_version(target_path) is None:
+        # checked on the files first, so a plain or missing directory
+        # never gets an arbiter database created by a failing call
+        raise ValueError(f"{target_path} is not a versioned (bucketed) table")
     store = _commit_store(target_path)
     for _ in range(MERGE_MAX_ATTEMPTS):
         got = store.get(COMMIT_KEY)

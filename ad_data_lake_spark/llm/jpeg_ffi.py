@@ -2,7 +2,7 @@
 PRODUCTION decode path for the MP4/AVI motion-JPEG frame walks and the
 still-image dispatch (VERDICT r12 "next round" #2).
 
-Same seam pattern as ``webp_ffi`` (Pillow → native → vendored), but
+Same seam pattern as ``webp_ffi`` (native → vendored), but
 libjpeg's classic API cannot be bound with raw ctypes (error handling
 is setjmp/longjmp in the caller's native frame, and the library
 size-checks the caller's compile-time struct layout), so the binding

@@ -13,8 +13,9 @@ BGR(A) row unpack; ``webp_codec`` — VP8L prefix-code + transform
 decode), all exercised in CI, covering every format the reference
 uploader accepts. WebP payloads prefer the system libwebp via ctypes
 (``webp_ffi``) when present — native-speed decode of lossy VP8 AND
-lossless VP8L, which this host has — with Pillow, when importable,
-taking over every call site ahead of both. Audio and video are real
+lossless VP8L. Pillow is never consulted, even where it is installed:
+one decode chain on every executor keeps the resized bytes independent
+of which host ran the task. Audio and video are real
 too (round 11): WAV decodes via the vendored ``wav_codec``
 (PCM8/16/float32 + linear resample), AVI video frames extract via the
 vendored ``avi_codec`` (uncompressed DIB + MJPEG through
@@ -48,13 +49,6 @@ from pyspark.sql import functions as F
 
 from ad_data_lake_spark.functions.creative import infer_asset_kind
 
-try:  # pragma: no cover - decoder not present in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_IMAGE_DECODER = True
-except ImportError:
-    HAVE_IMAGE_DECODER = False
-
 MIMES = ("image/jpeg", "image/png", "video/mp4", "audio/wav")
 
 FEATURE_SCHEMA = (
@@ -68,8 +62,8 @@ def parse_image_dims(payload: bytes) -> tuple[int, int] | None:
     for unrecognized bytes. Covers the three classic container formats
     (PNG IHDR, GIF logical-screen descriptor, JPEG SOF0/1/2 markers) —
     the header fields are stable public specs, so the hot-path dims
-    read needs no media library at all. Full pixel decode still
-    requires Pillow (``decode_asset_bytes``)."""
+    read needs no media library at all. Full pixel decode is
+    ``decode_asset_bytes``."""
     if payload[:8] == b"\x89PNG\r\n\x1a\n" and len(payload) >= 24:
         return (
             int.from_bytes(payload[16:20], "big"),
@@ -109,25 +103,21 @@ def parse_image_dims(payload: bytes) -> tuple[int, int] | None:
 
 def decode_asset_bytes(payload: bytes, mime: str, deterministic: bool = False):
     """Decode an image payload. Dispatch order (pytest-pinned in
-    test_llm_pipeline): **Pillow** when importable (any format it
-    knows) → **libwebp via ctypes** for WebP payloads (``webp_ffi`` —
+    test_llm_pipeline): **libwebp via ctypes** for WebP payloads
+    (``webp_ffi`` —
     the production path: native-speed decode of BOTH lossy VP8 and
     lossless VP8L; the reference uploader accepts .webp, reference
     pages/2_Creative_Uploader.py:25) → the **vendored pure-stdlib
     codecs** (PNG: 8-bit RGB/RGBA; JPEG: baseline sequential
     4:4:4/grayscale; GIF; BMP; lossless WebP/VP8L), so the REAL decode
     branch runs in CI for ALL FIVE accepted formats even on a host
-    with no media libraries at all. Returns a Pillow image or a
-    ``(width, height, channels, pixels)`` tuple respectively.
+    with no media libraries at all. Returns a
+    ``(width, height, channels, pixels)`` tuple.
     Audio payloads decode via ``decode_audio_bytes`` (vendored WAV
     codec), video frames via ``decode_video_frames`` (vendored AVI
     codec); only codec-stack formats (mp3/aac, h264) still raise
     ``NotImplementedError``."""
     if mime.startswith("image/"):
-        if HAVE_IMAGE_DECODER:
-            import io
-
-            return Image.open(io.BytesIO(payload))
         if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
             from ad_data_lake_spark.llm import webp_ffi
 
@@ -180,15 +170,15 @@ def decode_asset_bytes(payload: bytes, mime: str, deterministic: bool = False):
         "no decoder for this payload in this container (WebP decodes "
         "natively via libwebp-ctypes when present; PNG/baseline-JPEG/"
         "GIF/BMP/lossless-WebP via the vendored codecs; lossy WebP "
-        "without libwebp and audio/video need Pillow/soundfile/av); "
+        "without libwebp and audio/video need native codecs); "
         "use fake_features() (deterministic stand-in)"
     )
 
 
 def resize_image_bytes(payload: bytes, max_dim: int = 384) -> bytes:
-    """Real aspect-preserving resize: decode (Pillow or the vendored
-    PNG/JPEG/GIF/BMP codecs), scale with the same integer ``resize_dims`` plan
-    the stub path uses, re-encode as PNG. The vendored branch is
+    """Real aspect-preserving resize: decode (``decode_asset_bytes``:
+    libwebp for WebP, else the vendored codecs), scale with the same
+    integer ``resize_dims`` plan the stub path uses, re-encode as PNG. The vendored branch is
     byte-deterministic (fixed zlib level, nearest-neighbor floor
     resample, float64 IDCT with one final round), which is what lets
     the resized md5 be asserted in CI — and why this caller decodes
@@ -197,17 +187,11 @@ def resize_image_bytes(payload: bytes, max_dim: int = 384) -> bytes:
     heterogeneous cluster (or a task retried on a shim-less executor)
     would otherwise emit different resized bytes for the same payload
     (r13 review)."""
-    decoded = decode_asset_bytes(payload, "image/any", deterministic=True)
-    if HAVE_IMAGE_DECODER:
-        import io
-
-        out_w, out_h = resize_dims(decoded.width, decoded.height, max_dim)
-        buf = io.BytesIO()
-        decoded.resize((out_w, out_h)).save(buf, format="PNG")
-        return buf.getvalue()
     from ad_data_lake_spark.llm import png_codec
 
-    w, h, channels, pixels = decoded
+    w, h, channels, pixels = decode_asset_bytes(
+        payload, "image/any", deterministic=True
+    )
     out_w, out_h = resize_dims(w, h, max_dim)
     resized = png_codec.resize_nearest(pixels, w, h, out_w, out_h, channels)
     return png_codec.encode_png(resized, out_w, out_h, channels)
@@ -320,8 +304,8 @@ def resize_assets(
     md5-derived stand-in dims and resized-hash so DuckDB reproduces
     every value. ``real_decode=True`` header-parses actual image bytes
     for dims (``parse_image_dims``, no library needed; md5 fallback for
-    unrecognized payloads) and, when Pillow is importable, hashes a
-    genuinely re-encoded resize (``resize_image_bytes``)."""
+    unrecognized payloads) and hashes a genuinely re-encoded resize
+    (``resize_image_bytes``) wherever the payload decodes."""
     with_kind = assets.select(
         "doc_id",
         "payload",
@@ -341,19 +325,18 @@ def resize_assets(
                 out_w, out_h = resize_dims(src_w, src_h, max_dim)
                 resized_md5 = None
                 if real_decode and dims is not None:
-                    # real pixel path: Pillow when present, else the
+                    # real pixel path: libwebp for WebP, else the
                     # vendored PNG/JPEG/GIF/BMP/VP8L-WebP codecs;
                     # payloads none can decode (e.g. lossy WebP
-                    # without Pillow) drop to the stand-in.
+                    # without libwebp) drop to the stand-in.
                     # ValueError = corrupt-but-signed payload (the codec
-                    # maps zlib/struct/index errors onto it); OSError =
-                    # Pillow's lazy-decode failures — one bad byte
-                    # stream must never kill the whole Arrow batch.
+                    # maps zlib/struct/index errors onto it) — one bad
+                    # byte stream must never kill the whole Arrow batch.
                     try:
                         resized_md5 = hashlib.md5(
                             resize_image_bytes(b, max_dim)
                         ).hexdigest()
-                    except (NotImplementedError, ValueError, OSError):
+                    except (NotImplementedError, ValueError):
                         pass
                 if resized_md5 is None:
                     resized_md5 = hashlib.md5(

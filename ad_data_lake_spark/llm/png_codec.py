@@ -18,8 +18,7 @@ Scope — deliberately tiny, implementing the public PNG spec
   the whole resize plan is reproducible without floating point.
 
 This is a stand-in for a production decoder behind the exact same
-call sites (``decode_asset_bytes`` / ``resize_image_bytes`` dispatch
-to Pillow when importable); it is NOT a general-purpose image
+call sites (``decode_asset_bytes`` / ``resize_image_bytes``); it is NOT a general-purpose image
 library. Palette, grayscale, 16-bit, and interlaced PNGs raise
 ``ValueError`` — callers fall back to the metadata stand-in path.
 """

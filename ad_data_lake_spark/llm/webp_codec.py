@@ -23,8 +23,8 @@ Decode scope — the full VP8L still-image feature set:
   COLOR_INDEXING (palette with sub-byte pixel bundling).
 
 Lossy WebP (``VP8 `` chunks) is out of scope and raises ValueError —
-the multimodal tier then falls back to Pillow when present or the
-deterministic stand-in, the same error contract as the sibling codecs
+the multimodal tier then decodes it via libwebp when present, else
+falls back to the deterministic stand-in, the same error contract as the sibling codecs
 (``png_codec``/``jpeg_codec``/``gif_codec``/``bmp_codec``): a corrupt
 or unsupported payload must raise ValueError, never kill an Arrow
 batch.
@@ -52,7 +52,7 @@ _MAX_PIXELS = 64 << 20  # same decode-side bound as the JPEG codec
 # CPU/memory fuse for the FALLBACK path, not a format limit — it can
 # refuse a legitimate ultra-compressible image (a solid-color 4 MP
 # VP8L is ~100 bytes), whose decode here would genuinely cost minutes
-# anyway; the native decoders (Pillow / libwebp ctypes), which handle
+# anyway; the native decoder (libwebp ctypes), which handles
 # such images in milliseconds, keep the full _MAX_PIXELS budget.
 _BOMB_FLOOR_PIXELS = 1 << 20
 _BOMB_PIXELS_PER_BYTE = 1024

@@ -1,7 +1,7 @@
 """ctypes binding for the system libwebp — the PRODUCTION WebP decode
 path (VERDICT r10 "what's missing" #3).
 
-The decode dispatch for WebP payloads is Pillow → THIS binding → the
+The decode dispatch for WebP payloads is THIS binding → the
 vendored pure-Python VP8L codec (``webp_codec``). The binding closes
 the two gaps the vendored codec leaves at once:
 

@@ -119,21 +119,20 @@ def lake_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lake_concurrent_writers_sqlite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T20 twin on the NON-FLOCK commit arbiter: the identical
+    """T20 twin with the arbiter planted up front: the identical
     lost-update interleave as ``lake_concurrent_writers``, but the
-    table's commits are arbitered by the sqlite-backed
-    :class:`~ad_data_lake_spark.sqlite_store.SqliteTableCommitStore`
-    (a real transactional conditional-put — sqlite's write lock is the
-    CAS, no flock anywhere), planted as the table's marker database
-    before the first merge. Same oracle, same expected final state and
-    publish depth — proving the publish path is genuinely
-    store-agnostic: swapping the backend changes the durability story,
-    not one observable byte of the protocol's behavior."""
+    table's sqlite arbiter
+    (:class:`~ad_data_lake_spark.sqlite_store.SqliteTableCommitStore`,
+    a real transactional conditional-put — sqlite's write lock is the
+    CAS) is created explicitly before the first merge instead of by
+    the first publish — the only difference from
+    ``lake_concurrent_writers``, which runs the same arbiter. Same
+    oracle, same expected final state and publish depth."""
 
     def plant(target: str) -> None:
         from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
 
-        SqliteTableCommitStore(target)  # marker db routes commits to sqlite
+        SqliteTableCommitStore(target)  # create the arbiter's database now
 
     return _concurrent_writers_run(spark, sf_dir, "concurrent_sqlite", plant)
 

@@ -1,10 +1,10 @@
 """A real, durable :class:`~ad_data_lake_spark.commit_protocol.
-ConditionalStore` backend over sqlite — the non-flock arbiter the
-commit protocol's seam was built for (VERDICT r10 "what's missing" #2).
+ConditionalStore` backend over sqlite — the host-local commit arbiter
+of every versioned table that does not carry the HTTP store's marker.
 
-``_FileCommitStore`` emulates conditional-put with a per-table flock;
-that is sound on one host but is still a LOCK. This adapter gets the
-CAS from a transactional store instead, exactly the shape of the real
+POSIX has no compare-and-swap across files, so a table directory
+alone cannot arbitrate concurrent commits. This adapter gets the CAS
+from a transactional store instead, exactly the shape of the real
 object-store backends the protocol documents (S3 ``If-Match``, GCS
 ``ifGenerationMatch``, Azure ETags):
 
@@ -19,10 +19,10 @@ object-store backends the protocol documents (S3 ``If-Match``, GCS
   ``if_none_match`` maps to GCS ``ifGenerationMatch=0``).
 - :class:`SqliteTableCommitStore` — the versioned table layout with
   sqlite as its commit arbiter. The canonical ``CommitState`` lives in
-  ``<table>/_commit.sqlite`` (whose presence is ALSO the marker that
-  routes ``incremental._publish``/``vacuum`` through this backend);
-  the ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files are decomposed
-  inside the same transaction as a read projection, so every reader
+  ``<table>/_commit.sqlite`` (created on the table's first commit by
+  ``incremental._publish``/``vacuum``); the
+  ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files are decomposed inside
+  the same transaction as a read projection, so every reader
   (``read_merged``, time travel, GC, ``lake_stats``) works unchanged.
 
 Crash window note for the table store: a writer dying between the file
@@ -39,20 +39,30 @@ re-decompose). What can never happen is two writers interleaving their
 file writes: decomposition and the heal both run only while holding
 sqlite's write lock, so files advance strictly in commit order.
 
-Switching an EXISTING flock-arbitered table to sqlite is not
-supported (plant the marker at table creation); the marker check in
-``incremental._commit_store`` makes the choice explicit per table.
+Adoption: a table whose commit state lives only in its
+``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files (written by a release
+that arbitered commits with a per-table file lock, or by hand) has no
+database row yet. Its first ``get`` seeds the row from those files,
+under ``BEGIN IMMEDIATE`` and only while the row is still absent, so N
+processes racing to adopt one table agree on a single seed and then
+CAS against it as usual. The same rule covers a FIRST commit that died
+between its file decomposition and COMMIT: its version directory is
+complete and the files already point at it, so it is adopted as
+published rather than wedging every later merge. Adoption makes the
+database the arbiter from then on, so an old release and this one must
+not write the same table at the same time — the old release would
+commit through its file lock, which this store never consults.
 """
 
 from __future__ import annotations
 
 import os
 import sqlite3
+from contextlib import contextmanager
 
-from ad_data_lake_spark.commit_protocol import PreconditionFailed
+from ad_data_lake_spark.commit_protocol import CommitState, PreconditionFailed
 
-# marker + canonical-state database inside a table directory; its
-# presence routes that table's commits through this backend
+# canonical-state database inside a table directory
 TABLE_COMMIT_DB = "_commit.sqlite"
 
 _SCHEMA = (
@@ -85,6 +95,25 @@ class SqliteConditionalStore:
             self.db_path, timeout=self.timeout, isolation_level=None
         )
 
+    @contextmanager
+    def _immediate(self):
+        """One ``BEGIN IMMEDIATE`` transaction: the write lock is taken
+        up front, COMMIT on normal exit, ROLLBACK on any exception."""
+        con = self._connect()
+        try:
+            con.execute("BEGIN IMMEDIATE")
+            try:
+                yield con
+                con.execute("COMMIT")
+            except BaseException:
+                try:
+                    con.execute("ROLLBACK")
+                except sqlite3.Error:
+                    pass  # already rolled back (e.g. the conn died)
+                raise
+        finally:
+            con.close()
+
     def get(self, key: str) -> tuple[bytes, str] | None:
         con = self._connect()
         try:
@@ -103,37 +132,23 @@ class SqliteConditionalStore:
         if_match: str | None = None,
         if_none_match: bool = False,
     ) -> str:
-        con = self._connect()
-        try:
-            con.execute("BEGIN IMMEDIATE")  # write lock now; CAS is atomic
-            try:
-                row = con.execute(
-                    "SELECT gen FROM objects WHERE key = ?", (key,)
-                ).fetchone()
-                if if_none_match and row is not None:
-                    raise PreconditionFailed(f"{self.db_path}:{key} already exists")
-                if if_match is not None and (
-                    row is None or str(row[0]) != if_match
-                ):
-                    raise PreconditionFailed(f"{self.db_path}:{key} etag mismatch")
-                gen = (int(row[0]) + 1) if row is not None else 1
-                con.execute(
-                    "INSERT INTO objects (key, data, gen) VALUES (?, ?, ?) "
-                    "ON CONFLICT(key) DO UPDATE SET "
-                    "data = excluded.data, gen = excluded.gen",
-                    (key, bytes(data), gen),
-                )
-                self._in_transaction(key, data)
-                con.execute("COMMIT")
-            except BaseException:
-                try:
-                    con.execute("ROLLBACK")
-                except sqlite3.Error:
-                    pass  # already rolled back (e.g. the conn died)
-                raise
-            return str(gen)
-        finally:
-            con.close()
+        with self._immediate() as con:  # write lock now; CAS is atomic
+            row = con.execute(
+                "SELECT gen FROM objects WHERE key = ?", (key,)
+            ).fetchone()
+            if if_none_match and row is not None:
+                raise PreconditionFailed(f"{self.db_path}:{key} already exists")
+            if if_match is not None and (row is None or str(row[0]) != if_match):
+                raise PreconditionFailed(f"{self.db_path}:{key} etag mismatch")
+            gen = (int(row[0]) + 1) if row is not None else 1
+            con.execute(
+                "INSERT INTO objects (key, data, gen) VALUES (?, ?, ?) "
+                "ON CONFLICT(key) DO UPDATE SET "
+                "data = excluded.data, gen = excluded.gen",
+                (key, bytes(data), gen),
+            )
+            self._in_transaction(key, data)
+        return str(gen)
 
     def _in_transaction(self, key: str, data: bytes) -> None:
         """Subclass hook: runs after the conditional write, before
@@ -142,10 +157,9 @@ class SqliteConditionalStore:
 
 
 class SqliteTableCommitStore(SqliteConditionalStore):
-    """The versioned-lake table layout arbitered by sqlite instead of
-    flock (see module docstring). Constructing it on a fresh table
-    directory PLANTS the marker database, committing that table to this
-    backend for life."""
+    """The versioned-lake table layout arbitered by sqlite (see module
+    docstring). Constructing it creates the table directory and its
+    ``_commit.sqlite`` database if they are missing."""
 
     def __init__(self, target_path: str, timeout: float = 30.0):
         self.target_path = target_path
@@ -153,72 +167,81 @@ class SqliteTableCommitStore(SqliteConditionalStore):
         super().__init__(os.path.join(target_path, TABLE_COMMIT_DB), timeout)
 
     def get(self, key: str) -> tuple[bytes, str] | None:
-        got = super().get(key)
-        if got is not None:
-            # heal-on-read for the files-AHEAD crash window (writer
-            # died between its file decomposition and the sqlite
-            # COMMIT): the arbiter rolled back but the files name the
-            # never-committed version, so every merge derives a base
-            # the arbiter rejects and retries forever off the same
-            # files — the sqlite mirror of the HTTP backend's wedge
-            # (r12 review). Cheap guard first: only re-project when the
-            # files' pointer disagrees with the arbiter's truth. The
-            # projection runs under its own BEGIN IMMEDIATE so it
-            # serializes against writers' decompositions, and it
-            # RE-READS the arbiter state inside that lock (r13 — the
-            # pre-lock SELECT can be one commit BEHIND a writer whose
-            # put_if already decomposed newer files inside its still-
-            # open transaction; projecting the stale snapshot would
-            # move the files BACKWARDS, breaking the strictly-in-
-            # commit-order invariant). A LOCAL failure is best-effort
-            # on the read path (the state is already in hand; the next
-            # successful sync heals) — including SQLITE_BUSY on the
-            # BEGIN IMMEDIATE under writer contention.
-            from ad_data_lake_spark import incremental
-            from ad_data_lake_spark.commit_protocol import CommitState
+        from ad_data_lake_spark import incremental
 
-            state = CommitState.from_bytes(got[0])
-            if incremental._current_version(self.target_path) != state.current:
-                try:
-                    con = self._connect()
-                    try:
-                        con.execute("BEGIN IMMEDIATE")
-                        try:
-                            row = con.execute(
-                                "SELECT data FROM objects WHERE key = ?",
-                                (key,),
-                            ).fetchone()
-                            if row is not None:
-                                fresh = CommitState.from_bytes(bytes(row[0]))
-                                if (
-                                    incremental._current_version(
-                                        self.target_path
-                                    )
-                                    != fresh.current
-                                ):
-                                    incremental._project_state(
-                                        self.target_path, fresh
-                                    )
-                            con.execute("COMMIT")
-                        except BaseException:
-                            try:
-                                con.execute("ROLLBACK")
-                            except sqlite3.Error:
-                                pass
-                            raise
-                    finally:
-                        con.close()
-                except (OSError, sqlite3.OperationalError):
-                    pass  # read succeeded; projection heals next sync
+        got = super().get(key)
+        if got is None:
+            return self._adopt(key)
+        # heal-on-read for the files-AHEAD crash window (writer died
+        # between its file decomposition and the sqlite COMMIT): the
+        # arbiter rolled back but the files name the never-committed
+        # version, so every merge derives a base the arbiter rejects
+        # and retries forever off the same files — the sqlite mirror of
+        # the HTTP backend's wedge (r12 review). Cheap guard first: only
+        # re-project when the files' pointer disagrees with the
+        # arbiter's truth. The projection runs under its own BEGIN
+        # IMMEDIATE so it serializes against writers' decompositions,
+        # and it RE-READS the arbiter state inside that lock (r13 — the
+        # pre-lock SELECT can be one commit BEHIND a writer whose
+        # put_if already decomposed newer files inside its still-open
+        # transaction; projecting the stale snapshot would move the
+        # files BACKWARDS, breaking the strictly-in-commit-order
+        # invariant). A LOCAL failure is best-effort on the read path
+        # (the state is already in hand; the next successful sync
+        # heals) — including SQLITE_BUSY on the BEGIN IMMEDIATE under
+        # writer contention.
+        state = CommitState.from_bytes(got[0])
+        if incremental._current_version(self.target_path) != state.current:
+            try:
+                with self._immediate() as con:
+                    row = con.execute(
+                        "SELECT data FROM objects WHERE key = ?", (key,)
+                    ).fetchone()
+                    if row is not None:
+                        fresh = CommitState.from_bytes(bytes(row[0]))
+                        if (
+                            incremental._current_version(self.target_path)
+                            != fresh.current
+                        ):
+                            incremental._project_state(self.target_path, fresh)
+            except (OSError, sqlite3.OperationalError):
+                pass  # read succeeded; projection heals next sync
         return got
+
+    def _adopt(self, key: str) -> tuple[bytes, str] | None:
+        """Seed an absent row from the table's files (see module
+        docstring, "Adoption"); None for a table with no commit yet.
+        The row is re-checked under the write lock, so of N racing
+        adopters one seeds and the rest read its seed."""
+        from ad_data_lake_spark import incremental
+
+        with self._immediate() as con:
+            row = con.execute(
+                "SELECT data, gen FROM objects WHERE key = ?", (key,)
+            ).fetchone()
+            if row is None:
+                current = incremental._current_version(self.target_path)
+                versions = incremental._version_history(self.target_path)
+                if current is None and not versions:
+                    return None  # fresh table: no commit object yet
+                data = CommitState(
+                    tuple(versions),
+                    current,
+                    incremental._stored_buckets(self.target_path),
+                ).to_bytes()
+                con.execute(
+                    "INSERT INTO objects (key, data, gen) VALUES (?, ?, 1)",
+                    (key, data),
+                )
+                row = (data, 1)
+        return bytes(row[0]), str(row[1])
 
     def _in_transaction(self, key: str, data: bytes) -> None:
         # decompose the winning state to the table files (the read
         # projection) while holding the write lock: file writes happen
-        # strictly in commit order, and readers keep resolving
-        # _CURRENT exactly as they do on the flock-backed layout
+        # strictly in commit order, and readers keep resolving _CURRENT
+        # without ever opening the database
         from ad_data_lake_spark import incremental
-        from ad_data_lake_spark.commit_protocol import CommitState
 
         incremental._project_state(
             self.target_path, CommitState.from_bytes(data)

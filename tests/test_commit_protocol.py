@@ -201,28 +201,23 @@ def _script(store) -> list:
 
 def test_all_backends_are_equivalent(tmp_path):
     """The SAME publish script produces the SAME observable commit
-    states over the in-memory conditional-put store, the file-layout
-    adapter (lock-emulated conditional-put), the generic sqlite store
-    (transactional conditional-put), and the sqlite-arbitered table
-    store — the property that makes the backend swappable."""
+    states over the in-memory conditional-put store, the generic sqlite
+    store (transactional conditional-put), and the sqlite-arbitered
+    table store — the property that makes the backend swappable."""
     from ad_data_lake_spark.sqlite_store import (
         SqliteConditionalStore,
         SqliteTableCommitStore,
     )
 
     mem = _script(MemoryConditionalStore())
-    target = str(tmp_path / "file_t")
-    os.makedirs(target)
-    fil = _script(incremental._FileCommitStore(target))
     sql = _script(SqliteConditionalStore(str(tmp_path / "kv.sqlite")))
     starget = str(tmp_path / "sqlite_t")
     stab = _script(SqliteTableCommitStore(starget))
-    assert mem == fil == sql == stab
-    # and both table adapters actually decomposed to the on-disk layout
-    for t in (target, starget):
-        assert incremental._current_version(t) == "v-0003"
-        assert incremental._version_history(t) == ["v-0002", "v-0003"]
-        assert incremental._stored_buckets(t) == 8
+    assert mem == sql == stab
+    # and the table adapter actually decomposed to the on-disk layout
+    assert incremental._current_version(starget) == "v-0003"
+    assert incremental._version_history(starget) == ["v-0002", "v-0003"]
+    assert incremental._stored_buckets(starget) == 8
 
 
 def test_sqlite_store_multi_writer_hammer(tmp_path):
@@ -313,22 +308,6 @@ def test_sqlite_writer_killed_mid_transaction_rolls_back(tmp_path):
     # and the table is writable again immediately (lock died with fd)
     res = cas_publish(store, "v-after", base_version="v-seed")
     assert list(res.kept) == ["v-seed", "v-after"]
-
-
-def test_file_store_etag_tracks_composed_state(tmp_path):
-    target = str(tmp_path / "etag_t")
-    os.makedirs(target)
-    store = incremental._FileCommitStore(target)
-    assert store.get(COMMIT_KEY) is None
-    cas_publish(store, "v-0001", base_version=None)
-    data1, etag1 = store.get(COMMIT_KEY)
-    # stale etag refuses
-    cas_publish(store, "v-0002", base_version="v-0001")
-    with pytest.raises(PreconditionFailed):
-        store.put_if(COMMIT_KEY, data1, if_match=etag1)
-    # an out-of-band file touch (e.g. legacy tooling) changes the etag
-    data2, etag2 = store.get(COMMIT_KEY)
-    assert etag2 != etag1
 
 
 # ---------------------------------------------------------------------------

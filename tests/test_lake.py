@@ -7,7 +7,6 @@ acceptance rule).
 from __future__ import annotations
 
 import os
-import socket
 import time
 
 import pytest
@@ -84,12 +83,12 @@ def test_merge_upsert_is_idempotent_and_last_wins(spark, events, tmp_path):
 
 
 def test_sqlite_arbitered_table_full_merge_surface(spark, events, tmp_path):
-    """A table whose commits are arbitered by the sqlite store (marker
-    planted at creation) must carry the WHOLE versioned-lake surface
-    unchanged: idempotent last-wins MERGE, pointer-resolving reads,
-    time travel, vacuum — readers and GC only ever see the decomposed
-    files, publishes only ever go through sqlite's conditional-put,
-    and the flock file is never created."""
+    """A table whose commits are arbitered by the sqlite store (its
+    database created before the first merge) must carry the WHOLE
+    versioned-lake surface unchanged: idempotent last-wins MERGE,
+    pointer-resolving reads, time travel, vacuum — readers and GC only
+    ever see the decomposed files, publishes only ever go through
+    sqlite's conditional-put."""
     from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
 
     path = str(tmp_path / "sqlite_silver")
@@ -121,8 +120,6 @@ def test_sqlite_arbitered_table_full_merge_surface(spark, events, tmp_path):
     removed = incremental.vacuum(path, retain=1)
     assert removed  # the older versions were reclaimed
     assert _table_hash(incremental.read_merged(spark, path)) == h1
-    # no flock file was ever needed
-    assert not os.path.exists(os.path.join(path, incremental._LOCK))
 
 
 def test_merge_rewrites_only_touched_buckets(spark, events, tmp_path):
@@ -870,11 +867,17 @@ def test_crashed_merge_log_tail_never_resolves_as_prior(spark, events, tmp_path)
     unpointed log tail. That tail must never resolve as 'previous'
     (it was never current), vacuum must GC it rather than retain it,
     and the next publish must drop it from the log. Also pins the
-    ``steps_back >= 0`` ValueError contract."""
+    ``steps_back >= 0`` ValueError contract.
+
+    The sqlite arbiter never logged the crashed writer's version (it
+    died before COMMIT; only the files name it), so its directory is a
+    never-logged orphan that GC reclaims only past the grace window —
+    each scenario ages it past ``ORPHAN_GRACE_SECONDS`` first."""
     import pytest as _pytest
 
     from ad_data_lake_spark.incremental import (
         _LOG,
+        ORPHAN_GRACE_SECONDS,
         merge_upsert,
         read_merged,
         read_version,
@@ -908,6 +911,8 @@ def test_crashed_merge_log_tail_never_resolves_as_prior(spark, events, tmp_path)
     assert _table_hash(read_version(spark, target, 0)) == h1
     assert _table_hash(read_version(spark, target, 1)) == h0
 
+    aged = time.time() - ORPHAN_GRACE_SECONDS - 60
+    os.utime(os.path.join(target, orphan), (aged, aged))
     removed = vacuum(target, retain=2)
     assert orphan in removed, "vacuum must GC the unpointed tail"
     assert not os.path.isdir(os.path.join(target, orphan))
@@ -919,6 +924,7 @@ def test_crashed_merge_log_tail_never_resolves_as_prior(spark, events, tmp_path)
     os.makedirs(os.path.join(target, orphan))
     with open(os.path.join(target, _LOG), "a") as f:
         f.write(orphan + "\n")
+    os.utime(os.path.join(target, orphan), (aged, aged))
     merge_upsert(spark, target, upd, "event_id", "ts", "value")
     with open(os.path.join(target, _LOG)) as f:
         assert orphan not in f.read()
@@ -1118,7 +1124,7 @@ def test_interleaved_merges_no_lost_update(spark, events, tmp_path, monkeypatch)
 
 def test_threaded_concurrent_merges_both_land(spark, events, tmp_path):
     """Two real threads merging disjoint key sets concurrently: the
-    commit lock serializes the publishes, the loser CAS-retries, and
+    commit arbiter serializes the publishes, the loser CAS-retries, and
     both updates are present afterwards — no interleaving of this pair
     can lose a merge."""
     from concurrent.futures import ThreadPoolExecutor
@@ -1150,8 +1156,6 @@ def test_threaded_concurrent_merges_both_land(spark, events, tmp_path):
     # by the losing attempt (it reclaims its own dir on CAS failure)
     vdirs = [d for d in os.listdir(target) if d.startswith("v-")]
     assert len(vdirs) <= incremental.RETAIN_VERSIONS
-    # the flock file persists by design (every acquirer locks one inode)
-    assert os.path.exists(os.path.join(target, incremental._LOCK))
 
 
 def test_orphan_gc_is_age_gated_for_unlogged_dirs(spark, events, tmp_path):
@@ -1159,8 +1163,8 @@ def test_orphan_gc_is_age_gated_for_unlogged_dirs(spark, events, tmp_path):
     awaiting publish: a fresh one must survive the next publish's GC;
     one older than the grace window is a dead writer's leftover and is
     reclaimed. Logged-but-unpointed tails still GC immediately (their
-    writer is dead by construction — log appends happen only inside
-    the commit critical section)."""
+    writer is dead by construction — the arbiter's log only gains a
+    name inside a commit)."""
     target = str(tmp_path / "grace_t")
     base = _ev_base(events)
     incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
@@ -1178,167 +1182,6 @@ def test_orphan_gc_is_age_gated_for_unlogged_dirs(spark, events, tmp_path):
         spark, target, _ev_upd(base, 1, 1), "event_id", "ts", "value"
     )
     assert not os.path.isdir(fresh), "expired orphan survived GC"
-
-
-def test_commit_lock_crashed_holder_releases_automatically(tmp_path):
-    """The commit lock is kernel-owned (flock): a holder that DIES
-    releases automatically — there is no stale-lock state and no break
-    path to race. A subprocess takes the lock and exits while 'mid
-    commit'; acquisition here must succeed immediately after the child
-    dies, with the persistent lock file left in place."""
-    import subprocess
-    import sys
-    import textwrap
-
-    target = str(tmp_path / "lock_t")
-    os.makedirs(target)
-    lock_path = os.path.join(target, incremental._LOCK)
-
-    child = subprocess.Popen(
-        [
-            sys.executable,
-            "-c",
-            textwrap.dedent(
-                f"""
-                import sys
-                sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
-                from ad_data_lake_spark import incremental as inc
-                lock = inc._commit_lock({target!r}, timeout=5.0)
-                lock.__enter__()
-                print("HELD", flush=True)
-                sys.stdin.readline()  # never comes: parent closes stdin
-                """
-            ),
-        ],
-        stdin=subprocess.PIPE,
-        stdout=subprocess.PIPE,
-    )
-    assert child.stdout.readline().strip() == b"HELD"
-    # child holds the kernel lock: acquisition must time out
-    with pytest.raises(TimeoutError):
-        with incremental._commit_lock(target, timeout=0.3):
-            pass
-    child.kill()  # crash mid-commit: fd closes, kernel releases
-    child.wait()
-    with incremental._commit_lock(target, timeout=5.0):
-        pass  # acquired without any break logic
-    assert os.path.exists(lock_path)  # the lock FILE persists by design
-
-
-def test_commit_lock_content_is_diagnostic_only(tmp_path):
-    """Lock-file CONTENT makes no control-flow decisions: scribbling a
-    dead-pid token, a foreign-host token, or garbage into the file
-    neither steals a held lock nor blocks a free one."""
-    import threading
-
-    target = str(tmp_path / "content_t")
-    os.makedirs(target)
-    lock_path = os.path.join(target, incremental._LOCK)
-
-    # free lock + scary content: acquisition just works
-    with open(lock_path, "w") as f:
-        f.write("otherhost:99999:feedface\n")
-    with incremental._commit_lock(target, timeout=2.0):
-        pass
-
-    # held lock + scribbled content: waiter still times out
-    entered = threading.Event()
-    release = threading.Event()
-
-    def holder():
-        with incremental._commit_lock(target, timeout=5.0):
-            entered.set()
-            release.wait(10.0)
-
-    t = threading.Thread(target=holder)
-    t.start()
-    assert entered.wait(5.0)
-    with open(lock_path, "w") as f:
-        f.write("not:a:holder\n")  # content lies; the kernel does not
-    with pytest.raises(TimeoutError):
-        with incremental._commit_lock(target, timeout=0.3):
-            pass
-    release.set()
-    t.join()
-
-
-def test_commit_lock_file_persists_and_inode_is_stable(tmp_path):
-    """Release closes the fd but never unlinks the lock file, so every
-    acquirer locks the SAME inode — the property that keeps flock
-    exclusion sound (two writers flocking different inodes at one path
-    would not exclude each other). Nothing in the system removes the
-    file; this pins that."""
-    target = str(tmp_path / "inode_t")
-    os.makedirs(target)
-    lock_path = os.path.join(target, incremental._LOCK)
-    with incremental._commit_lock(target, timeout=2.0):
-        ino1 = os.stat(lock_path).st_ino
-    assert os.path.exists(lock_path)
-    with incremental._commit_lock(target, timeout=2.0):
-        ino2 = os.stat(lock_path).st_ino
-    assert ino1 == ino2
-
-
-def test_commit_lock_churn_across_processes(tmp_path):
-    """Lock-churn stress: N processes x M critical sections against one
-    table, with concurrent lock-file content scribbles (content is
-    diagnostic only — the kernel lock must be unaffected). Mutual
-    exclusion is checked by construction: each critical section reads a
-    shared counter file, sleeps, and writes counter+1 — any
-    double-entry loses an increment, so the final counter equals N*M
-    only if no two writers ever overlapped."""
-    import subprocess
-    import sys
-    import textwrap
-
-    target = str(tmp_path / "churn_t")
-    os.makedirs(target)
-    counter = os.path.join(target, "COUNTER")
-    with open(counter, "w") as f:
-        f.write("0")
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    worker = textwrap.dedent(
-        f"""
-        import os, sys, time
-        sys.path.insert(0, {repo!r})
-        from ad_data_lake_spark import incremental as inc
-        target = sys.argv[1]
-        counter = os.path.join(target, "COUNTER")
-        lock_path = os.path.join(target, inc._LOCK)
-        for i in range(8):
-            if i % 3 == 0:
-                # scribble misleading content; must not affect exclusion
-                try:
-                    with open(lock_path, "w") as f:
-                        f.write("otherhost:1:5cribble\\n")
-                except OSError:
-                    pass
-            # generous timeout: this host may be running a parallel
-            # Spark bench; a slow acquisition is not a protocol bug
-            with inc._commit_lock(target, timeout=120.0):
-                with open(counter) as f:
-                    n = int(f.read().strip())
-                time.sleep(0.002)
-                with open(counter, "w") as f:
-                    f.write(str(n + 1))
-        print("OK")
-        """
-    )
-    procs = [
-        subprocess.Popen(
-            [sys.executable, "-c", worker, target],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-        )
-        for _ in range(4)
-    ]
-    for p in procs:
-        out, err = p.communicate(timeout=300)
-        assert p.returncode == 0, err.decode()
-        assert out.decode().strip() == "OK"
-    with open(counter) as f:
-        assert int(f.read().strip()) == 4 * 8, "double-entry lost an increment"
 
 
 def test_remove_versions_rechecks_liveness_per_directory(tmp_path):
@@ -1380,46 +1223,54 @@ def test_remove_versions_rechecks_liveness_per_directory(tmp_path):
     assert os.path.isdir(os.path.join(target, "v-doom2"))
 
 
-def test_commit_lock_verify_catches_mid_hold_replacement(tmp_path):
-    """The held-lock inode re-verify (commit-time): replacing or
-    unlinking the lock file while the lock is HELD — which only
-    out-of-band tooling or a mixed-version deployment can do — must
-    fail ``verify()`` with a retryable precondition instead of letting
-    the holder write without exclusion. An undisturbed hold passes."""
-    from ad_data_lake_spark.commit_protocol import PreconditionFailed
+def test_files_only_table_is_adopted_by_sqlite(tmp_path):
+    """A table whose commit state exists only as files (no database;
+    e.g. written before sqlite was its arbiter) is adopted on its first
+    commit: the seeded row carries the files' log, pointer and bucket
+    count, so the base-checked publish lands instead of CAS-failing.
+    vacuum on a directory that is not a versioned table raises without
+    creating an arbiter database there."""
+    from ad_data_lake_spark.commit_protocol import COMMIT_KEY, CommitState
+    from ad_data_lake_spark.sqlite_store import (
+        TABLE_COMMIT_DB,
+        SqliteTableCommitStore,
+    )
 
-    target = str(tmp_path / "verify_t")
+    target = str(tmp_path / "files_only_t")
     os.makedirs(target)
-    lock_path = os.path.join(target, incremental._LOCK)
+    for v in ("v-0001", "v-0002", "v-0003"):
+        os.makedirs(os.path.join(target, v))
+    incremental._write_atomic(target, incremental._NB, "16")
+    incremental._write_atomic(target, incremental._LOG, "v-0001\nv-0002\n")
+    incremental._write_atomic(target, incremental._PTR, "v-0002")
 
-    with incremental._commit_lock(target, timeout=2.0) as held:
-        held.verify()  # undisturbed: passes
-        os.unlink(lock_path)
-        with pytest.raises(PreconditionFailed):
-            held.verify()
-        # replaced with a fresh inode (what a foreign acquirer would
-        # lock): still a failure — exclusion is gone either way
-        with open(lock_path, "w") as f:
-            f.write("fresh\n")
-        with pytest.raises(PreconditionFailed):
-            held.verify()
-    # the system self-heals: the next acquisition locks the new inode
-    with incremental._commit_lock(target, timeout=2.0) as held2:
-        held2.verify()
+    incremental._publish(target, "v-0003", base_version="v-0002")
+    state = CommitState.from_bytes(
+        SqliteTableCommitStore(target).get(COMMIT_KEY)[0]
+    )
+    assert state == CommitState(("v-0001", "v-0002", "v-0003"), "v-0003", 16)
+    assert incremental._current_version(target) == "v-0003"
+
+    plain = str(tmp_path / "plain_t")
+    os.makedirs(plain)
+    with pytest.raises(ValueError):
+        incremental.vacuum(plain)
+    assert not os.path.exists(os.path.join(plain, TABLE_COMMIT_DB))
 
 
-@pytest.mark.parametrize("backend", ["flock", "sqlite"])
+@pytest.mark.parametrize("backend", ["adopted", "sqlite"])
 def test_publish_cas_across_processes(tmp_path, backend):
     """Cross-PROCESS optimistic concurrency, pure file/db ops (no
     Spark): N subprocesses each publish M versions against one table
     using the retry-on-ConcurrentWriteError loop a merge performs.
-    Parameterized over BOTH commit arbiters — the flock-emulated file
-    store and the sqlite transactional store (workers call the same
-    ``_publish``; the table's marker database routes the backend, so
-    the only difference between runs is what provides the CAS).
-    Afterwards the log must contain the last max(1, retain) commits of
-    the N*M total with a consistent pointer — and every process must
-    have succeeded (no lost publishes, no deadlock)."""
+    Parameterized over how the table's sqlite arbiter comes to exist:
+    ``sqlite`` commits its seed through the arbiter up front;
+    ``adopted`` seeds only the ``_CURRENT``/``_VERSIONS`` files (a
+    table written before it had a database), so the N workers race to
+    adopt those files into the database AND to publish. Afterwards the
+    log must contain the last max(1, retain) commits of the N*M total
+    with a consistent pointer — and every process must have succeeded
+    (no lost publishes, no deadlock)."""
     import subprocess
     import sys
     import textwrap
@@ -1430,11 +1281,14 @@ def test_publish_cas_across_processes(tmp_path, backend):
     if backend == "sqlite":
         from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
 
-        SqliteTableCommitStore(target)  # plant the arbiter marker
+        SqliteTableCommitStore(target)  # create the arbiter's database
         incremental._publish(target, "v-seed0000", base_version=None)
     else:
         incremental._write_atomic(target, incremental._PTR, "v-seed0000")
         incremental._write_atomic(target, incremental._LOG, "v-seed0000\n")
+        from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB
+
+        assert not os.path.exists(os.path.join(target, TABLE_COMMIT_DB))
 
     worker = textwrap.dedent(
         """
@@ -1474,21 +1328,15 @@ def test_publish_cas_across_processes(tmp_path, backend):
     history = incremental._published_history(target, current)
     assert history[-1] == current
     assert len(history) == min(20 + 1, incremental.RETAIN_VERSIONS)
-    if backend == "flock":
-        # the flock file persists by design (every acquirer locks one inode)
-        assert os.path.exists(os.path.join(target, incremental._LOCK))
-    else:
-        # the sqlite arbiter never creates the flock file at all, and
-        # its canonical state agrees with the decomposed files
-        assert not os.path.exists(os.path.join(target, incremental._LOCK))
-        from ad_data_lake_spark.commit_protocol import COMMIT_KEY, CommitState
-        from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
+    # the sqlite arbiter's canonical state agrees with the decomposed files
+    from ad_data_lake_spark.commit_protocol import COMMIT_KEY, CommitState
+    from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
 
-        state = CommitState.from_bytes(
-            SqliteTableCommitStore(target).get(COMMIT_KEY)[0]
-        )
-        assert state.current == current
-        assert list(state.versions) == history
+    state = CommitState.from_bytes(
+        SqliteTableCommitStore(target).get(COMMIT_KEY)[0]
+    )
+    assert state.current == current
+    assert list(state.versions) == history
     # every retained version's directory exists (nothing GC'd wrongly)
     for v in history:
         assert os.path.isdir(os.path.join(target, v)), v

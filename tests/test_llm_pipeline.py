@@ -120,12 +120,10 @@ def test_topk_bruteforce_shape(embeddings):
 
 
 def test_multimodal_decode_stub_is_honest():
-    if MM.HAVE_IMAGE_DECODER:
-        pytest.skip("decoder present; stub inactive")
-    # undecodable bytes (not PNG, no Pillow) still raise honestly
+    # undecodable bytes still raise honestly
     with pytest.raises(NotImplementedError):
         MM.decode_asset_bytes(b"xx", "image/jpeg")
-    # ...but a real PNG decodes via the vendored codec even w/o Pillow
+    # ...but a real PNG decodes via the vendored codec
     w, h, channels, pixels = MM.decode_asset_bytes(_make_png(8, 4), "image/png")
     assert (w, h, channels) == (8, 4, 4)
     assert len(pixels) == 8 * 4 * 4
@@ -273,29 +271,39 @@ def test_resize_assets_real_decode_reads_headers(spark, documents):
 
 def test_resize_image_bytes_real_pixels():
     """The REAL decode → resize → re-encode path runs in this
-    container: Pillow when installed, else the vendored pure-stdlib
-    PNG codec. Either way the output is a valid PNG at the planned
-    integer dims; the vendored branch is additionally
-    byte-deterministic (fixed zlib level + floor nearest-neighbor)."""
+    container through the vendored pure-stdlib PNG codec: the output is
+    a valid PNG at the planned integer dims, and byte-deterministic
+    (fixed zlib level + floor nearest-neighbor)."""
+    from ad_data_lake_spark.llm import png_codec
+
     out = MM.resize_image_bytes(_make_png(1000, 500), 384)
     assert MM.parse_image_dims(out) == (384, 192)
-    if MM.HAVE_IMAGE_DECODER:
-        import io
+    w, h, channels, pixels = png_codec.decode_png(out)
+    assert (w, h, channels) == (384, 192, 4)
+    # the source was solid opaque black: NN resample preserves it
+    assert set(pixels[i : i + 4] for i in range(0, len(pixels), 4)) == {
+        b"\x00\x00\x00\xff"
+    }
+    assert MM.resize_image_bytes(_make_png(1000, 500), 384) == out
 
-        from PIL import Image
 
-        img = Image.open(io.BytesIO(out))
-        assert (img.width, img.height) == (384, 192)
-    else:
-        from ad_data_lake_spark.llm import png_codec
+def test_pillow_decodes_our_encoders_output():
+    """Interop: where Pillow is installed it must read the PNG, JPEG
+    and GIF streams the vendored encoders write (it is not installed in
+    this container; runs wherever it is)."""
+    Image = pytest.importorskip("PIL.Image")
+    import io
 
-        w, h, channels, pixels = png_codec.decode_png(out)
-        assert (w, h, channels) == (384, 192, 4)
-        # the source was solid opaque black: NN resample preserves it
-        assert set(pixels[i : i + 4] for i in range(0, len(pixels), 4)) == {
-            b"\x00\x00\x00\xff"
-        }
-        assert MM.resize_image_bytes(_make_png(1000, 500), 384) == out
+    import numpy as np
+
+    from ad_data_lake_spark.llm import gif_codec
+
+    png = MM.resize_image_bytes(_make_png(1000, 500), 384)
+    assert Image.open(io.BytesIO(png)).size == (384, 192)
+    assert Image.open(io.BytesIO(_make_jpeg(16, 16))).size == (16, 16)
+    g = np.random.default_rng(3).integers(0, 256, (37, 100), dtype=np.uint8)
+    gif = gif_codec.encode_gif_gray(np.stack([g, g, g], axis=-1).tobytes(), 100, 37)
+    assert Image.open(io.BytesIO(gif)).size == (100, 37)
 
 
 def test_png_codec_roundtrip_and_filters():
@@ -403,19 +411,14 @@ def test_png_codec_roundtrip_and_filters():
             PC.decode_png(payload)
 
     # and the gate-level contract: the corrupt payload routes to the
-    # stand-in branch (NotImplementedError) instead of crashing — the
-    # vendored-codec path only; Pillow surfaces its own lazy errors,
-    # which resize_assets catches as OSError
-    from ad_data_lake_spark.llm import multimodal
-
-    if not multimodal.HAVE_IMAGE_DECODER:
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_asset_bytes(corrupt_idat, "image/png")
+    # stand-in branch (NotImplementedError) instead of crashing
+    with pytest.raises(NotImplementedError):
+        MM.decode_asset_bytes(corrupt_idat, "image/png")
 
 
 def test_resize_assets_real_decode_hashes_real_reencode(spark):
     """With real_decode=True a PNG payload's resized_md5 must be the
-    md5 of the ACTUAL re-encoded resize (vendored codec or Pillow) —
+    md5 of the ACTUAL re-encoded resize (vendored codec) —
     not the metadata stand-in — proving the pixel path runs inside
     the Arrow batch loop, not just in unit tests."""
     import hashlib
@@ -501,15 +504,6 @@ def test_jpeg_codec_roundtrip_and_error_contract():
     with pytest.raises(ValueError):
         JC.encode_jpeg(b"\x00" * 5, 2, 2, 3)  # wrong buffer size
 
-    # interop: when Pillow is present it must decode our stream
-    if MM.HAVE_IMAGE_DECODER:
-        import io
-
-        from PIL import Image
-
-        img = Image.open(io.BytesIO(good))
-        assert (img.width, img.height) == (16, 16)
-
 
 def test_resize_assets_real_decode_jpeg_in_ci(spark):
     """The r8 verdict's ask #4: the real-decode test exercises a JPEG
@@ -593,7 +587,7 @@ def test_resize_assets_real_decode_webp_in_ci(spark):
 
 
 def test_webp_decode_dispatch_order_is_pinned(monkeypatch):
-    """Decode dispatch for WebP payloads is Pillow → libwebp-ctypes →
+    """Decode dispatch for WebP payloads is libwebp-ctypes →
     vendored VP8L codec. Pinned by sentinel: with libwebp available
     (this host has it) decode_asset_bytes must route a WebP payload
     through webp_ffi; with it unavailable the vendored codec serves the
@@ -605,8 +599,6 @@ def test_webp_decode_dispatch_order_is_pinned(monkeypatch):
     from ad_data_lake_spark.llm import webp_codec as WC
     from ad_data_lake_spark.llm import webp_ffi
 
-    if MM.HAVE_IMAGE_DECODER:
-        pytest.skip("Pillow present: it owns the whole dispatch by design")
     if not webp_ffi.available():
         pytest.skip("no system libwebp on this host")
 
@@ -645,8 +637,6 @@ def test_resize_assets_real_decode_lossy_vp8_in_ci(spark):
 
     from ad_data_lake_spark.llm import webp_ffi
 
-    if MM.HAVE_IMAGE_DECODER:
-        pytest.skip("Pillow present: it owns the whole dispatch by design")
     if not webp_ffi.available():
         pytest.skip("no system libwebp on this host")
 
@@ -739,13 +729,6 @@ def test_gif_bmp_codecs_roundtrip_and_error_contract():
     ):
         with pytest.raises(ValueError):
             (GC.decode_gif if bad[:2] != b"BM" else BC.decode_bmp)(bad)
-
-    if MM.HAVE_IMAGE_DECODER:
-        import io
-
-        from PIL import Image
-
-        assert Image.open(io.BytesIO(gif)).size == (100, 37)
 
 
 def test_resize_assets_real_decode_gif_bmp_in_ci(spark):
