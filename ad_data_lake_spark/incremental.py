@@ -77,7 +77,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructType
 
 from ad_data_lake_spark.commit_protocol import (
     COMMIT_KEY,
@@ -223,23 +223,40 @@ def _save_schema(version_dir: str, schema: StructType) -> None:
         f.write(schema.json())
 
 
+def _stored_schema(version_dir: str) -> StructType:
+    """The schema ``_save_schema`` stored for one version. Every version
+    this layout writes has one, so a missing file is a damaged table,
+    not a reason to fall back to inference."""
+    path = os.path.join(version_dir, _SCHEMA_FILE)
+    try:
+        with open(path) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        raise ValueError(
+            f"{path} is missing: cannot resolve the version schema"
+        ) from None
+
+
 def _read_version_dir(spark: SparkSession, version_dir: str) -> DataFrame:
-    """Read one version directory. mergeSchema: after a schema-evolving
-    merge the hardlinked untouched buckets still hold the old column
-    set; merged-footer reading surfaces evolved columns as nulls there
-    (exactly Delta's read behavior for files predating an ADD COLUMN).
-    A version with no bucket directories (every key tombstoned) reads
-    as an empty frame from the persisted schema."""
+    """Read one version directory with its stored ``_SCHEMA.json``, so
+    building the frame runs no schema-inference job.
+
+    The stored schema covers every part file in the version: it is the
+    schema of the merge output, which is the union of the previous
+    version's columns and the batch's. After a schema-evolving merge
+    the hardlinked untouched buckets still hold the old column set and
+    read the evolved columns as nulls (Delta's read behavior for files
+    predating an ADD COLUMN). A part file whose column type disagrees
+    with the stored schema fails the scan instead of reading nulls. A
+    version with no bucket directories (every key tombstoned) reads as
+    an empty frame with the stored schema."""
+    schema = _stored_schema(version_dir)
     has_data = any(
         d.startswith(f"{_BUCKET}=") for d in os.listdir(version_dir)
     )
     if not has_data:
-        with open(os.path.join(version_dir, _SCHEMA_FILE)) as f:
-            schema = StructType.fromJson(json.load(f))
         return spark.createDataFrame([], schema)
-    return (
-        spark.read.option("mergeSchema", "true").parquet(version_dir).drop(_BUCKET)
-    )
+    return spark.read.schema(schema).parquet(version_dir).drop(_BUCKET)
 
 
 def read_merged(spark: SparkSession, target_path: str) -> DataFrame:
@@ -483,14 +500,24 @@ def _apply_bucketed_once(
     from ad_data_lake_spark.http_store import HTTP_COMMIT_MARKER
     from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB
 
-    prev_version = _current_version(target_path)
-    has_foreign_content = prev_version is None and os.path.isdir(target_path) and any(
+    def lake_owned(d: str) -> bool:
         # commit metadata (a pre-planted sqlite or http arbiter marker
         # and their sidecars) is NOT legacy data — a fresh versioned
         # table whose arbiter was planted before its first merge must
-        # take the versioned path below, not this fallback
-        not (d.startswith(TABLE_COMMIT_DB) or d.startswith(HTTP_COMMIT_MARKER))
-        for d in os.listdir(target_path)
+        # take the versioned path below, not this fallback. Neither is
+        # what a first merge that died before publishing leaves: its
+        # never-published v-* directory (the age-gated orphan GC
+        # reclaims it) and the _BUCKETS/_VERSIONS files of a commit
+        # that died before its pointer flip.
+        return (
+            d.startswith((TABLE_COMMIT_DB, HTTP_COMMIT_MARKER))
+            or d in (_NB, _LOG)
+            or (d.startswith("v-") and os.path.isdir(os.path.join(target_path, d)))
+        )
+
+    prev_version = _current_version(target_path)
+    has_foreign_content = prev_version is None and os.path.isdir(target_path) and any(
+        not lake_owned(d) for d in os.listdir(target_path)
     )
     if has_foreign_content:
         # legacy unbucketed parquet directory: full-rewrite fallback.
@@ -543,28 +570,32 @@ def _apply_bucketed_once(
             for b in sorted(touched)
             if os.path.isdir(os.path.join(cur_dir, f"{_BUCKET}={b}"))
         ]
+        # the stored schema is a superset of every footer in the
+        # version (see _read_version_dir), so a touched bucket that
+        # predates an evolved column reads it as null and the rewrite
+        # keeps the column. With no touched bucket on disk the frame is
+        # empty but still carries the stored columns, so the new
+        # version's schema keeps those of its hardlinked buckets.
+        cur_schema = _stored_schema(cur_dir)
         if touched_dirs:
-            # mergeSchema is REQUIRED here: after a schema-evolving
-            # merge the version holds mixed footers (rewritten buckets
-            # carry evolved columns, hardlinked ones don't) — a single-
-            # footer inference could silently drop an evolved column
-            # from the rewrite. basePath-scoped listing keeps the
-            # footer merge O(touched buckets), not O(table).
+            # basePath keeps the _mb partition column and scopes the
+            # listing to the touched buckets
             affected = (
-                spark.read.option("mergeSchema", "true")
+                spark.read.schema(cur_schema)
                 .option("basePath", cur_dir)
                 .parquet(*touched_dirs)
             )
         else:
             affected = spark.createDataFrame(
-                [], batch_b.drop(*([delete_col] if delete_col else [])).schema
+                [], cur_schema.add(_BUCKET, IntegerType())
             )
         if delete_col is not None:
             affected = affected.withColumn(delete_col, F.lit(False))
         # allowMissingColumns = schema evolution: the batch may ADD
-        # columns (old rows read as null via read_merged's mergeSchema)
-        # and rewritten buckets may carry columns a given batch
-        # doesn't know about
+        # columns, and rewritten buckets may carry columns a given
+        # batch doesn't know about. The output schema is the union of
+        # both, and _save_schema stores it below, which is why every
+        # version's stored schema is a superset of its footers.
         deduped = finalize(
             last_wins_dedupe(
                 affected.unionByName(batch_b, allowMissingColumns=True),

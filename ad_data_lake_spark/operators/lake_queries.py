@@ -130,9 +130,11 @@ def lake_concurrent_writers_sqlite(spark: SparkSession, sf_dir: str) -> DataFram
     oracle, same expected final state and publish depth."""
 
     def plant(target: str) -> None:
+        from ad_data_lake_spark.commit_protocol import COMMIT_KEY
         from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
 
-        SqliteTableCommitStore(target)  # create the arbiter's database now
+        # the first get creates the arbiter's database (no commit yet)
+        SqliteTableCommitStore(target).get(COMMIT_KEY)
 
     return _concurrent_writers_run(spark, sf_dir, "concurrent_sqlite", plant)
 
@@ -540,7 +542,8 @@ def merge_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     the table has never seen (``status``). After the merge, updated
     rows carry their status, every pre-existing row (including whole
     hardlinked untouched buckets, whose parquet files still have the
-    OLD column set) reads back as NULL via merged-footer reading —
+    OLD column set) reads back as NULL, because the version is read
+    with its stored schema, which has the new column —
     Delta's ADD COLUMN read semantics on the plain-parquet layout."""
     base = _events_slim(spark, sf_dir).select("event_id", "ts", "user_id", "value")
     lake_dir = _scratch(spark, "schema-evo", sf_dir)

@@ -11,9 +11,11 @@ The reference's equivalent surface is its paged-GET scans
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -36,9 +38,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    """Read one fixture table. Plain ``spark.read.parquet`` so Catalyst
-    owns pushdown/pruning — filters and projections applied by callers
-    reach the scan (verify with ``df.explain``: PushedFilters/ReadSchema).
+    """Read one fixture table with its schema already resolved, so
+    building the frame runs no Spark job.
+
+    A fixture is one parquet file. Its footer is read on the driver
+    through Hadoop's FileSystem and converted by Spark's own converter
+    (:func:`_footer_schema`), which is exactly the conversion schema
+    inference applies to the one file it would touch, under the same
+    session confs. The schema is then handed to ``spark.read.schema``,
+    so the read skips the inference job. It is computed on every call
+    and never cached: the file is the only source, so there is no
+    second catalog that could drift from it. A directory path (the
+    partitioned layout of a production lake) keeps plain
+    ``spark.read.parquet``. Either way Catalyst owns pushdown and
+    pruning: filters and projections applied by callers reach the scan
+    (verify with ``df.explain``: PushedFilters/ReadSchema).
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
@@ -56,13 +70,50 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # Same pinning contract: read naive parquet timestamps as LTZ
     # directly instead of inferring TIMESTAMP_NTZ (which event-time APIs
     # reject and which would put a cast node in every plan). The
-    # _normalize_ntz cast below stays as a fallback for sessions where
-    # a reader was already resolved under the inferring conf.
+    # _normalize_ntz cast below stays as a fallback for a footer that
+    # carries Spark's own row metadata with an NTZ column.
     if spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", None) != "false":
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        return _read_events(spark, f"{sf_dir}/{name}.parquet")
-    return _normalize_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        return _read_events(spark, path)
+    return _normalize_ntz(_read_parquet(spark, path))
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The Spark schema of the parquet file at ``path``, read from its
+    footer on the driver; None when ``path`` is a directory.
+
+    Same steps as Spark's schema inference for a single file
+    (``ParquetFileFormat.readSchemaFromFooter`` over a
+    ``ParquetToSparkSchemaConverter`` built from the session's SQL
+    conf), minus the job that inference runs to read the footer on an
+    executor. Because the converter reads the conf when it is built,
+    the caller must set ``nanosAsLong`` and ``inferTimestampNTZ``
+    first."""
+    jvm = spark.sparkContext._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    status = jpath.getFileSystem(conf).getFileStatus(jpath)
+    if status.isDirectory():
+        return None
+    meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, jpath)
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    jschema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(jpath, meta),
+        parquet.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return StructType.fromJson(json.loads(jschema.json()))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a fixture file with its footer schema (no inference job),
+    or a directory with ``spark.read.parquet``."""
+    schema = _footer_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _normalize_ntz(df: DataFrame) -> DataFrame:
@@ -103,7 +154,7 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return _normalize_ntz(df)

@@ -76,24 +76,27 @@ class SqliteConditionalStore:
     per-operation (open → transact → close): sqlite serializes writers
     with its own file locking, so this store is safe across processes
     with zero shared in-memory state, and the ``timeout`` gives waiters
-    bounded blocking instead of instant SQLITE_BUSY failures."""
+    bounded blocking instead of instant SQLITE_BUSY failures. The
+    database file and its table are created by the first operation,
+    not by the constructor."""
 
     def __init__(self, db_path: str, timeout: float = 30.0):
         self.db_path = db_path
         self.timeout = timeout
-        con = self._connect()
-        try:
-            con.execute(_SCHEMA)
-        finally:
-            con.close()
 
     def _connect(self) -> sqlite3.Connection:
         # isolation_level=None -> autocommit; transactions are explicit
         # (BEGIN IMMEDIATE) so the write lock is taken up front, not
         # lazily at first write (which would widen the race window)
-        return sqlite3.connect(
+        con = sqlite3.connect(
             self.db_path, timeout=self.timeout, isolation_level=None
         )
+        try:
+            con.execute(_SCHEMA)  # no-op once the table exists
+        except BaseException:
+            con.close()
+            raise
+        return con
 
     @contextmanager
     def _immediate(self):
@@ -158,8 +161,9 @@ class SqliteConditionalStore:
 
 class SqliteTableCommitStore(SqliteConditionalStore):
     """The versioned-lake table layout arbitered by sqlite (see module
-    docstring). Constructing it creates the table directory and its
-    ``_commit.sqlite`` database if they are missing."""
+    docstring). Constructing it creates the table directory if it is
+    missing; the first ``get`` or ``put_if`` creates the
+    ``_commit.sqlite`` database."""
 
     def __init__(self, target_path: str, timeout: float = 30.0):
         self.target_path = target_path

@@ -888,3 +888,27 @@ def test_cas_no_unbounded_starvation_under_contention():
     assert not errors, errors
     assert len(results) == 4
     assert max(results.values()) < 30, results
+
+
+def test_sqlite_publish_opens_two_connections(tmp_path, monkeypatch):
+    """A steady-state publish on a sqlite-arbitered table opens one
+    connection for ``get`` and one for ``put_if``; constructing the
+    store opens none."""
+    import sqlite3
+
+    target = str(tmp_path / "conn_t")
+    for v in ("v-1", "v-2"):
+        os.makedirs(os.path.join(target, v))
+    incremental._publish(target, "v-1", base_version=None)
+
+    opened = []
+    real_connect = sqlite3.connect
+
+    def counting_connect(*args, **kwargs):
+        opened.append(args[0] if args else kwargs.get("database"))
+        return real_connect(*args, **kwargs)
+
+    monkeypatch.setattr(sqlite3, "connect", counting_connect)
+    incremental._publish(target, "v-2", base_version="v-1")
+    assert len(opened) == 2, opened
+    assert incremental._current_version(target) == "v-2"

@@ -1053,6 +1053,27 @@ def _ev_upd(base, parity: int, bump: int):
     )
 
 
+def test_dead_first_merge_leftover_is_not_legacy_data(spark, events, tmp_path):
+    """A first merge that died before publishing leaves a v-* directory
+    and no ``_CURRENT``. The next merge must take the versioned path
+    (not the unbucketed legacy rewrite, which would fold the dead
+    writer's rows and their ``_mb`` column into the table), and the
+    leftover stays for the age-gated orphan GC."""
+    target = str(tmp_path / "dead_first_t")
+    dead = _ev_base(events).limit(2).withColumn("_mb", F.lit(0))
+    dead.write.partitionBy("_mb").parquet(os.path.join(target, "v-deadbeef"))
+
+    new = _ev_base(events).orderBy("event_id").limit(1).withColumn(
+        "event_id", F.lit(10**12)
+    )
+    incremental.merge_upsert(spark, target, new, "event_id", "ts", "value")
+    assert os.path.exists(os.path.join(target, incremental._PTR))
+    got = incremental.read_merged(spark, target).collect()
+    assert [r.event_id for r in got] == [10**12]
+    assert "_mb" not in incremental.read_merged(spark, target).columns
+    assert os.path.isdir(os.path.join(target, "v-deadbeef"))
+
+
 def test_publish_cas_rejects_stale_base(spark, events, tmp_path):
     """_publish with a base_version that no longer matches _CURRENT
     must raise ConcurrentWriteError (and leave the table untouched);
