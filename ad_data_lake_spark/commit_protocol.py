@@ -108,8 +108,8 @@ class CommitState:
     """A table's full commit metadata as one CAS unit. ``versions`` is
     the ordered publish log (oldest first; may carry a crashed
     writer's never-published tail AFTER ``current`` — consumers
-    truncate at the pointer, exactly like the file layout's
-    ``_published_history``)."""
+    truncate at the pointer with :meth:`published`, which the file
+    layout's ``_published_history`` calls too)."""
 
     versions: tuple[str, ...]
     current: str | None

@@ -10,9 +10,8 @@ applies the IDENTICAL rule contract in plain Python over
 batches to native/Python code), so the per-row cost is one
 ``json.loads`` + a dict walk.
 
-Byte-compatibility notes (verified row-for-row against the Catalyst
-form on every fixture payload at sf0.001/0.01/0.1 —
-scripts/ab_sanitize_dynamic.py):
+Byte-compatibility notes (pinned row-for-row against the Catalyst
+form by tests/test_properties.py::test_dynamic_json_python_twin_byte_equal):
 
 - ``from_json(col, "map<string,string>")`` renders non-string scalars
   as their canonical token text (booleans ``true``/``false``, integers
@@ -34,8 +33,8 @@ scripts/ab_sanitize_dynamic.py):
   enables ALLOW_SINGLE_QUOTES, so a payload written with
   single-quoted strings parses in the Column form but passes through
   verbatim here (strict JSON only). Neither the fixture generator nor
-  the reference's API payloads emit single-quoted JSON; the 3-SF
-  byte-equality check pins the domain.
+  the reference's API payloads emit single-quoted JSON; the
+  byte-equality test pins the domain.
 """
 
 from __future__ import annotations

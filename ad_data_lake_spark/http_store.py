@@ -46,8 +46,8 @@ from ad_data_lake_spark.commit_protocol import COMMIT_KEY, PreconditionFailed
 # marker file inside a table directory; its presence routes that
 # table's commits through :class:`HttpTableCommitStore` (JSON body:
 # {"base_url": ..., "key": ...}). The decompose lock and etag sidecar
-# share the prefix so the versioned layout's foreign-content check can
-# exclude all three with one startswith.
+# share the prefix; like every commit file, all three start with "_",
+# which the merge's plain-directory check passes as layout-owned.
 HTTP_COMMIT_MARKER = "_commit.http"
 _HTTP_LOCK = HTTP_COMMIT_MARKER + ".lock"
 _HTTP_ETAG = HTTP_COMMIT_MARKER + ".etag"

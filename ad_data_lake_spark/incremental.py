@@ -30,8 +30,7 @@ contracts are carried by an explicit bucketed + versioned layout:
   (Delta ``VERSION AS OF`` + ``VACUUM``); an ordered ``_VERSIONS``
   log records publish order so "N back" is well-defined even when a
   crashed merge leaves an orphaned directory.
-- ``read_merged`` = the pointer-resolving reader (falls back to a
-  plain parquet read for unbucketed directories).
+- ``read_merged`` = the pointer-resolving reader.
 - ``backfill_partitions`` = dynamic partition overwrite — only the
   partitions present in the incoming frame are replaced, everything
   else untouched: exactly ``replaceWhere`` for the written keys.
@@ -56,15 +55,17 @@ the arbiter. GC distinguishes logged directories (safe to remove
 immediately — the arbiter's log only gains a name inside a commit, so
 a logged directory's writer is finished or dead) from never-logged
 ones, which might be a concurrent writer's merge awaiting publish and
-are only reclaimed past ``ORPHAN_GRACE_SECONDS``. The legacy unbucketed fallback remains
-single-writer (documented at the call site).
+are only reclaimed past ``ORPHAN_GRACE_SECONDS``.
 
 Scale notes: the MERGE shuffle is one hash partition by key (the
 window dedupe) over the AFFECTED buckets only; ``n_buckets`` should
 scale with table size (buckets ≈ table_bytes / target_rewrite_bytes)
 so a daily merge touching k keys rewrites ~k/n_buckets of the table.
-A legacy unbucketed target (plain parquet dir, no ``_CURRENT``) takes
-the old full-rewrite + directory-swap path, kept as a fallback.
+
+The versioned layout is the only one this module merges into or reads
+as a table. A plain parquet directory (no ``_CURRENT``) is read with
+``sinks.read_lake`` and rewritten with ``backfill_partitions``; a
+merge into one, and ``read_merged`` on one, raise ``ValueError``.
 """
 
 from __future__ import annotations
@@ -171,40 +172,27 @@ def _current_version(target_path: str) -> str | None:
 
 def _version_history(target_path: str) -> list[str]:
     """Ordered publish history (oldest first) from the ``_VERSIONS``
-    log. A pre-log (legacy) table reconstructs a best-effort history
-    from the directory listing — under the old 1-deep retention at
-    most one non-current dir exists, so the order is unambiguous."""
+    log; empty before the first commit. ``_project_state`` writes the
+    log before the pointer, so every table with a ``_CURRENT`` has
+    one."""
     try:
         with open(os.path.join(target_path, _LOG)) as f:
             return [line.strip() for line in f if line.strip()]
     except FileNotFoundError:
-        current = _current_version(target_path)
-        if current is None:
-            return []
-        priors = sorted(
-            d
-            for d in os.listdir(target_path)
-            if d.startswith("v-") and d != current
-        )
-        return priors + [current]
+        return []
 
 
 def _published_history(target_path: str, current: str | None) -> list[str]:
-    """The version log truncated at the ``_CURRENT`` pointer. A merge
-    that crashed between the log append and the pointer flip leaves a
+    """The version log truncated at the ``_CURRENT`` pointer, by the
+    same rule as ``CommitState.published``. A merge that crashed
+    between the log append and the pointer flip leaves a
     never-published tail in ``_VERSIONS``; every consumer that reasons
     about "prior versions" (time travel, vacuum, the next publish)
     must ignore that tail — it was never current, so it is not a
-    readable prior, just an orphan directory awaiting GC. With NO
-    pointer at all (the FIRST commit crashed inside that window) the
-    entire log is such a tail: nothing was ever readable, so the
-    published history is empty (mirrors ``CommitState.published``)."""
-    if current is None:
-        return []
-    history = _version_history(target_path)
-    if current in history:
-        history = history[: history.index(current) + 1]
-    return history
+    readable prior, just an orphan directory awaiting GC."""
+    return CommitState(
+        tuple(_version_history(target_path)), current, None
+    ).published()
 
 
 def _write_atomic(target_path: str, name: str, content: str) -> None:
@@ -263,10 +251,11 @@ def read_merged(spark: SparkSession, target_path: str) -> DataFrame:
     """Resolve the ``_CURRENT`` pointer and read the live version.
     Readers never observe a mid-merge state: the pointer flips
     atomically (``os.replace``) from one complete version directory to
-    another. Unbucketed legacy directories read as plain parquet."""
+    another. A directory with no pointer is not a versioned table and
+    raises; plain parquet directories are read with ``sinks.read_lake``."""
     version = _current_version(target_path)
     if version is None:
-        return spark.read.parquet(target_path)
+        raise ValueError(f"{target_path} is not a versioned (bucketed) table")
     return _read_version_dir(spark, os.path.join(target_path, version))
 
 
@@ -447,6 +436,27 @@ def _publish(
     _remove_versions(target_path, doomed)
 
 
+def _check_mergeable(target_path: str) -> None:
+    """Refuse a merge into a directory with no ``_CURRENT`` that holds
+    anything this layout did not write. Checked before anything is
+    written, the arbiter database included. The layout's own names
+    pass: ``v-*`` (a first merge that died before publishing leaves
+    one for the age-gated orphan GC), ``_*`` (the arbiter files,
+    ``_BUCKETS``, ``_VERSIONS``) and ``.*`` (temporary files)."""
+    if not os.path.isdir(target_path):
+        return
+    foreign = sorted(
+        d for d in os.listdir(target_path) if not d.startswith(("v-", "_", "."))
+    )
+    if foreign:
+        raise ValueError(
+            f"{target_path} is not a versioned (bucketed) table: it holds "
+            f"{foreign[0]!r} and no {_PTR}. Plain parquet directories are "
+            "read with sinks.read_lake and written with backfill_partitions, "
+            "never merged into."
+        )
+
+
 def _apply_bucketed(
     spark: SparkSession,
     target_path: str,
@@ -497,58 +507,19 @@ def _apply_bucketed_once(
             return deduped
         return deduped.where(~F.col(delete_col)).drop(delete_col)
 
-    from ad_data_lake_spark.http_store import HTTP_COMMIT_MARKER
-    from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB
-
-    def lake_owned(d: str) -> bool:
-        # commit metadata (a pre-planted sqlite or http arbiter marker
-        # and their sidecars) is NOT legacy data — a fresh versioned
-        # table whose arbiter was planted before its first merge must
-        # take the versioned path below, not this fallback. Neither is
-        # what a first merge that died before publishing leaves: its
-        # never-published v-* directory (the age-gated orphan GC
-        # reclaims it) and the _BUCKETS/_VERSIONS files of a commit
-        # that died before its pointer flip.
-        return (
-            d.startswith((TABLE_COMMIT_DB, HTTP_COMMIT_MARKER))
-            or d in (_NB, _LOG)
-            or (d.startswith("v-") and os.path.isdir(os.path.join(target_path, d)))
-        )
-
     prev_version = _current_version(target_path)
-    has_foreign_content = prev_version is None and os.path.isdir(target_path) and any(
-        not lake_owned(d) for d in os.listdir(target_path)
-    )
-    if has_foreign_content:
-        # legacy unbucketed parquet directory: full-rewrite fallback.
-        # SINGLE-WRITER ONLY — the directory swap below has no CAS;
-        # concurrent writers are supported only on the versioned layout
-        current = spark.read.option("mergeSchema", "true").parquet(target_path)
-        if delete_col is not None:
-            current = current.withColumn(delete_col, F.lit(False))
-        deduped = finalize(
-            last_wins_dedupe(
-                current.unionByName(batch, allowMissingColumns=True),
-                key,
-                order_col,
-                tiebreak,
+    if prev_version is None:
+        _check_mergeable(target_path)
+        if n_buckets is None:
+            n_buckets = buckets_for_bytes(_estimated_plan_bytes(batch))
+    else:
+        # layout-bound: the stored count always wins
+        n_buckets = _stored_buckets(target_path)
+        if n_buckets is None:
+            raise ValueError(
+                f"{os.path.join(target_path, _NB)} is missing: cannot "
+                "resolve the bucket count"
             )
-        )
-        staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-        deduped.write.mode("overwrite").parquet(staging)
-        old = f"{target_path}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(staging, target_path)
-        shutil.rmtree(old)
-        return
-
-    stored = _stored_buckets(target_path)
-    if prev_version is not None:
-        # layout-bound: a pre-knob table stored nothing and was always
-        # written with the fixture default
-        n_buckets = stored if stored is not None else N_MERGE_BUCKETS
-    elif n_buckets is None:
-        n_buckets = buckets_for_bytes(_estimated_plan_bytes(batch))
 
     batch_b = batch.withColumn(_BUCKET, _bucket_expr(key, n_buckets))
     new_version = f"v-{uuid.uuid4().hex[:8]}"

@@ -888,11 +888,10 @@ def _topk_lsh_multitable(
 # cogrouped per-bucket BLAS wins (pair-row shuffle grows ~quadratically
 # in bucket occupancy while the cogroup moves each vector once).
 # Crossover measured r15 on ×10/×30-replicated sf0.1 embeddings (see
-# OPTIMIZATION_r15.md); env-tunable for clusters whose Python-worker
-# fan-out cost differs.
-LSH_COGROUP_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LSH_COGROUP_MIN_BYTES", str(8 * 1024 * 1024))
-)
+# OPTIMIZATION_r15.md). The size comes from ``_source_bytes``, which
+# only stats local-filesystem files: on an object store (s3://,
+# hdfs://) the size is unknown and the cogroup path always runs.
+LSH_COGROUP_MIN_BYTES = 8 * 1024 * 1024
 
 
 def _source_bytes(df: DataFrame) -> int | None:

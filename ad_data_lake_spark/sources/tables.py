@@ -11,8 +11,10 @@ The reference's equivalent surface is its paged-GET scans
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -91,20 +93,36 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     executor. Because the converter reads the conf when it is built,
     the caller must set ``nanosAsLong`` and ``inferTimestampNTZ``
     first."""
-    jvm = spark.sparkContext._jvm
+    j = _footer_classes(spark.sparkContext._gateway)
     state = spark._jsparkSession.sessionState()
     conf = state.newHadoopConf()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    jpath = j.Path(path)
     status = jpath.getFileSystem(conf).getFileStatus(jpath)
     if status.isDirectory():
         return None
-    meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, jpath)
-    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
-    jschema = parquet.ParquetFileFormat.readSchemaFromFooter(
-        jvm.org.apache.parquet.hadoop.Footer(jpath, meta),
-        parquet.ParquetToSparkSchemaConverter(state.conf()),
+    meta = j.ParquetFileReader.readFooter(conf, jpath)
+    jschema = j.ParquetFileFormat.readSchemaFromFooter(
+        j.Footer(jpath, meta), j.ParquetToSparkSchemaConverter(state.conf())
     )
     return StructType.fromJson(json.loads(jschema.json()))
+
+
+@functools.lru_cache(maxsize=1)
+def _footer_classes(gateway) -> SimpleNamespace:
+    """The JVM classes :func:`_footer_schema` calls, resolved once per
+    py4j gateway: py4j resolves a dotted name with one gateway round
+    trip per segment, which cost more than the footer read itself.
+    Keyed on the gateway, so a session on a new gateway resolves them
+    again."""
+    jvm = gateway.jvm
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    return SimpleNamespace(
+        Path=jvm.org.apache.hadoop.fs.Path,
+        ParquetFileReader=jvm.org.apache.parquet.hadoop.ParquetFileReader,
+        Footer=jvm.org.apache.parquet.hadoop.Footer,
+        ParquetFileFormat=parquet.ParquetFileFormat,
+        ParquetToSparkSchemaConverter=parquet.ParquetToSparkSchemaConverter,
+    )
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:

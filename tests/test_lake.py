@@ -219,21 +219,65 @@ def test_merge_readers_never_see_partial_state(spark, events, tmp_path):
     assert incremental.read_merged(spark, path).count() == n
 
 
-def test_merge_legacy_unbucketed_fallback(spark, events, tmp_path):
-    """A pre-existing plain parquet directory (no _CURRENT pointer)
-    still merges via the full-rewrite swap path."""
-    path = str(tmp_path / "legacy_target")
+def _dir_snapshot(path):
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def test_merge_into_plain_directory_is_rejected(spark, events, tmp_path):
+    """The versioned layout is the only one a merge writes. A plain
+    parquet directory (no _CURRENT) is refused by merge_upsert,
+    cdc_apply and SQL MERGE INTO before anything is written: its files
+    and bytes stay as they were and no pointer or arbiter database
+    appears. read_merged refuses it too. A versioned table that lost
+    its _BUCKETS file refuses a merge and names the file, instead of
+    guessing a bucket count."""
+    from ad_data_lake_spark.sql import execute
+    from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB
+
+    path = str(tmp_path / "plain_target")
     base = events.select("event_id", "ts", "user_id", "event_type", "value")
-    base.write.parquet(path)  # unbucketed, written outside merge_upsert
+    base.write.parquet(path)
+    before = _dir_snapshot(path)
     updates = (
         base.orderBy("event_id").limit(10)
         .withColumn("ts", F.col("ts") + F.expr("INTERVAL 5 DAYS"))
         .withColumn("value", F.lit(111.0))
     )
-    incremental.merge_upsert(spark, path, updates, "event_id", "ts", "value")
-    got = incremental.read_merged(spark, path)
-    assert got.count() == base.count()
-    assert got.where(F.col("value") == 111.0).count() == 10
+    updates.createOrReplaceTempView("plain_target_updates")
+    attempts = [
+        lambda: incremental.merge_upsert(
+            spark, path, updates, "event_id", "ts", "value"
+        ),
+        lambda: incremental.cdc_apply(
+            spark, path, updates.withColumn("_deleted", F.lit(False)),
+            "event_id", "ts", "value",
+        ),
+        lambda: execute(
+            spark,
+            f"MERGE INTO '{path}' USING (SELECT * FROM plain_target_updates) "
+            "ON event_id PRECEDENCE (ts, value)",
+        ),
+    ]
+    for attempt in attempts:
+        with pytest.raises(ValueError, match="sinks.read_lake"):
+            attempt()
+        assert _dir_snapshot(path) == before
+        assert not os.path.exists(os.path.join(path, incremental._PTR))
+        assert not os.path.exists(os.path.join(path, TABLE_COMMIT_DB))
+    with pytest.raises(ValueError, match="not a versioned"):
+        incremental.read_merged(spark, path)
+
+    table = str(tmp_path / "lost_buckets_t")
+    incremental.merge_upsert(spark, table, base, "event_id", "ts", "value")
+    os.remove(os.path.join(table, incremental._NB))
+    with pytest.raises(ValueError, match=incremental._NB):
+        incremental.merge_upsert(spark, table, updates, "event_id", "ts", "value")
 
 
 def test_backfill_replaces_only_target_partition(spark, events, tmp_path):
@@ -1374,7 +1418,7 @@ def test_transform_with_state_env_gate(spark, events, tmp_path):
     pytest.importorskip(
         "google.protobuf",
         reason="transformWithStateInPandas driver worker needs protobuf "
-        "(absent in this container; documented in scripts/ab_freqcap.py)",
+        "(absent in this container; documented in REPORT.md)",
     )
     from ad_data_lake_spark.operators.sessions import frequency_cap
     from ad_data_lake_spark.streaming.stateful import streaming_frequency_cap_tws
