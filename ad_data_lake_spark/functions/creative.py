@@ -29,16 +29,6 @@ def coalesce_spec_field(spec: Column, field: str) -> Column:
     return F.coalesce(*candidates)
 
 
-def extract_call_to_action_link(spec: Column) -> Column:
-    """F15 CTA fallback: call_to_action.value.link, else .link_url
-    (reference pages/1_Campaign_Cloner.py:300-320)."""
-    cta = lambda b, f: spec.getField(b).getField("call_to_action").getField("value").getField(f)  # noqa: E731
-    candidates = []
-    for branch in SPEC_BRANCHES:
-        candidates.extend([cta(branch, "link"), cta(branch, "link_url")])
-    return F.coalesce(*candidates)
-
-
 def gather_retailer_item_ids(spec: Column) -> Column:
     """F18: union ``retailer_item_ids`` arrays from the spec root and its
     sections, trim entries, ordered-dedupe preserving first occurrence

@@ -24,7 +24,8 @@ holding the same data at scale lives or dies by them:
   small files (every micro-batch/backfill day writes its own); scans
   then pay per-file open/footer cost and lose split efficiency.
   Rewrite a table directory into ~target-size files with ``coalesce``
-  (narrow — no shuffle) and swap atomically-enough for a local FS.
+  (narrow — no shuffle) and swap it in by two renames that never leave
+  the data without a complete copy on disk.
 """
 
 from __future__ import annotations
@@ -129,9 +130,29 @@ def compact_table(
     one shuffle, so each output task holds whole partitions and each
     partition directory lands in few files. Returns the new file count.
 
-    Local-FS directory swap; on a real lake this is Delta/Iceberg
-    ``OPTIMIZE`` (rewrite + atomic metadata commit) — same plan shape,
-    transactional swap."""
+    Local-FS directory swap: the compacted copy is written to
+    ``<path>.compacting``, the old directory renamed aside to
+    ``<path>.compacted-old``, the copy renamed into place, and only then
+    is the old directory removed — a crash at any point leaves a
+    complete copy of the rows on disk. When ``path`` is missing but one
+    of those leftovers exists, a crash hit the swap: ValueError, and
+    nothing is touched. On a real lake this is Delta/Iceberg ``OPTIMIZE``
+    (rewrite + atomic metadata commit) — same plan shape, transactional
+    swap."""
+    tmp = path.rstrip("/") + ".compacting"
+    old = path.rstrip("/") + ".compacted-old"
+    if not os.path.isdir(path):
+        leftovers = [d for d in (tmp, old) if os.path.exists(d)]
+        if leftovers:
+            raise ValueError(
+                f"{path} is missing but compaction leftover {leftovers} exists: "
+                "a compaction crashed mid-swap; move the complete copy back "
+                "into place before compacting again"
+            )
+    # with path present, a leftover .compacting is a dead half-write and
+    # a leftover .compacted-old a copy already superseded by path
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -139,8 +160,6 @@ def compact_table(
                 total += os.path.getsize(os.path.join(root, f))
     n_files = max(1, math.ceil(total / target_bytes))
     part_cols = _partition_columns(path)
-    tmp = path.rstrip("/") + ".compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
     df = spark.read.parquet(path)
     if part_cols:
         (
@@ -150,8 +169,9 @@ def compact_table(
         )
     else:
         df.coalesce(n_files).write.parquet(tmp)
-    shutil.rmtree(path)
+    os.rename(path, old)
     os.rename(tmp, path)
+    shutil.rmtree(old)
     return sum(
         1
         for _root, _dirs, files in os.walk(path)

@@ -1,4 +1,4 @@
-"""Vendored BMP codec (decode + encode), pure stdlib — the simplest of
+"""Vendored BMP decoder, pure stdlib — the simplest of
 the reference uploader's accepted formats
 (``/root/reference/pages/2_Creative_Uploader.py:25`` lists ``.bmp``).
 
@@ -67,33 +67,3 @@ def _decode_bmp_strict(data: bytes) -> tuple[int, int, int, bytes]:
                 out[o + 3] = data[s + 3]
             o += channels
     return width, height, channels, bytes(out)
-
-
-def encode_bmp(pixels: bytes, width: int, height: int, channels: int = 3) -> bytes:
-    """Encode packed RGB/RGBA pixels as an uncompressed bottom-up BMP —
-    deterministic bytes, used to build CI fixtures for the decoder."""
-    if channels not in (3, 4):
-        raise ValueError(f"BMP encode needs RGB/RGBA, got {channels} channels")
-    if len(pixels) != width * height * channels:
-        raise ValueError(
-            f"pixel buffer is {len(pixels)} bytes, want {width * height * channels}"
-        )
-    stride = (width * channels + 3) & ~3
-    body = bytearray(stride * height)
-    for row in range(height):
-        src = (height - 1 - row) * width * channels  # bottom-up
-        base = row * stride
-        for x in range(width):
-            s = src + x * channels
-            d = base + x * channels
-            body[d] = pixels[s + 2]
-            body[d + 1] = pixels[s + 1]
-            body[d + 2] = pixels[s]
-            if channels == 4:
-                body[d + 3] = pixels[s + 3]
-    pix_off = 54
-    header = b"BM" + struct.pack("<IHHI", pix_off + len(body), 0, 0, pix_off)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, channels * 8, 0, len(body), 2835, 2835, 0, 0
-    )
-    return header + info + bytes(body)

@@ -26,8 +26,6 @@ NEAR_OFFSET = 2_000_000
 NORM_OFFSET = 3_000_000
 NEAR_SUFFIX = " extra appended tail"
 
-_COLS = ("doc_id", "text", "lang", "source")
-
 
 def dup_corpus(documents: DataFrame) -> DataFrame:
     """Base ∪ exact copies ∪ near copies — input for exact/MinHash/

@@ -31,7 +31,6 @@ from pyspark.sql.window import Window
 from ad_data_lake_spark.llm.text import (
     exploded_shingles,
     quality_columns,
-    word_shingles,
     words,
 )
 from ad_data_lake_spark.sources.tables import spread
@@ -58,28 +57,6 @@ MINHASH_COEFFS: tuple[tuple[int, int], ...] = (
     (1_000_121, 806_142),
     (1_000_133, 319_708),
 )
-
-
-def shingle_base_hashes(col: Column) -> Column:
-    """28-bit integer hash per distinct shingle (md5 prefix) — the
-    one-md5-per-shingle input to the permutation family."""
-    return F.transform(
-        word_shingles(col),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long"),
-    )
-
-
-def shingle_hash_set(col: Column) -> Column:
-    """60-bit hashed shingle set for Jaccard verification — long
-    equality beats string equality in the pair join, and the arrays
-    shuffle at 8 bytes/element instead of ~20-char strings. Hash
-    collisions are ~n²/2^61 and identical across engines."""
-    return F.array_distinct(
-        F.transform(
-            word_shingles(col),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-        )
-    )
 
 
 def content_hash(col: Column) -> Column:
@@ -115,29 +92,6 @@ def dedup_normalized(corpus: DataFrame) -> DataFrame:
         .groupBy("norm_hash")
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies"))
     )
-
-
-def _perm_mins(hs: Column) -> Column:
-    """Signature array from an already-materialized base-hash array:
-    min over each (a·h + b) mod P permutation."""
-
-    def perm_min(a: int, b: int) -> Column:
-        return F.array_min(F.transform(hs, lambda h: (h * a + b) % MINHASH_P))
-
-    return F.array(*[perm_min(a, b) for a, b in MINHASH_COEFFS])
-
-
-def minhash_signature(col: Column) -> Column:
-    """MinHash signature: min over the permuted base hashes, one entry
-    per (a, b) coefficient pair. Pure per-row array math — no shuffle.
-
-    NOTE: as a single Column expression this re-evaluates the shingle
-    pipeline once per coefficient (lambda bodies are not CSE'd across
-    higher-order functions). Plan-level callers should materialize
-    ``shingle_base_hashes`` in its own projection first and apply
-    ``_perm_mins`` to the materialized column — see ``minhash_bands``,
-    which is ~40× faster than inlining this whole expression."""
-    return _perm_mins(shingle_base_hashes(col))
 
 
 def band_keys(sig: Column, n_bands: int = N_BANDS, rows: int = ROWS_PER_BAND) -> Column:
@@ -337,10 +291,7 @@ def minhash_prepped(corpus: DataFrame, hash_family: str = "md5") -> DataFrame:
     xxhash64 family (production): Spark's codegen'd hash is not
     reproducible in Python, so the original one-aggregate JVM form
     runs — codegen'd min() + collect_set with map-side partials, one
-    shuffle on doc_id. (A two-tier variant — narrow sig aggregate +
-    candidate-filtered jset pass — is available from
-    ``minhash_sigs``/``candidate_jsets`` for corpora whose shingle
-    sets dominate shuffle bytes.)"""
+    shuffle on doc_id."""
     if hash_family == "md5":
         return spread(corpus.select("doc_id", "text")).mapInPandas(
             _prepped_partials, _PREPPED_SCHEMA
@@ -362,51 +313,12 @@ def minhash_prepped(corpus: DataFrame, hash_family: str = "md5") -> DataFrame:
     )
 
 
-def candidate_jsets(
-    corpus: DataFrame, cand_docs: DataFrame, hash_family: str = "md5"
-) -> DataFrame:
-    """(doc_id, jset) for CANDIDATE documents only: the exploded hash
-    stream is semi-join-filtered to candidate ids before the
-    collect_set, so the heavy object aggregate (and its shuffle of
-    whole shingle sets) touches only documents that actually collided
-    in some band — volume scales with the true duplicate rate, not the
-    corpus. (The former design collect_set'ed EVERY document's shingle
-    set through the signature shuffle: the widest stage in the whole
-    pipeline, paid even when nothing collides.) The semi join is left
-    to AQE: a small candidate set broadcasts (map-side filter), a huge
-    one falls back to a shuffle that is still bounded by dup volume
-    downstream."""
-    ex = _exploded_shingle_hashes(corpus, hash_family)
-    filtered = ex.join(cand_docs, "doc_id", "left_semi")
-    return filtered.groupBy("doc_id").agg(F.collect_set("h60").alias("jset"))
-
-
 def minhash_bands(corpus: DataFrame, hash_family: str = "md5") -> DataFrame:
     """(doc_id, band_id, band_key) — the LSH bucket table, derived from
     the codegen'd ``minhash_sigs`` aggregate (signatures only: the
     index never needs shingle sets)."""
     return minhash_sigs(corpus, hash_family).select(
         "doc_id", F.posexplode(band_keys(F.col("sig"))).alias("band_id", "band_key")
-    )
-
-
-def minhash_candidate_pairs(corpus: DataFrame, hash_family: str = "md5") -> DataFrame:
-    """Candidate near-dup pairs: self-join of the bucket table on
-    (band_id, band_key) with doc_a < doc_b, distinct. This is the
-    bucketed step that replaces the disqualifying all-pairs join — the
-    shuffle key is the band hash, and only same-bucket rows pair up."""
-    bands = minhash_bands(corpus, hash_family)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
     )
 
 
@@ -429,11 +341,9 @@ def minhash_neardup_pairs(
     already wrote — so the corpus pass runs once at any scale. LAZY
     (eager=False): plan build stays job-free, which the lazy-SQL-view
     registration contract requires; the first consumer's action
-    materializes it. (A two-tier variant — narrow sig aggregate +
-    candidate-filtered jset pass — is available from
-    ``minhash_sigs``/``candidate_jsets`` for corpora whose shingle
-    sets dominate shuffle bytes; it measured slower here because it
-    adds two corpus stages.)"""
+    materializes it. (A two-tier form — narrow sig aggregate, then a
+    jset pass over candidate documents only — measured slower here:
+    it adds two corpus stages.)"""
     corpus = spread(corpus)  # shingle explode is compute-bound; fan out the 1-split fixture scan
     prepped = minhash_prepped(corpus, hash_family).localCheckpoint(eager=False)
     bands = prepped.select(
@@ -725,8 +635,8 @@ def ngram_jaccard_pairs(corpus: DataFrame, mod: int = 50) -> DataFrame:
     """Exact n-gram Jaccard over an explicit (bounded) candidate set —
     the verification primitive on its own, for callers that bring their
     own candidate generator. Here candidates are id-bucketed (doc_id %
-    mod) so the join stays bounded; production candidates come from
-    ``minhash_candidate_pairs``.
+    mod) so the join stays bounded; production candidates come from the
+    banded LSH join in ``minhash_neardup_pairs``.
 
     Set algebra as codegen'd joins instead of per-pair array ops:
     |A∩B| = count of equal-hash matches in an exploded hash join,
@@ -793,14 +703,6 @@ def ngram_jaccard_pairs(corpus: DataFrame, mod: int = 50) -> DataFrame:
         "doc_b",
         F.round(F.col("n_inter") / (F.col("n_sum") - F.col("n_inter")), 4).alias("jaccard"),
     )
-
-
-# Packed-count layout for the simhash majority vote: each bigint
-# accumulator carries SIMHASH_PACK counts in SIMHASH_FIELD_BITS-bit
-# fields, so a field saturates only past 2^20-1 (~1M) tokens in one
-# document — far beyond any sanely-chunked input (chunk first: L25).
-SIMHASH_FIELD_BITS = 20
-SIMHASH_PACK = 3
 
 
 def _simhash_partials_factory(bits: int):
@@ -873,41 +775,44 @@ def _simhash_jvm(corpus: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     equivalence reference for the Arrow kernel's pin test. The vote is
     PACKED: the per-bit ±1 sum is equivalent to comparing 2×(count of
     tokens with bit b set) against the token count, and bit-counts are
-    non-negative, so ``SIMHASH_PACK`` of them ride in disjoint 20-bit
-    fields of ONE bigint sum; integer sums are order-independent, so
-    the fingerprint is exactly the per-row array formulation's
-    value."""
+    non-negative, so three of them ride in disjoint 20-bit fields of
+    ONE bigint sum; integer sums are order-independent, so the
+    fingerprint is exactly the per-row array formulation's value."""
     from ad_data_lake_spark.sources.tables import spread
+
+    # a 20-bit field saturates only past 2^20-1 (~1M) tokens in one
+    # document — far beyond any sanely-chunked input (chunk first: L25)
+    field_bits, pack = 20, 3
 
     toks = spread(corpus).select(
         "doc_id", F.explode(words(F.col("text"))).alias("tok")
     )
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("long")
     hashed = toks.select("doc_id", h.alias("h"))
-    n_longs = -(-bits // SIMHASH_PACK)
+    n_longs = -(-bits // pack)
     aggs = [F.count("*").alias("_n")]
     for g in range(n_longs):
         packed = None
-        for i in range(SIMHASH_PACK):
-            b = g * SIMHASH_PACK + i
+        for i in range(pack):
+            b = g * pack + i
             if b >= bits:
                 break
             term = F.when(
                 F.col("h").bitwiseAND(F.lit(1 << b)) != 0,
-                F.lit(1 << (SIMHASH_FIELD_BITS * i)),
+                F.lit(1 << (field_bits * i)),
             ).otherwise(F.lit(0))
             packed = term if packed is None else packed + term
         aggs.append(F.sum(packed).alias(f"_p{g}"))
     grouped = hashed.groupBy("doc_id").agg(*aggs)
-    mask = (1 << SIMHASH_FIELD_BITS) - 1
+    mask = (1 << field_bits) - 1
     fingerprint = None
     for g in range(n_longs):
-        for i in range(SIMHASH_PACK):
-            b = g * SIMHASH_PACK + i
+        for i in range(pack):
+            b = g * pack + i
             if b >= bits:
                 break
             cnt = F.shiftrightunsigned(
-                F.col(f"_p{g}"), SIMHASH_FIELD_BITS * i
+                F.col(f"_p{g}"), field_bits * i
             ).bitwiseAND(F.lit(mask))
             # vote_b = 2*cnt - n; >= 0 keeps the original tie rule
             term = F.when(2 * cnt >= F.col("_n"), F.lit(1 << b)).otherwise(F.lit(0))

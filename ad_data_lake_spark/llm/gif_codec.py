@@ -1,5 +1,4 @@
-"""Vendored GIF codec (first-frame decode + minimal encode), pure
-stdlib — the reference uploader accepts ``.gif``
+"""Vendored GIF decoder (first frame), pure stdlib — the reference uploader accepts ``.gif``
 (``/root/reference/pages/2_Creative_Uploader.py:25``).
 
 Scope: GIF87a/89a, global or local color table, non-interlaced,
@@ -9,14 +8,8 @@ needs). The LZW decoder is the spec's variable-code-width variant
 (clear/EOI codes, 12-bit cap). Interlaced frames raise ValueError —
 the Adam7-style out-of-scope line the PNG codec draws — as does
 anything malformed; the multimodal tier then falls back to its
-deterministic stand-in (drift never kills an Arrow batch).
-
-The encoder emits a valid LZW stream WITHOUT building a dictionary
-(each pixel as a literal root code, with a CLEAR whenever the table
-would otherwise grow a code width) — the classic "uncompressed GIF"
-trick: larger files, trivially correct, byte-deterministic, and every
-compliant decoder (this one, Pillow, browsers) accepts it. Good for
-CI fixtures; a production thumbnailer would use Pillow anyway.
+deterministic stand-in (drift never kills an Arrow batch). The
+fixture encoder lives in ``tests/media_fixtures.py``.
 """
 
 from __future__ import annotations
@@ -154,68 +147,3 @@ def _decode_gif_strict(data: bytes) -> tuple[int, int, int, bytes]:
             out[3 * i : 3 * i + 3] = table[ci]
         return w, h, 3, bytes(out)
     raise ValueError("GIF has no image frame")
-
-
-# --------------------------------------------------------------------------
-# Encode (uncompressed-style LZW, 256-color fixed palette)
-# --------------------------------------------------------------------------
-
-
-def encode_gif_gray(pixels: bytes, width: int, height: int, channels: int = 3) -> bytes:
-    """Encode RGB/RGBA pixels as a GIF using a 256-entry grayscale
-    palette (each pixel maps to its luma) — a deterministic CI-fixture
-    encoder, not a general quantizer. Luma = the JPEG integer formula
-    rounded down, so the decode side is exactly recoverable for inputs
-    that are already gray (r == g == b)."""
-    if channels not in (3, 4):
-        raise ValueError(f"GIF encode needs RGB/RGBA, got {channels} channels")
-    if len(pixels) != width * height * channels:
-        raise ValueError(
-            f"pixel buffer is {len(pixels)} bytes, want {width * height * channels}"
-        )
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out += bytes([0x80 | 0x07, 0, 0])  # GCT present, 256 entries
-    for i in range(256):
-        out += bytes([i, i, i])
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, width, height) + b"\x00"
-
-    min_code = 8
-    clear = 1 << min_code  # 256
-    eoi = clear + 1
-    width_bits = min_code + 1  # 9, held fixed by clearing early
-
-    acc = n_bits = 0
-    stream = bytearray()
-
-    def put(code: int) -> None:
-        nonlocal acc, n_bits
-        acc |= code << n_bits
-        n_bits += width_bits
-        while n_bits >= 8:
-            stream.append(acc & 0xFF)
-            acc >>= 8
-            n_bits -= 8
-
-    put(clear)
-    count = 0
-    for i in range(width * height):
-        p = pixels[i * channels : i * channels + 3]
-        luma = (299 * p[0] + 587 * p[1] + 114 * p[2]) // 1000
-        put(luma)
-        count += 1
-        # each literal grows the table; clear before it would force a
-        # 10th bit (table reaches 2^9 entries after 510 additions)
-        if count == (1 << width_bits) - clear - 2:
-            put(clear)
-            count = 0
-    put(eoi)
-    if n_bits:
-        stream.append(acc & 0xFF)
-
-    out += bytes([min_code])
-    for i in range(0, len(stream), 255):
-        chunk = stream[i : i + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += b"\x00\x3b"
-    return bytes(out)

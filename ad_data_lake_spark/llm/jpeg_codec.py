@@ -449,6 +449,28 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
         raise ValueError(f"corrupt JPEG: {exc!r}") from exc
 
 
+def encode_jpeg_batch(frames: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """``jpeg_ffi.encode_jpeg_batch``'s contract as a per-frame loop:
+    (n, h, w, 3) uint8 frames -> (concatenated JPEG bytes, int64 sizes
+    per frame)."""
+    _n, h, w, _ch = frames.shape
+    samples = [encode_jpeg(fr.tobytes(), w, h) for fr in frames]
+    return b"".join(samples), np.array([len(s) for s in samples], dtype=np.int64)
+
+
+def decode_jpeg_batch(data: bytes, offsets, sizes, width: int, height: int) -> np.ndarray:
+    """``jpeg_ffi.decode_jpeg_batch``'s contract as a per-frame loop:
+    n byte ranges of ``data``, each exactly width x height, decoded to
+    a uint8 array of shape (n, height, width, 3)."""
+    out = np.empty((len(offsets), height, width, 3), dtype=np.uint8)
+    for i, (off, size) in enumerate(zip(offsets, sizes)):
+        w, h, ch, px = decode_jpeg(data[off : off + size])
+        if (w, h) != (width, height):
+            raise ValueError(f"frame {i} is {w}x{h}, expected {width}x{height}")
+        out[i] = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
+    return out
+
+
 def _decode_jpeg_strict(data: bytes) -> tuple[int, int, int, bytes]:
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")

@@ -173,11 +173,10 @@ def _lib() -> ctypes.CDLL | None:
 
 def available() -> bool:
     """True when the shim compiled and loaded (decided once, cached —
-    safe to call per frame). Callers that must pin the vendored path
-    inside executor workers (the MP4 parity tests) thread an explicit
-    ``use_native`` argument through the codec entry points instead of
-    toggling process state — a module-global pin leaked to concurrent
-    tasks in reused workers (r13 ADVICE)."""
+    safe to call per frame). ``video_frame_stats_mp4(use_native=False)``
+    pins the vendored codec inside executor workers for its parity
+    test; a module-global pin leaked to concurrent tasks in reused
+    workers (r13 ADVICE)."""
     return _lib() is not None
 
 

@@ -406,9 +406,7 @@ def decode_audio_bytes(payload: bytes):
     )
 
 
-def decode_video_frames(
-    payload: bytes, k: int = 3, use_native: bool | None = None
-):
+def decode_video_frames(payload: bytes, k: int = 3):
     """Sample-then-decode for a video payload: k evenly spaced frames
     (``sampled_indices`` — the same plan ``sample_frame_indices``
     declares JVM-side), decoded to RGB. AVI containers decode for REAL
@@ -423,9 +421,9 @@ def decode_video_frames(
     RAW sampling plan, exactly what ``sample_frame_indices`` emits
     JVM-side (when ``n_frames < k`` the plan repeats indices; repeats
     are decoded once but EMITTED per plan entry, so length and ranking
-    always match the JVM twin). ``use_native`` pins the MP4 JPEG
-    codec dispatch (None = by shim availability; the AVI path is
-    always vendored)."""
+    always match the JVM twin). MP4 frames decode through libjpeg when
+    ``jpeg_ffi.available()``, the vendored ``jpeg_codec`` otherwise;
+    the AVI path is always vendored."""
     from ad_data_lake_spark.llm import avi_codec, mp4_meta
 
     if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
@@ -455,9 +453,7 @@ def decode_video_frames(
             raise
         idx = sampled_indices(info["n_samples"], k)
         uniq = sorted(set(idx))
-        meta_t, frames = mp4_meta.decode_mp4_frames(
-            payload, uniq, info=info, use_native=use_native
-        )
+        meta_t, frames = mp4_meta.decode_mp4_frames(payload, uniq, info=info)
         by_idx = dict(zip(uniq, frames))
         return meta_t, idx, [by_idx[i] for i in idx]
     raise NotImplementedError(
@@ -687,7 +683,6 @@ VIDEO_MP4_W = VIDEO_MP4_H = 16  # four 8x8 JPEG blocks per frame
 VIDEO_MP4_N_FRAMES = 6
 MP4_BLOCKS = ((0, 0), (0, 1), (1, 0), (1, 1))  # (block_y, block_x), raster
 _MP4_FRAME_PX = VIDEO_MP4_W * VIDEO_MP4_H * 3
-_MP4_BLOCK_PX = 8 * 8 * 3
 
 
 def mp4_block_wsum_weights() -> list[int]:
@@ -714,16 +709,19 @@ def video_frame_stats_mp4(
     of ``video_frame_stats``: per document, build a 6-frame 16x16 RGB
     video of four SOLID 8x8 blocks per frame (block ``j = 4f + b`` has
     gray value ``(ord(c_{j mod len})*37 + 11j) mod 256``), encode a
-    real ISO-BMFF motion-JPEG container (``mp4_meta.encode_mp4_mjpeg``
-    — one baseline JPEG per sample, spec-complete
-    stsd/stts/stsc/stsz/stco), then run the production
-    sample-then-decode path (``decode_video_frames`` → stbl sample
-    walk → per-sample ``jpeg_codec`` decode) and emit per-sampled-frame
-    pixel stats. Solid 8x8 blocks are the one pixel class baseline
-    JPEG round-trips BIT-EXACTLY at the vendored quality (only the DC
-    coefficient is non-zero; its max quantization error of q/2 = 1.5
-    shifts a pixel by at most 1.5/8 < 0.5, so the rounded output is
-    exact — pinned exhaustively for all 256 values in
+    real ISO-BMFF motion-JPEG container
+    (``mp4_meta.encode_mp4_from_samples_fast`` — one baseline JPEG per
+    sample, spec-complete stsd/stts/stsc/stsz/stco), then run the
+    production stbl sample walk (``mp4_meta.parse_mp4_samples``),
+    decode the ``sampled_indices`` frames and emit per-sampled-frame
+    pixel stats. Frames encode and decode in batches through
+    ``jpeg_ffi`` (libjpeg) when its shim is up on the worker, through
+    the vendored ``jpeg_codec`` otherwise; ``use_native`` pins that
+    choice (None = by shim availability). Solid 8x8 blocks are the one
+    pixel class baseline JPEG round-trips BIT-EXACTLY at the vendored
+    quality (only the DC coefficient is non-zero; its max quantization
+    error of q/2 = 1.5 shifts a pixel by at most 1.5/8 < 0.5, so the
+    rounded output is exact — pinned exhaustively for all 256 values in
     test_av_codecs), which is what lets a SQL oracle recompute the
     decoded values straight from char codes. ``px_wsum``
     (Σ position·value) is order-sensitive at block granularity, so a
@@ -742,7 +740,7 @@ def video_frame_stats_mp4(
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ad_data_lake_spark.llm import jpeg_ffi, mp4_meta
+        from ad_data_lake_spark.llm import jpeg_codec, jpeg_ffi, mp4_meta
 
         q = np.arange(_MP4_FRAME_PX, dtype=np.int64)
         cols = [
@@ -761,9 +759,11 @@ def video_frame_stats_mp4(
         jidx = np.arange(4 * nf, dtype=np.int64)
         # worker-side decision (shim availability is per-host on a
         # heterogeneous cluster); use_native pins it for the parity
-        # tests — a driver-side mock would not survive the pickle into
-        # the executor workers
+        # test — a driver-side mock would not survive the pickle into
+        # the executor workers. Both modules expose the same batch
+        # encode/decode pair: one C call each, or a per-frame loop.
         native = jpeg_ffi.available() if use_native is None else use_native
+        codec = jpeg_ffi if native else jpeg_codec
 
         def frames_for(pdf: pd.DataFrame) -> "np.ndarray":
             """(nd, nf, H, W, 3) uint8 — the whole batch's frames in
@@ -807,111 +807,64 @@ def video_frame_stats_mp4(
                 nd = len(pdf)
                 doc_ids = pdf["doc_id"].to_numpy(np.int64)
                 frames = frames_for(pdf)
-                if native:
-                    # ONE encode call for the batch's nd*nf frames, per-doc
-                    # container assembly via the byte-identical template
-                    # patch, the production stbl parse per container, and
-                    # ONE decode call for all sampled frames — the per-call
-                    # Python/ctypes marshal is what the sf10 measurement
-                    # showed dominating the per-frame form
-                    blob, sizes = jpeg_ffi.encode_jpeg_batch(
-                        frames.reshape(-1, VIDEO_MP4_H, VIDEO_MP4_W, 3)
-                    )
-                    bounds = np.concatenate(
-                        ([0], np.cumsum(sizes))
-                    ).astype(np.int64)
-                    concat = bytearray()
-                    offs_all = np.empty(nd * len(uniq), dtype=np.int64)
-                    sz_all = np.empty(nd * len(uniq), dtype=np.int64)
-                    k = 0
-                    for d in range(nd):
-                        doc_samples = [
-                            blob[bounds[nf * d + i] : bounds[nf * d + i + 1]]
-                            for i in range(nf)
-                        ]
-                        payload = mp4_meta.encode_mp4_from_samples_fast(
-                            doc_samples, VIDEO_MP4_W, VIDEO_MP4_H, 10
-                        )
-                        info = mp4_meta.parse_mp4_samples(payload)
-                        for i in uniq:
-                            off, size = info["offsets"][i], info["sizes"][i]
-                            offs_all[k] = len(concat)
-                            sz_all[k] = size
-                            concat += payload[off : off + size]
-                            k += 1
-                    dec = jpeg_ffi.decode_jpeg_batch(
-                        bytes(concat), offs_all, sz_all, VIDEO_MP4_W, VIDEO_MP4_H
-                    )
-                    flat = dec.reshape(nd, len(uniq), -1).astype(np.int64)
-                    # plan order incl. repeats; with nf constant and
-                    # nf >= K the plan is distinct-sorted so pos is the
-                    # identity — skip the gather (np.ndarray advanced
-                    # indexing on the middle axis measured ~9 s per 115 MB
-                    # on this numpy; np.take is the fast general form)
-                    sel = (
-                        flat
-                        if pos == list(range(len(uniq)))
-                        else np.take(flat, pos, axis=1)
-                    )
-                    px_sum = sel.sum(axis=2)
-                    wsum = sel.reshape(-1, q.size) @ q  # 2-D matmul: BLAS-shaped
-                    px_sum = px_sum.reshape(-1)
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.repeat(doc_ids, K),
-                            "n_frames": np.int64(nf),
-                            "frame_rank": np.tile(
-                                np.arange(1, K + 1, dtype=np.int64), nd
-                            ),
-                            "frame_idx": np.tile(
-                                np.asarray(plan, dtype=np.int64), nd
-                            ),
-                            "px_sum": px_sum.reshape(-1),
-                            "px_wsum": wsum.reshape(-1),
-                            "mean_px": np.round(
-                                px_sum.reshape(-1) / float(_MP4_FRAME_PX), 6
-                            ),
-                        }
-                    )
-                    continue
-                # vendored fallback (no shim on this host): per-doc encode
-                # through the production encode_mp4_mjpeg/decode_video_frames
-                # pair — same values, pinned equal to the batched path in
-                # tests/test_llm_pipeline.py. When use_native is an
-                # EXPLICIT False (the parity tests), pin the codec
-                # dispatch inside those functions to the vendored
-                # implementations via their use_native argument —
-                # otherwise, on a shim-capable host, this branch would
-                # still encode/decode natively and the "vendored path"
-                # the test claims to cover would never actually run
-                # (r13 review; the r13 module-global toggle leaked to
-                # concurrent tasks in reused workers — r13 ADVICE).
-                pin = False if use_native is False else None
-                rows = []
+                # ONE encode call for the batch's nd*nf frames, per-doc
+                # container assembly via the byte-identical template
+                # patch, the production stbl parse per container, and
+                # ONE decode call for all sampled frames — the per-call
+                # Python/ctypes marshal is what the sf10 measurement
+                # showed dominating the per-frame form
+                blob, sizes = codec.encode_jpeg_batch(
+                    frames.reshape(-1, VIDEO_MP4_H, VIDEO_MP4_W, 3)
+                )
+                bounds = np.concatenate(([0], np.cumsum(sizes))).astype(np.int64)
+                concat = bytearray()
+                offs_all = np.empty(nd * len(uniq), dtype=np.int64)
+                sz_all = np.empty(nd * len(uniq), dtype=np.int64)
+                k = 0
                 for d in range(nd):
-                    payload = mp4_meta.encode_mp4_mjpeg(
-                        list(frames[d]), fps=10, use_native=pin
+                    doc_samples = [
+                        blob[bounds[nf * d + i] : bounds[nf * d + i + 1]]
+                        for i in range(nf)
+                    ]
+                    payload = mp4_meta.encode_mp4_from_samples_fast(
+                        doc_samples, VIDEO_MP4_W, VIDEO_MP4_H, 10
                     )
-                    meta, idx, decoded = decode_video_frames(
-                        payload, K, use_native=pin
-                    )
-                    for rank, (fi, fr) in enumerate(
-                        zip(idx, decoded), start=1
-                    ):
-                        fl = fr.reshape(-1).astype(np.int64)
-                        px = int(fl.sum())
-                        rows.append(
-                            (
-                                int(doc_ids[d]),
-                                meta[2],
-                                rank,
-                                fi,
-                                px,
-                                int(np.sum(q * fl)),
-                                round(px / float(_MP4_FRAME_PX), 6),
-                            )
-                        )
-                yield pd.DataFrame(rows, columns=cols)
+                    info = mp4_meta.parse_mp4_samples(payload)
+                    for i in uniq:
+                        off, size = info["offsets"][i], info["sizes"][i]
+                        offs_all[k] = len(concat)
+                        sz_all[k] = size
+                        concat += payload[off : off + size]
+                        k += 1
+                dec = codec.decode_jpeg_batch(
+                    bytes(concat), offs_all, sz_all, VIDEO_MP4_W, VIDEO_MP4_H
+                )
+                flat = dec.reshape(nd, len(uniq), -1).astype(np.int64)
+                # plan order incl. repeats; with nf constant and
+                # nf >= K the plan is distinct-sorted so pos is the
+                # identity — skip the gather (np.ndarray advanced
+                # indexing on the middle axis measured ~9 s per 115 MB
+                # on this numpy; np.take is the fast general form)
+                sel = (
+                    flat
+                    if pos == list(range(len(uniq)))
+                    else np.take(flat, pos, axis=1)
+                )
+                px_sum = sel.sum(axis=2).reshape(-1)
+                wsum = sel.reshape(-1, q.size) @ q  # 2-D matmul: BLAS-shaped
+                yield pd.DataFrame(
+                    {
+                        "doc_id": np.repeat(doc_ids, K),
+                        "n_frames": np.int64(nf),
+                        "frame_rank": np.tile(
+                            np.arange(1, K + 1, dtype=np.int64), nd
+                        ),
+                        "frame_idx": np.tile(np.asarray(plan, dtype=np.int64), nd),
+                        "px_sum": px_sum,
+                        "px_wsum": wsum.reshape(-1),
+                        "mean_px": np.round(px_sum / float(_MP4_FRAME_PX), 6),
+                    }
+                )
 
     from ad_data_lake_spark.sources.tables import spread
 

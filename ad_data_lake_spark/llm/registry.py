@@ -21,7 +21,7 @@ from ad_data_lake_spark.llm import multimodal as MM
 from ad_data_lake_spark.llm import similarity as SIM
 from ad_data_lake_spark.llm import text as T
 from ad_data_lake_spark.llm import tokenizer as TK
-from ad_data_lake_spark.sources.tables import load_table, spread
+from ad_data_lake_spark.sources.tables import load_table
 
 _WS = r"\s+"
 _WORDS = f"string_split_regex(trim(text), '{_WS}')"
@@ -29,7 +29,8 @@ _SHINGLES = (
     "list_distinct(list_transform(range(1, len(w) - 1), "
     "i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))"
 )
-# hashed-shingle forms mirroring dedup.shingle_base_hashes / _hash_set
+# hashed-shingle forms mirroring the h28/h60 md5 prefixes of
+# dedup._exploded_shingle_hashes
 _BASE_HASHES = "list_transform(shingles, s -> ('0x' || substr(md5(s), 1, 7))::BIGINT)"
 _JSET = (
     "list_distinct(list_transform(shingles, "

@@ -36,10 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ad_data_lake_spark.llm.curation import BENCHMARK_MOD
-from ad_data_lake_spark.llm.dedup import (
-    _exploded_shingle_hashes,  # noqa: F401 - kept for xxhash64 callers/tests
-    doc_distinct_shingle_h60s,
-)
+from ad_data_lake_spark.llm.dedup import doc_distinct_shingle_h60s
 from ad_data_lake_spark.llm.text import words
 
 # Bloom geometry: m bits in 63-bit words (bit index never reaches the

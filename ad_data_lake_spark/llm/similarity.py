@@ -100,16 +100,6 @@ def hyperplanes(
     return planes
 
 
-def _queries(embeddings: DataFrame, pred: Column) -> DataFrame:
-    qv = as_double(F.col("embedding"))
-    return embeddings.where(pred).select(
-        F.col("vec_id").alias("query_id"),
-        qv.alias("qv"),
-        norm(qv).alias("qn"),
-        F.col("label").alias("query_label"),
-    )
-
-
 # DataType instance, not a DDL string: string return types are parsed
 # through the JVM, which would make this module unimportable before a
 # SparkSession exists.
@@ -125,14 +115,6 @@ def cosine6_pd(a: pd.Series, b: pd.Series) -> pd.Series:
         np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
     )
     return pd.Series(np.round(sims, 6))
-
-
-def _sim(qn: Column, cn: Column) -> Column:
-    """Cosine from a fresh dot product and *precomputed* norms — norms
-    are per-vector, so computing them before the pair join does 1/3 of
-    the per-pair array work the naive cosine() would. JVM-side; for
-    large pair volumes use ``cosine6_pd``."""
-    return F.round(dot(F.col("qv"), F.col("cv")) / (qn * cn), 6)
 
 
 def _ranked(pairs: DataFrame, k: int) -> DataFrame:
@@ -350,10 +332,6 @@ def unit_vectors(embeddings: DataFrame) -> DataFrame:
     which absorbs the summation-order noise (see ``_unit_pd``)."""
     v = as_double(F.col("embedding"))
     return embeddings.select("vec_id", _unit_pd(v).alias("u"))
-
-
-def _round6_arr(arr: Column) -> Column:
-    return F.transform(arr, lambda x: F.round(x, 6))
 
 
 Centroids = list[tuple[int, list[float]]]
@@ -756,31 +734,14 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.95) -> Data
     )
 
 
-def _plane_lit(plane: list[float]) -> Column:
-    return F.array(*[F.lit(p) for p in plane])
-
-
-def lsh_bucket(v: Column, planes: list[list[float]]) -> Column:
-    """Sign-of-projection LSH bucket id: bit j = (v · r_j ≥ 0).
-    JVM-side sequential fold — bit-identical to the oracle's list dot;
-    per-vector cost only, so interpreted evaluation is acceptable for
-    small vector tables. ``lsh_bucket_pd`` is the vectorized form."""
-    bucket = None
-    for j, plane in enumerate(planes):
-        term = F.when(F.round(dot(v, _plane_lit(plane)), 6) >= 0, F.lit(1 << j)).otherwise(
-            F.lit(0)
-        )
-        bucket = term if bucket is None else bucket + term
-    return bucket.cast("int")
-
-
 def lsh_bucket_udf(planes: list[list[float]]):
-    """Arrow-vectorized bucket assignment: one matmul against the
-    plane matrix per batch. Projections are rounded to 6 dp before the
-    sign test — same contract as ``lsh_bucket`` — so the ~1e-15
-    blas-vs-sequential noise cannot flip a bit unless a projection sits
-    within 1e-15 of a 0.5e-6 rounding boundary (measure-zero for
-    real-valued embeddings)."""
+    """Sign-of-projection LSH bucket id (bit j = (v · r_j ≥ 0)), one
+    Arrow-vectorized matmul against the plane matrix per batch.
+    Projections are rounded to 6 dp before the sign test, like the
+    oracle's sequential list dot, so the ~1e-15 blas-vs-sequential
+    noise cannot flip a bit unless a projection sits within 1e-15 of a
+    0.5e-6 rounding boundary (measure-zero for real-valued
+    embeddings)."""
     P = np.array(planes, dtype=np.float64).T  # dim × n_planes
     weights = 1 << np.arange(P.shape[1], dtype=np.int64)
 

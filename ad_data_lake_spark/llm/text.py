@@ -43,47 +43,22 @@ def words(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles (the unit of MinHash/Jaccard dedup) as
-    a per-row array Column. Documents with fewer than ``n`` words yield
-    an empty array (same contract as ``exploded_shingles`` and the
-    DuckDB oracle's ``range()``, which is empty for a negative span —
-    without the guard ``sequence`` would go descending and ``slice``
-    would raise on start=0).
-
-    NOTE: higher-order functions evaluate interpreted (~0.5 ms/doc for
-    the slice-per-index construction). Plan-level operators should use
-    ``exploded_shingles`` instead — same shingle strings, built in
-    whole-stage codegen."""
-    w = words(col)
-    return F.coalesce(
-        F.when(
-            F.size(w) >= n,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(w) - n),
-                    lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)),
-                )
-            ),
-        ),
-        F.array().cast("array<string>"),
-    )
-
-
 def exploded_shingles(df: DataFrame, id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """(id_col, s): one row per n-word shingle occurrence, built fully
     in whole-stage codegen — explode over the start-index range, then
     stitch each shingle with ``element_at`` on the token array. Emits
-    the exact strings ``word_shingles`` produces, but NOT deduplicated:
-    downstream aggregates (min, collect_set, count over distinct rows)
-    are multiplicity-invariant, which keeps the whole pipeline out of
-    interpreted lambda territory.
+    each shingle as its ``n`` words joined by one space, NOT
+    deduplicated: downstream aggregates (min, collect_set, count over
+    distinct rows) are multiplicity-invariant, which keeps the whole
+    pipeline out of interpreted lambda territory.
 
     Scale: ZERO shuffles — scan → explode → project pipelines inside
     one codegen stage straight into the consumer's partial aggregate
     (an earlier ``lead()``-window formulation paid a full shuffle +
     per-document sort of every token row here). The size guard keeps
-    ``sequence`` from going descending on sub-``n``-token documents."""
+    ``sequence`` from going descending on sub-``n``-token documents,
+    which emit no rows (the DuckDB oracle's ``range()`` is empty for a
+    negative span too)."""
     df = spread(df)  # shingle construction is compute-bound and now shuffle-free
     w = words(F.col("text"))
     idx = df.select(

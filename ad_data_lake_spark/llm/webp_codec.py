@@ -29,10 +29,9 @@ falls back to the deterministic stand-in, the same error contract as the sibling
 or unsupported payload must raise ValueError, never kill an Arrow
 batch.
 
-Encode scope: literal-only VP8L (no transforms, no LZ77, no cache)
-with real per-channel Huffman codes — byte-deterministic, spec-valid
-output used to build CI fixtures for the decoder (round-trips are
-bit-exact because VP8L is lossless).
+The fixture encoder (literal-only VP8L with real per-channel Huffman
+codes) lives in ``tests/media_fixtures.py``; round-trips through it
+are bit-exact because VP8L is lossless.
 """
 
 from __future__ import annotations
@@ -127,29 +126,6 @@ class _BitReader:
             raise ValueError("truncated VP8L bitstream")
         self.pos = p + 1
         return (self.data[byte_i] >> (p & 7)) & 1
-
-
-class _BitWriter:
-    __slots__ = ("out", "cur", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.cur |= (value & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.cur & 0xFF)
-            self.cur >>= 8
-            self.nbits -= 8
-
-    def finish(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.cur & 0xFF)
-            self.cur, self.nbits = 0, 0
-        return bytes(self.out)
 
 
 def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
@@ -662,191 +638,6 @@ def _decode_webp_strict(data: bytes) -> tuple[int, int, int, bytes]:
         # VP8X / ALPH / ICCP / EXIF / ANIM ...: keep scanning for VP8L
         pos += 8 + size + (size & 1)  # chunks pad to even size
     raise ValueError("no VP8L chunk in WebP container")
-
-
-# --- encoder (literal-only VP8L, for CI fixtures) ---------------------------
-
-
-def _huffman_lengths(freqs: list[int], max_len: int) -> list[int]:
-    """Depth-limited Huffman code lengths (≥2 used symbols). When the
-    tree exceeds ``max_len``, frequencies are halved (floor at 1) and
-    the tree rebuilt — the standard flattening trick."""
-    import heapq
-
-    while True:
-        heap = [(f, i, ("leaf", i)) for i, f in enumerate(freqs) if f > 0]
-        heapq.heapify(heap)
-        tick = len(freqs)
-        while len(heap) > 1:
-            fa, _, a = heapq.heappop(heap)
-            fb, _, b = heapq.heappop(heap)
-            heapq.heappush(heap, (fa + fb, tick, ("node", a, b)))
-            tick += 1
-        lengths = [0] * len(freqs)
-
-        def walk(node, depth):
-            if node[0] == "leaf":
-                lengths[node[1]] = max(depth, 1)
-            else:
-                walk(node[1], depth + 1)
-                walk(node[2], depth + 1)
-
-        walk(heap[0][2], 0)
-        if max(lengths) <= max_len:
-            return lengths
-        freqs = [(f + 1) >> 1 if f > 0 else 0 for f in freqs]
-
-
-def _write_symbol(bw: _BitWriter, code: int, length: int) -> None:
-    """Emit a canonical code MSB-first into the LSB-first stream (the
-    decoder descends its tree one bit at a time, MSB of the code
-    first — same convention as DEFLATE)."""
-    rev = 0
-    for _ in range(length):
-        rev = (rev << 1) | (code & 1)
-        code >>= 1
-    bw.write(rev, length)
-
-
-def _write_prefix_code(
-    bw: _BitWriter, freqs: list[int]
-) -> dict[int, tuple[int, int]]:
-    """Transmit a prefix code for ``freqs`` and return symbol ->
-    (code, length) for emitting the payload. Uses a simple code for
-    0/1/2 used symbols, else the code-length-coded normal form with
-    every length emitted literally (valid, if not maximally tight —
-    fixtures are small)."""
-    used = [s for s, f in enumerate(freqs) if f > 0]
-    if len(used) <= 2 and all(s < 256 for s in used):
-        bw.write(1, 1)  # simple
-        if not used:
-            used = [0]
-        bw.write(len(used) - 1, 1)
-        first = used[0]
-        if first >= 2:
-            bw.write(1, 1)
-            bw.write(first, 8)
-        else:
-            bw.write(0, 1)
-            bw.write(first, 1)
-        if len(used) == 1:
-            return {used[0]: (0, 0)}
-        bw.write(used[1], 8)
-        return {used[0]: (0, 1), used[1]: (1, 1)}
-
-    lengths = _huffman_lengths(freqs, 15)
-    # code-length code over the 19-symbol alphabet (lengths 0-15 used
-    # literally; no 16/17/18 repeats — simplicity over density)
-    cl_freqs = [0] * 19
-    for ln in lengths:
-        cl_freqs[ln] += 1
-    if sum(1 for f in cl_freqs if f > 0) == 1:
-        # a lone code-length symbol would need a zero-bit CL tree the
-        # normal form can't express — pad with a second symbol
-        lone = next(i for i, f in enumerate(cl_freqs) if f > 0)
-        other = 0 if lone != 0 else 1
-        cl_lengths = [0] * 19
-        cl_lengths[lone] = cl_lengths[other] = 1
-    else:
-        cl_lengths = _huffman_lengths(cl_freqs, 7)
-    bw.write(0, 1)  # normal (not simple)
-    order_pos = {s: i for i, s in enumerate(_CL_ORDER)}
-    num_cl = max(4, 1 + max(order_pos[s] for s, ln in enumerate(cl_lengths) if ln))
-    bw.write(num_cl - 4, 4)
-    for i in range(num_cl):
-        bw.write(cl_lengths[_CL_ORDER[i]], 3)
-    bw.write(0, 1)  # no max_symbol shortcut
-    cl_codes = _canonical_codes(cl_lengths)
-    for ln in lengths:
-        c, n = cl_codes[ln]
-        _write_symbol(bw, c, n)
-    return {s: cl for s, cl in _canonical_codes(lengths).items()}
-
-
-def _write_literal_plane(bw: _BitWriter, argb: list[int], is_main: bool) -> None:
-    """Write one spatially-coded plane as pure literals: no color
-    cache, no meta-prefix image (main plane only carries that bit), no
-    backward references — per-channel prefix codes over the actual
-    symbol frequencies. Shared by encode_webp and the transform-path
-    test fixtures (which prepend transform records to it)."""
-    bw.write(0, 1)  # no color cache
-    if is_main:
-        bw.write(0, 1)  # no meta-prefix image
-
-    green_freqs = [0] * (_NUM_LIT + _NUM_LENGTH)
-    red_freqs = [0] * _NUM_LIT
-    blue_freqs = [0] * _NUM_LIT
-    alpha_freqs = [0] * _NUM_LIT
-    for px in argb:
-        green_freqs[(px >> 8) & 0xFF] += 1
-        red_freqs[(px >> 16) & 0xFF] += 1
-        blue_freqs[px & 0xFF] += 1
-        alpha_freqs[(px >> 24) & 0xFF] += 1
-
-    g_codes = _write_prefix_code(bw, green_freqs)
-    r_codes = _write_prefix_code(bw, red_freqs)
-    b_codes = _write_prefix_code(bw, blue_freqs)
-    a_codes = _write_prefix_code(bw, alpha_freqs)
-    _write_prefix_code(bw, [1] + [0] * (_NUM_DIST - 1))  # unused distance tree
-
-    for px in argb:
-        for codes, val in (
-            (g_codes, (px >> 8) & 0xFF),
-            (r_codes, (px >> 16) & 0xFF),
-            (b_codes, px & 0xFF),
-            (a_codes, (px >> 24) & 0xFF),
-        ):
-            c, ln = codes[val]
-            if ln:
-                _write_symbol(bw, c, ln)
-
-
-def _wrap_vp8l(vp8l: bytes) -> bytes:
-    chunk = b"VP8L" + struct.pack("<I", len(vp8l)) + vp8l
-    if len(vp8l) & 1:
-        chunk += b"\x00"  # RIFF chunks pad to even length
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
-
-
-def encode_webp(pixels: bytes, width: int, height: int, channels: int = 3) -> bytes:
-    """Encode packed RGB/RGBA pixels as a literal-only lossless WebP —
-    deterministic bytes; decode_webp round-trips it bit-exactly."""
-    if channels not in (3, 4):
-        raise ValueError(f"WebP encode needs RGB/RGBA, got {channels} channels")
-    if len(pixels) != width * height * channels:
-        raise ValueError(
-            f"pixel buffer is {len(pixels)} bytes, want {width * height * channels}"
-        )
-    if not (1 <= width <= 16384 and 1 <= height <= 16384):
-        raise ValueError(f"bad dimensions {width}x{height} (VP8L max 16384)")
-    if width * height > _MAX_PIXELS:
-        # keep encode and decode limits aligned: the decoder bounds
-        # plane allocation at _MAX_PIXELS (same cap as the JPEG codec),
-        # so emitting a larger spec-legal image would produce a file
-        # the sibling decoder refuses — a broken roundtrip contract
-        raise ValueError(
-            f"refusing to encode {width}x{height} (> {_MAX_PIXELS} px, "
-            "the vendored decoder's bound)"
-        )
-
-    argb = []
-    for i in range(width * height):
-        s = i * channels
-        a = pixels[s + 3] if channels == 4 else 255
-        argb.append(
-            (a << 24) | (pixels[s] << 16) | (pixels[s + 1] << 8) | pixels[s + 2]
-        )
-
-    bw = _BitWriter()
-    bw.write(0x2F, 8)
-    bw.write(width - 1, 14)
-    bw.write(height - 1, 14)
-    bw.write(1 if channels == 4 else 0, 1)  # alpha_is_used
-    bw.write(0, 3)  # version
-    bw.write(0, 1)  # no transforms
-    _write_literal_plane(bw, argb, is_main=True)
-    vp8l = bw.finish()
-    return _wrap_vp8l(vp8l)
 
 
 def parse_webp_dims(data: bytes) -> tuple[int, int] | None:

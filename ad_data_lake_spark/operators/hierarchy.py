@@ -10,43 +10,14 @@ the parent — one shuffle on the FK, no driver-side assembly.
 Oracle-parity note: nested array<struct> columns hash differently across
 engines, so the oracle-checked variants serialize the nested payload to
 a canonical JSON string (sorted array, explicit field order, no nulls,
-integral types only). The genuinely-nested variants are used by
-``entry()`` and the pytest suite.
+integral types only). The genuinely-nested ``nested_report`` feeds its
+JSON form and the pytest suite.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def nest_children(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """J1/A9: parent ⟕ collect_list(struct(child)) — ads nested under
-    their ad set. Returns true nested array<struct> rows.
-    """
-    children = lineitem.groupBy("l_orderkey").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("l_linenumber").alias("line"),
-                    F.col("l_partkey").alias("part_id"),
-                    F.col("l_quantity").alias("qty"),
-                )
-            )
-        ).alias("items")
-    )
-    items = F.coalesce(F.col("items"), F.array().cast(children.schema["items"].dataType))
-    return (
-        orders.join(children, orders["o_orderkey"] == children["l_orderkey"], "left")
-        # childless parents get [] / 0, matching the reference's
-        # dict-nesting which always attaches a list
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            items.alias("items"),
-            F.size(items).alias("n_items"),
-        )
-    )
 
 
 def nest_children_json(orders: DataFrame, lineitem: DataFrame) -> DataFrame:

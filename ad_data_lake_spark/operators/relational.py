@@ -59,11 +59,6 @@ def filter_time_range(events: DataFrame, day: str) -> DataFrame:
     )
 
 
-def existence_filter(ads: DataFrame, key: str = "event_id") -> DataFrame:
-    """Drop records lacking an id (reference src/main_extractor.py:102-104,383)."""
-    return ads.where(F.col(key).isNotNull())
-
-
 # ---------------------------------------------------------------------------
 # Joins  (J1-J5, S6, A6, A7)
 # ---------------------------------------------------------------------------

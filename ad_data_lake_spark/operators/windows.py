@@ -54,23 +54,10 @@ def last_wins_events(events: DataFrame) -> DataFrame:
 
 
 def per_user_frequency(events: DataFrame) -> DataFrame:
-    """W2 (default plan): per-user event frequency as a plain aggregate —
-    one shuffle with map-side partial combine. Identical result to the
-    window form below; at 100× scale the window variant sorts every
-    event row inside each user partition and then distincts a second
-    shuffle, so the aggregate is the production plan.
+    """W2: per-user event frequency as a plain aggregate — one shuffle
+    with map-side partial combine. The window form
+    (``count().over(partitionBy)`` + distinct) gives the same result,
+    but at 100× scale it sorts every event row inside each user
+    partition and then distincts in a second shuffle.
     """
     return events.groupBy("user_id").agg(F.count("*").alias("user_events"))
-
-
-def per_user_frequency_window(events: DataFrame) -> DataFrame:
-    """W2 (window demo): the same result via count().over(partitionBy) +
-    distinct — kept as the documented window-function form of SURVEY W2;
-    not the default (two shuffles of full rows vs one combined agg).
-    """
-    w = Window.partitionBy("user_id")
-    return (
-        events.withColumn("user_events", F.count("*").over(w))
-        .select("user_id", "user_events")
-        .distinct()
-    )

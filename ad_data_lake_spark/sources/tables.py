@@ -32,10 +32,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale
-# (region/nation are bounded-cardinality; pixels-analogue).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -181,12 +177,6 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
     """Load all fixture tables as a dict of DataFrames."""
     return {name: load_table(spark, name, sf_dir) for name in TABLE_NAMES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every fixture table as a temp view for ``spark.sql`` use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -240,65 +240,3 @@ def streaming_frequency_cap_batchwise(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def streaming_frequency_cap_tws(
-    stream_events: DataFrame, cap: int = FREQUENCY_CAP
-) -> DataFrame:
-    """The Spark 4 ``transformWithStateInPandas`` form of the cap —
-    evaluated for r11 ask #6 and ENVIRONMENT-BLOCKED in this
-    container: the API's driver worker imports ``google.protobuf``
-    (pyspark/sql/streaming/proto/StateMessage_pb2) at query start,
-    protobuf is not installed, and installs are disallowed — the query
-    fails with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE before
-    the first batch. Kept as the ready-to-measure third A/B arm:
-    tests/test_lake.py::test_transform_with_state_env_gate skips while
-    protobuf is absent and runs this form (asserting batch
-    equivalence) the moment the environment provides it."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _CapProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._seen.get()
-            seen = got[0] if got is not None else 0
-            chunks = [p for p in rows if len(p)]
-            if chunks:
-                pdf = (
-                    chunks[0]
-                    if len(chunks) == 1
-                    else pd.concat(chunks, ignore_index=True)
-                ).sort_values(["ts", "event_id"])
-                n = len(pdf)
-                nums = pd.RangeIndex(seen + 1, seen + n + 1).to_numpy()
-                yield pd.DataFrame(
-                    {
-                        "event_id": pdf["event_id"].to_numpy(),
-                        "user_id": pdf["user_id"].to_numpy(),
-                        "ts": pdf["ts"].to_numpy(),
-                        "impression_no": nums.astype("int32"),
-                        "capped": nums > cap,
-                    }
-                )
-                seen += n
-            self._seen.update((seen,))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream_events.select("event_id", "user_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_CapProcessor(),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )

@@ -4,7 +4,8 @@ The registry row's candidate set is id-bucketed with a FIXED ``mod``
 (50), sized for the sf0.1 oracle gate — so docs-per-bucket grows
 linearly with the corpus and candidate PAIRS grow quadratically. That
 is by construction (the operator verifies a caller-supplied candidate
-set; its docstring points production at ``minhash_candidate_pairs``),
+set; its docstring points production at the banded LSH join in
+``minhash_neardup_pairs``),
 but it means the registry row's wall-clock has a quadratic slope that
 says nothing about the operator at 100 TB.
 

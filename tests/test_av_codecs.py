@@ -21,6 +21,7 @@ import numpy as np
 import pytest
 
 from ad_data_lake_spark.llm import avi_codec, mp4_meta, wav_codec
+from tests.media_fixtures import encode_mp4_mjpeg, synth_mp4_meta
 
 
 # ---------------------------------------------------------------------------
@@ -305,7 +306,7 @@ def test_avi_corrupt_raises_valueerror():
 
 
 def test_mp4_meta_roundtrip():
-    data = mp4_meta.synth_mp4_meta(
+    data = synth_mp4_meta(
         12.5, timescale=600, tracks=(("vide", "avc1", 1920, 1080), ("soun", "mp4a", 0, 0))
     )
     meta = mp4_meta.parse_mp4_meta(data)
@@ -325,7 +326,7 @@ def test_mp4_corrupt_raises_valueerror():
         mp4_meta.parse_mp4_meta(
             struct.pack(">I", 16) + b"ftyp" + b"isom" + b"\x00" * 4
         )  # no moov
-    good = mp4_meta.synth_mp4_meta(1.0)
+    good = synth_mp4_meta(1.0)
     with pytest.raises(ValueError):
         mp4_meta.parse_mp4_meta(good[: len(good) // 2])  # truncated moov
 
@@ -352,7 +353,7 @@ def test_decode_video_dispatch():
     meta, idx, out = MM.decode_video_frames(avi_codec.encode_avi_dib(frames), k=3)
     assert idx == [0, 3, 7] and meta[2] == 8 and len(out) == 3
     np.testing.assert_array_equal(out[1], frames[3])
-    mp4 = mp4_meta.synth_mp4_meta(2.0)
+    mp4 = synth_mp4_meta(2.0)
     with pytest.raises(NotImplementedError):
         MM.decode_video_frames(mp4)  # pixel decode needs a codec stack
     assert mp4_meta.parse_mp4_meta(mp4)["duration_s"] == 2.0  # metadata still real
@@ -550,7 +551,7 @@ def _solid_block_frames(n: int, size: int = 16, seed: int = 1) -> list[np.ndarra
 
 def test_mp4_mjpeg_roundtrip_all_frames():
     frames = _solid_block_frames(5)
-    data = mp4_meta.encode_mp4_mjpeg(frames, fps=25)
+    data = encode_mp4_mjpeg(frames, fps=25)
     meta, out = mp4_meta.decode_mp4_frames(data)
     assert meta == (16, 16, 5, 25, "jpeg")
     for a, b in zip(frames, out):
@@ -559,7 +560,7 @@ def test_mp4_mjpeg_roundtrip_all_frames():
 
 def test_mp4_mjpeg_sampled_subset_only():
     frames = _solid_block_frames(9, seed=3)
-    data = mp4_meta.encode_mp4_mjpeg(frames)
+    data = encode_mp4_mjpeg(frames)
     _meta, out = mp4_meta.decode_mp4_frames(data, [0, 4, 8])
     assert len(out) == 3
     for idx, fr in zip([0, 4, 8], out):
@@ -568,7 +569,7 @@ def test_mp4_mjpeg_sampled_subset_only():
 
 def test_mp4_sample_table_resolves_offsets_and_sizes():
     frames = _solid_block_frames(4)
-    data = mp4_meta.encode_mp4_mjpeg(frames)
+    data = encode_mp4_mjpeg(frames)
     info = mp4_meta.parse_mp4_samples(data)
     assert info["codec"] == "jpeg" and info["n_samples"] == 4
     assert info["width"] == info["height"] == 16
@@ -584,7 +585,7 @@ def test_mp4_stsc_multi_sample_chunks_expand_correctly():
     encoder's tables by hand and check the walk still lands on the
     same JPEG bytes."""
     frames = _solid_block_frames(5, seed=7)
-    data = bytearray(mp4_meta.encode_mp4_mjpeg(frames))
+    data = bytearray(encode_mp4_mjpeg(frames))
     info = mp4_meta.parse_mp4_samples(bytes(data))
     offs, sizes = info["offsets"], info["sizes"]
     # chunks: [s0 s1] [s2 s3] [s4] -> stsc runs: (1,2),(3,1)
@@ -614,7 +615,7 @@ def test_mp4_non_jpeg_codec_raises_notimplemented():
     """h264 sample entries parse (the walk is codec-agnostic) but pixel
     decode is NotImplementedError — the honest stand-in gate."""
     frames = _solid_block_frames(2)
-    data = bytearray(mp4_meta.encode_mp4_mjpeg(frames))
+    data = bytearray(encode_mp4_mjpeg(frames))
     i = bytes(data).index(b"jpeg", bytes(data).index(b"stsd"))
     data[i : i + 4] = b"avc1"
     assert mp4_meta.parse_mp4_samples(bytes(data))["codec"] == "avc1"
@@ -624,14 +625,14 @@ def test_mp4_non_jpeg_codec_raises_notimplemented():
 
 def test_mp4_corrupt_sample_tables_raise_valueerror():
     frames = _solid_block_frames(2)
-    good = mp4_meta.encode_mp4_mjpeg(frames)
+    good = encode_mp4_mjpeg(frames)
     with pytest.raises(ValueError):
         mp4_meta.decode_mp4_frames(good, [5])  # out of range
     with pytest.raises(ValueError):
         mp4_meta.parse_mp4_samples(good[: len(good) - 40])  # truncated moov
     # metadata-only mp4 (no stbl sample boxes) -> ValueError, not a crash
     with pytest.raises(ValueError):
-        mp4_meta.parse_mp4_samples(mp4_meta.synth_mp4_meta(1.0))
+        mp4_meta.parse_mp4_samples(synth_mp4_meta(1.0))
     # forged tkhd dimensions past the per-frame pixel fuse -> ValueError
     # BEFORE any sample decode allocates planes
     forged = bytearray(good)
@@ -665,7 +666,7 @@ def test_decode_video_frames_mp4_dispatch_and_dup_plan():
     from ad_data_lake_spark.llm import multimodal
 
     frames = _solid_block_frames(2, seed=5)
-    data = mp4_meta.encode_mp4_mjpeg(frames)
+    data = encode_mp4_mjpeg(frames)
     meta, idx, out = multimodal.decode_video_frames(data, 3)
     assert meta == (16, 16, 2, 10, "jpeg")
     assert idx == [0, 0, 1] and len(out) == 3
@@ -765,7 +766,7 @@ def test_jpeg_ffi_widens_coverage_beyond_vendored():
     from unittest import mock
 
     frames = _solid_block_frames(5, seed=9)
-    data = mp4_meta.encode_mp4_mjpeg(frames, fps=12)
+    data = encode_mp4_mjpeg(frames, fps=12)
     meta_n, out_native = mp4_meta.decode_mp4_frames(data, [0, 2, 4])
     with mock.patch(
         "ad_data_lake_spark.llm.jpeg_ffi.available", return_value=False

@@ -5,7 +5,7 @@
 - compact_table must preserve a Hive partition layout (and pruning);
 - flight_window_rollup must keep events in the partial final day of a
   sub-day-aligned flight;
-- word_shingles must return an empty array (not crash) for documents
+- exploded_shingles must emit no rows (not crash) for documents
   shorter than the shingle width.
 """
 
@@ -128,19 +128,16 @@ def test_flight_rollup_counts_partial_final_day(spark, events):
     assert partial.count() > 0
 
 
-def test_word_shingles_short_docs_yield_empty(spark):
-    """Sub-n-token documents return [] — same contract as
-    exploded_shingles and the DuckDB oracle's range()."""
-    from ad_data_lake_spark.llm.text import word_shingles
+def test_exploded_shingles_short_docs_yield_none(spark):
+    """Sub-n-token documents emit no shingle rows — same contract as
+    the DuckDB oracle's range()."""
+    from ad_data_lake_spark.llm.text import exploded_shingles
 
     df = spark.createDataFrame(
         [(1, "one two"), (2, "solo"), (3, ""), (4, "a b c d")], "doc_id long, text string"
     )
-    out = df.select(
-        "doc_id", word_shingles(F.col("text"), 3).alias("sh")
-    ).orderBy("doc_id")
-    rows = out.collect()
-    assert [len(r.sh) for r in rows] == [0, 0, 0, 2]
+    rows = exploded_shingles(df, n=3).orderBy("s").collect()
+    assert [(r.doc_id, r.s) for r in rows] == [(4, "a b c"), (4, "b c d")]
 
 
 def test_funnel_counts_monotone_and_strictly_ordered(spark):

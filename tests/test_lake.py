@@ -522,6 +522,37 @@ def test_compaction_collapses_files_losslessly(spark, events, tmp_path):
     assert _table_hash(spark.read.parquet(path)) == _table_hash(slim)
 
 
+def test_compaction_crash_at_swap_keeps_the_rows(spark, events, tmp_path, monkeypatch):
+    """A crash while the compacted copy is being moved into place must
+    leave a complete copy of the rows on disk, and the next
+    compact_table must refuse to run instead of deleting that copy."""
+    from ad_data_lake_spark import layout
+
+    path = str(tmp_path / "frag")
+    slim = events.select("event_id", "ts", "user_id", "value")
+    slim.repartition(16).write.parquet(path)
+    real_rename = os.rename
+
+    def crash_on_swap(src, dst):
+        if str(src).endswith(".compacting"):
+            raise OSError("simulated crash moving the compacted copy into place")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(layout.os, "rename", crash_on_swap)
+    with pytest.raises(OSError, match="simulated crash"):
+        layout.compact_table(spark, path, target_bytes=1 << 20)
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match="leftover"):
+        layout.compact_table(spark, path, target_bytes=1 << 20)
+    copies = [
+        d
+        for d in (path, path + ".compacting", path + ".compacted-old")
+        if os.path.isdir(d)
+    ]
+    want = _table_hash(slim)
+    assert any(_table_hash(spark.read.parquet(d)) == want for d in copies), copies
+
+
 def test_salted_join_equals_plain_join(spark, events, tmp_path):
     """Salting is pure physical rewrite: same rows as the unsalted
     join, bit for bit."""
@@ -1405,46 +1436,6 @@ def test_publish_cas_across_processes(tmp_path, backend):
     # every retained version's directory exists (nothing GC'd wrongly)
     for v in history:
         assert os.path.isdir(os.path.join(target, v)), v
-
-
-def test_transform_with_state_env_gate(spark, events, tmp_path):
-    """transformWithStateInPandas (the third frequency-cap form, r11
-    ask #6) is environment-blocked: its driver worker imports
-    google.protobuf at query start and this container has no protobuf
-    (installs disallowed). While that holds, this test documents the
-    gate by skipping; the moment the environment provides protobuf it
-    RUNS the tws form and asserts batch equivalence — the gate
-    self-lifts instead of rotting."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas driver worker needs protobuf "
-        "(absent in this container; documented in REPORT.md)",
-    )
-    from ad_data_lake_spark.operators.sessions import frequency_cap
-    from ad_data_lake_spark.streaming.stateful import streaming_frequency_cap_tws
-
-    slim = events.select("event_id", "user_id", "ts")
-    src = str(tmp_path / "captws_src")
-    slim.write.mode("overwrite").parquet(src)
-    saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(slim.schema).parquet(src)
-        out = run_available_now(
-            streaming_frequency_cap_tws(stream), "cap_tws", output_mode="append"
-        )
-        batch = frequency_cap(events).select(
-            "event_id", "user_id", "ts", "impression_no", "capped"
-        )
-        assert _table_hash(out) == _table_hash(batch)
-    finally:
-        if saved is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", saved
-            )
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,7 @@ from ad_data_lake_spark.llm import multimodal as MM
 from ad_data_lake_spark.llm import similarity as SIM
 from ad_data_lake_spark.sources.tables import load_table
 from tests.conftest import SF_ORACLE
+from tests.media_fixtures import encode_bmp, encode_gif_gray, encode_webp
 
 
 @pytest.fixture(scope="module")
@@ -296,13 +297,12 @@ def test_pillow_decodes_our_encoders_output():
 
     import numpy as np
 
-    from ad_data_lake_spark.llm import gif_codec
 
     png = MM.resize_image_bytes(_make_png(1000, 500), 384)
     assert Image.open(io.BytesIO(png)).size == (384, 192)
     assert Image.open(io.BytesIO(_make_jpeg(16, 16))).size == (16, 16)
     g = np.random.default_rng(3).integers(0, 256, (37, 100), dtype=np.uint8)
-    gif = gif_codec.encode_gif_gray(np.stack([g, g, g], axis=-1).tobytes(), 100, 37)
+    gif = encode_gif_gray(np.stack([g, g, g], axis=-1).tobytes(), 100, 37)
     assert Image.open(io.BytesIO(gif)).size == (100, 37)
 
 
@@ -554,11 +554,10 @@ def test_resize_assets_real_decode_webp_in_ci(spark):
 
     import numpy as np
 
-    from ad_data_lake_spark.llm import webp_codec as WC
 
     rng = np.random.RandomState(11)
     img = rng.randint(0, 256, (500, 1000, 3)).astype(np.uint8)
-    webp = WC.encode_webp(img.tobytes(), 1000, 500, 3)
+    webp = encode_webp(img.tobytes(), 1000, 500, 3)
     assets = spark.createDataFrame(
         [(1, bytearray(webp), ("image/webp", "a.webp", len(webp)))],
         "doc_id long, payload binary, meta struct<mime:string,filename:string,n_bytes:long>",
@@ -596,7 +595,6 @@ def test_webp_decode_dispatch_order_is_pinned(monkeypatch):
     transparent."""
     import numpy as np
 
-    from ad_data_lake_spark.llm import webp_codec as WC
     from ad_data_lake_spark.llm import webp_ffi
 
     if not webp_ffi.available():
@@ -604,7 +602,7 @@ def test_webp_decode_dispatch_order_is_pinned(monkeypatch):
 
     rng = np.random.RandomState(21)
     img = rng.randint(0, 256, (9, 14, 3)).astype(np.uint8)
-    webp = WC.encode_webp(img.tobytes(), 14, 9, 3)
+    webp = encode_webp(img.tobytes(), 14, 9, 3)
 
     calls = {"ffi": 0}
     real = webp_ffi.decode_webp
@@ -704,16 +702,16 @@ def test_gif_bmp_codecs_roundtrip_and_error_contract():
     for ch in (3, 4):
         w, h = 13, 9
         px = rng.integers(0, 256, w * h * ch, dtype=np.uint8).tobytes()
-        data = BC.encode_bmp(px, w, h, ch)
+        data = encode_bmp(px, w, h, ch)
         assert BC.decode_bmp(data) == (w, h, ch, px)
         assert MM.parse_image_dims(data) == (w, h)
 
     g = rng.integers(0, 256, (37, 100), dtype=np.uint8)
     px = np.stack([g, g, g], axis=-1).tobytes()
-    gif = GC.encode_gif_gray(px, 100, 37)
+    gif = encode_gif_gray(px, 100, 37)
     assert GC.decode_gif(gif) == (100, 37, 3, px)
     assert MM.parse_image_dims(gif) == (100, 37)
-    assert GC.encode_gif_gray(px, 100, 37) == gif  # deterministic
+    assert encode_gif_gray(px, 100, 37) == gif  # deterministic
 
     interlaced = bytearray(gif)
     # image descriptor sits after the 13-byte header + 768-byte GCT
@@ -740,14 +738,12 @@ def test_resize_assets_real_decode_gif_bmp_in_ci(spark):
 
     import numpy as np
 
-    from ad_data_lake_spark.llm import bmp_codec as BC
-    from ad_data_lake_spark.llm import gif_codec as GC
 
     g = np.linspace(0, 255, 800 * 600, dtype=np.uint8).reshape(600, 800)
     px = np.stack([g, g, g], axis=-1).tobytes()
     payloads = [
-        (1, GC.encode_gif_gray(px, 800, 600), "image/gif", "a.gif"),
-        (2, BC.encode_bmp(px, 800, 600, 3), "image/bmp", "b.bmp"),
+        (1, encode_gif_gray(px, 800, 600), "image/gif", "a.gif"),
+        (2, encode_bmp(px, 800, 600, 3), "image/bmp", "b.bmp"),
     ]
     assets = spark.createDataFrame(
         [(i, bytearray(p), (m, f, len(p))) for i, p, m, f in payloads],
@@ -1255,16 +1251,13 @@ def test_fuzzy_join_links_planted_typos_to_true_names(spark):
 
 
 def test_video_frame_stats_mp4_batched_equals_vendored_path(spark):
-    """r13: the batched-native Arrow path (one encode/decode C call
-    per cache-sized sub-chunk, template-patched containers) and the
-    per-doc vendored-codec fallback must emit IDENTICAL rows — the
+    """The row's one loop body must emit IDENTICAL rows whichever
+    JPEG codec pair it picks: libjpeg batch calls (use_native=True)
+    or the vendored per-frame jpeg_codec loop (use_native=False). The
     use_native pin exists because a driver-side mock cannot reach the
-    executor workers (use_native=False threads an explicit vendored
-    pin through encode_mp4_mjpeg/decode_video_frames — r14: an
-    argument, not the r13 module-global toggle, which leaked to
-    concurrent tasks in reused workers — so the VENDORED codecs
-    actually run, not just the per-doc structure). Self-lifting skip
-    on hosts that cannot build the shim (use_native=True would
+    executor workers; it is an argument, not a module-global toggle,
+    which leaked to concurrent tasks in reused workers. Self-lifting
+    skip on hosts that cannot build the shim (use_native=True would
     RuntimeError in the workers there)."""
     from ad_data_lake_spark.llm import jpeg_ffi
 

@@ -18,6 +18,7 @@ from ad_data_lake_spark.incremental import (
 )
 from ad_data_lake_spark.llm.similarity import IVF_CELLS, ivf_cells_for
 from ad_data_lake_spark.sources.tables import _parse_bytes
+from tests.media_fixtures import encode_webp
 
 
 @given(st.integers(min_value=-(10**6), max_value=10**18))
@@ -309,8 +310,8 @@ def test_webp_roundtrip_property(w, h, channels, seed):
 
     rng = np.random.RandomState(seed)
     px = rng.randint(0, 256, (h, w, channels)).astype(np.uint8).tobytes()
-    data = WC.encode_webp(px, w, h, channels)
-    assert WC.encode_webp(px, w, h, channels) == data
+    data = encode_webp(px, w, h, channels)
+    assert encode_webp(px, w, h, channels) == data
     W, H, C, out = WC.decode_webp(data)
     assert (W, H, C, out) == (w, h, channels, px)
     assert WC.parse_webp_dims(data) == (w, h)
@@ -334,7 +335,7 @@ def test_webp_corruption_never_escapes_valueerror(seed, flip_to, data_st):
 
     rng = np.random.RandomState(seed)
     px = rng.randint(0, 256, (5, 7, 3)).astype(np.uint8).tobytes()
-    good = bytearray(WC.encode_webp(px, 7, 5, 3))
+    good = bytearray(encode_webp(px, 7, 5, 3))
     pos = data_st.draw(st.integers(min_value=0, max_value=len(good) - 1))
     good[pos] = flip_to
     try:

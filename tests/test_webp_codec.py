@@ -4,9 +4,9 @@ The encoder only ever emits literal-only streams (that is all the CI
 fixtures need), so the decoder's transform / LZ77 / color-cache /
 meta-prefix paths are pinned here with hand-built bitstreams: each
 test FORWARD-applies a transform per the public WebP Lossless
-Bitstream Specification, writes the residual plane with the module's
-own plane writer, and asserts the decoder inverts it back to the
-original pixels.
+Bitstream Specification, writes the residual plane with the fixture
+encoder's plane writer (``tests/media_fixtures.py``), and asserts the
+decoder inverts it back to the original pixels.
 """
 
 from __future__ import annotations
@@ -15,13 +15,14 @@ import numpy as np
 import pytest
 
 from ad_data_lake_spark.llm import webp_codec as WC
-from ad_data_lake_spark.llm.webp_codec import (
+from ad_data_lake_spark.llm.webp_codec import _subsample_size
+from tests.media_fixtures import (
     _BitWriter,
-    _subsample_size,
     _wrap_vp8l,
     _write_literal_plane,
     _write_prefix_code,
     _write_symbol,
+    encode_webp,
 )
 
 
@@ -65,8 +66,8 @@ def test_roundtrip_and_determinism():
     for w, h, ch in ((1, 1, 3), (8, 8, 3), (13, 9, 4), (64, 48, 3)):
         rng = np.random.RandomState(w * h + ch)
         px = rng.randint(0, 256, (h, w, ch)).astype(np.uint8).tobytes()
-        data = WC.encode_webp(px, w, h, ch)
-        assert WC.encode_webp(px, w, h, ch) == data  # deterministic
+        data = encode_webp(px, w, h, ch)
+        assert encode_webp(px, w, h, ch) == data  # deterministic
         W, H, C, out = WC.decode_webp(data)
         assert (W, H, C) == (w, h, ch)
         assert out == px  # lossless: bit-exact
@@ -74,13 +75,13 @@ def test_roundtrip_and_determinism():
 
 
 def test_error_contract():
-    good = WC.encode_webp(b"\x00" * 48, 4, 4, 3)
+    good = encode_webp(b"\x00" * 48, 4, 4, 3)
     lossy = b"RIFF" + good[4:8] + b"WEBPVP8 " + b"\x00" * 24
     for bad in (b"", b"RIFFxxxx", good[:16], good[:-4], lossy, b"\x89PNG\r\n"):
         with pytest.raises(ValueError):
             WC.decode_webp(bad)
     with pytest.raises(ValueError):
-        WC.encode_webp(b"\x00" * 5, 2, 2, 3)  # wrong buffer size
+        encode_webp(b"\x00" * 5, 2, 2, 3)  # wrong buffer size
 
 
 def test_decompression_bomb_budget():
@@ -111,7 +112,7 @@ def test_decompression_bomb_budget():
 
     # a small image still decodes untouched (floor pixels are free)
     px = b"\x10" * (12 * 9 * 3)
-    w, h, c, out = WC.decode_webp(WC.encode_webp(px, 12, 9, 3))
+    w, h, c, out = WC.decode_webp(encode_webp(px, 12, 9, 3))
     assert (w, h, c, out) == (12, 9, 3, px)
 
 
@@ -680,7 +681,7 @@ def test_pillow_interop_when_available():
     rng = np.random.RandomState(3)
     w, h = 20, 11
     px = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-    data = WC.encode_webp(px.tobytes(), w, h, 3)
+    data = encode_webp(px.tobytes(), w, h, 3)
     img = PIL.open(io.BytesIO(data)).convert("RGB")
     assert (img.width, img.height) == (w, h)
     assert img.tobytes() == px.tobytes()
