@@ -47,12 +47,12 @@ Durable/network backends: ``sqlite_store.SqliteConditionalStore``
 GET/PUT + If-Match/If-None-Match + 412, tested against a reference
 etag server over real sockets). Their table adapters
 (``SqliteTableCommitStore``, the host-local default, and
-``HttpTableCommitStore``) project each committed state onto the
-table's ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files, so a host-local
-table and an object-store table run the SAME publish code path,
-differing only in which store ``incremental._commit_store`` hands it.
-All backends run the identical publish script in
-tests/test_commit_protocol.py.
+``HttpTableCommitStore``) hold each table's :class:`CommitState` and
+are its only record: readers ask the same store the publish writes
+through. A host-local table and an object-store table therefore run
+the SAME publish and read code, differing only in which store
+``incremental._commit_store`` hands them. All backends run the
+identical publish script in tests/test_commit_protocol.py.
 """
 
 from __future__ import annotations
@@ -106,10 +106,10 @@ class ConditionalStore(Protocol):
 @dataclass(frozen=True)
 class CommitState:
     """A table's full commit metadata as one CAS unit. ``versions`` is
-    the ordered publish log (oldest first; may carry a crashed
-    writer's never-published tail AFTER ``current`` — consumers
-    truncate at the pointer with :meth:`published`, which the file
-    layout's ``_published_history`` calls too)."""
+    the ordered publish log (oldest first; a state adopted from a
+    table written before its arbiter may carry a crashed writer's
+    never-published tail AFTER ``current`` — consumers truncate at the
+    pointer with :meth:`published`)."""
 
     versions: tuple[str, ...]
     current: str | None
@@ -135,9 +135,10 @@ class CommitState:
     def published(self) -> list[str]:
         """The log truncated at the current pointer (a tail past the
         pointer is a crashed writer's orphan, never a readable
-        prior). A log with NO pointer at all is the FIRST commit
-        crashed between its log write and its pointer write — nothing
-        was ever readable, so nothing is a prior: the whole log is
+        prior). A log with NO pointer at all is a FIRST commit that
+        crashed between writing its log and its pointer (possible only
+        where those were separate files, i.e. in an adopted state) —
+        nothing was ever readable, so nothing is a prior: the whole log is
         orphan tail and the next publish starts the history fresh
         (its ``PublishResult.logged`` still names the tail, so the
         orphan directory GCs immediately)."""

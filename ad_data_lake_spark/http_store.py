@@ -13,6 +13,9 @@ preconditions, server-side atomicity on the other end of a socket).
   and Azure Blob ETag preconditions. Swapping in a real bucket is a
   base-URL + auth-header change; the commit protocol above is
   untouched.
+- :class:`HttpTableCommitStore` — a versioned table whose
+  ``CommitState`` lives at one object key on such an endpoint, chosen
+  per table by the ``_commit.http`` marker.
 - :class:`EtagStoreServer` — the reference server (stdlib
   ``http.server``), standing in for MinIO in tests: objects +
   monotonic per-key generations behind ONE mutex, so the precondition
@@ -32,7 +35,6 @@ client unchanged.
 
 from __future__ import annotations
 
-import fcntl
 import http.client
 import json
 import os
@@ -45,12 +47,9 @@ from ad_data_lake_spark.commit_protocol import COMMIT_KEY, PreconditionFailed
 
 # marker file inside a table directory; its presence routes that
 # table's commits through :class:`HttpTableCommitStore` (JSON body:
-# {"base_url": ..., "key": ...}). The decompose lock and etag sidecar
-# share the prefix; like every commit file, all three start with "_",
-# which the merge's plain-directory check passes as layout-owned.
+# {"base_url": ..., "key": ...}). Like every commit file it starts with
+# "_", which the merge's plain-directory check passes as layout-owned.
 HTTP_COMMIT_MARKER = "_commit.http"
-_HTTP_LOCK = HTTP_COMMIT_MARKER + ".lock"
-_HTTP_ETAG = HTTP_COMMIT_MARKER + ".etag"
 
 
 class HttpConditionalStore:
@@ -258,37 +257,23 @@ class HttpConditionalStore:
 class HttpTableCommitStore(HttpConditionalStore):
     """The versioned-lake table layout arbitered by an HTTP
     conditional-put endpoint — the S3 wire shape end to end. The
-    canonical :class:`~ad_data_lake_spark.commit_protocol.CommitState`
-    lives at one object key on the endpoint; the local
-    ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files are a READ PROJECTION
-    maintained after each commit, so every reader (``read_merged``,
-    time travel, GC, ``lake_stats``) works unchanged.
+    table's :class:`~ad_data_lake_spark.commit_protocol.CommitState`
+    lives only at one object key on the endpoint; readers and writers
+    alike ``GET`` it, so a table of this kind is readable only while
+    its endpoint answers (as a Delta table on S3 is readable only while
+    S3 is).
 
     Constructing it with ``base_url`` on a fresh table directory PLANTS
     the ``_commit.http`` marker (base URL + per-table object key),
     committing that table to this backend;
     ``incremental._commit_store`` re-opens it from the marker alone, so
     every writer on every process picks the same endpoint with no
-    configuration to drift.
-
-    Projection ordering: unlike the sqlite arbiter (which decomposes
-    inside its transaction), HTTP gives no critical section around the
-    local file writes, so the decompose runs under a short LOCAL flock
-    and projects what a fresh ``GET`` returns *inside* the lock — the
-    server is linearizable, so each successive lock holder projects a
-    state at least as new, and the files advance strictly forward.
-    (The flock orders only this host's projection writes; commit
-    CORRECTNESS is arbitered solely by the server's CAS.) Crash window:
-    a writer dying between its winning PUT and the projection leaves
-    the files one commit BEHIND the arbiter — stale but consistent
-    (the mirror image of the sqlite backend's files-ahead window, see
-    sqlite_store.py:28-36), and self-healing: the next writer's
-    projection catches the files up."""
+    configuration to drift. The adapter only maps the protocol's
+    commit key to the table's object key."""
 
     def __init__(
         self, target_path: str, base_url: str | None = None, timeout: float = 30.0
     ):
-        self.target_path = target_path
         marker = os.path.join(target_path, HTTP_COMMIT_MARKER)
         if base_url is None:
             with open(marker) as f:
@@ -308,77 +293,11 @@ class HttpTableCommitStore(HttpConditionalStore):
 
     def get(self, key: str) -> tuple[bytes, str] | None:
         assert key == COMMIT_KEY
-        got = super().get(self._table_key)
-        if got is not None and not self._projection_current(got[1]):
-            # heal-on-read: every publish attempt starts with this GET
-            # (cas_publish reads before it writes), so a projection
-            # left stale by a writer that crashed between its winning
-            # PUT and its sync catches up BEFORE the next merge reads
-            # its base version from the files — without this, a merge
-            # computed off stale files CAS-fails, retries off the same
-            # stale files, and the table wedges until manual repair.
-            # The sidecar-etag guard keeps the common current-case to
-            # ZERO extra round-trips/locks, and a LOCAL failure is
-            # best-effort on the read path (the state is already in
-            # hand; the put_if-path sync keeps its propagation). The
-            # sync's own GET can fail with HTTPException or a
-            # RuntimeError (unexpected status) — on the READ path
-            # those are best-effort too, not read failures (r13).
-            try:
-                self._sync_projection()
-            except (OSError, http.client.HTTPException, RuntimeError):
-                pass
-        return got
-
-    def _projection_current(self, etag: str) -> bool:
-        """True when the local projection already reflects ``etag``:
-        the sidecar is written only AFTER projecting exactly that
-        state, and the server's etags are per-state unique, so
-        equality proves currency. A stale read here is benign —
-        _sync_projection re-reads both under its lock."""
-        try:
-            with open(os.path.join(self.target_path, _HTTP_ETAG)) as f:
-                return f.read() == etag
-        except OSError:
-            return False
+        return super().get(self._table_key)
 
     def put_if(self, key: str, data: bytes, **kwargs) -> str:
         assert key == COMMIT_KEY
-        etag = super().put_if(self._table_key, data, **kwargs)
-        self._sync_projection()
-        return etag
-
-    def _sync_projection(self) -> None:
-        # A network failure HERE (after the winning PUT) propagates:
-        # the commit has landed at the arbiter, the caller sees an
-        # error, and any retry CAS-fails against the already-landed
-        # state (no duplicate, no lost update — the arbiter protects
-        # correctness; the error makes the degraded endpoint VISIBLE
-        # instead of silently serving a stale projection forever).
-        # Transient failures heal at the next successful sync.
-        from ad_data_lake_spark import incremental
-        from ad_data_lake_spark.commit_protocol import CommitState
-
-        lock_path = os.path.join(self.target_path, _HTTP_LOCK)
-        fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            cur = super().get(self._table_key)  # fresh read INSIDE the lock
-            if cur is None:
-                return
-            data, etag = cur
-            try:
-                with open(os.path.join(self.target_path, _HTTP_ETAG)) as f:
-                    if f.read() == etag:
-                        return  # projection already at (or past) this state
-            except FileNotFoundError:
-                pass
-            incremental._project_state(
-                self.target_path, CommitState.from_bytes(data)
-            )
-            incremental._write_atomic(self.target_path, _HTTP_ETAG, etag)
-        finally:
-            os.close(fd)
+        return super().put_if(self._table_key, data, **kwargs)
 
 
 class _Handler(BaseHTTPRequestHandler):

@@ -11,51 +11,55 @@ contracts are carried by an explicit bucketed + versioned layout:
 
 - ``merge_upsert`` = **bucket-scoped MERGE**. The table lives as
   hash-bucket directories (``_mb=N``, N = pmod(xxhash64(key))) under a
-  version directory, with a ``_CURRENT`` pointer file naming the live
-  version. A merge reads ONLY the buckets that contain update keys
-  (partition pruning on ``_mb``), last-wins-dedupes current ∪ updates
-  within those buckets, writes them to a NEW version directory,
-  hardlinks every untouched bucket across (O(1) per file — no data
-  copied, bytes shared with the previous version), and atomically
-  repoints ``_CURRENT`` (``os.replace``). Semantics = ``MERGE INTO t
-  USING u ON t.id = u.id WHEN MATCHED UPDATE WHEN NOT MATCHED
-  INSERT`` with a deterministic recency rule (SURVEY §7 risk register:
-  Spark needs an explicit tiebreak where the reference relied on dict
-  overwrite order). Cost is O(affected buckets), not O(table) — the
-  Delta/Iceberg cost model — and readers resolve the pointer, so they
-  see strictly old-version-or-new-version, never a partial or missing
+  version directory; the table's commit state names the live version.
+  A merge reads ONLY the buckets that contain update keys (partition
+  pruning on ``_mb``), last-wins-dedupes current ∪ updates within those
+  buckets, writes them to a NEW version directory, hardlinks every
+  untouched bucket across (O(1) per file — no data copied, bytes shared
+  with the previous version), and commits the new version as current.
+  Semantics = ``MERGE INTO t USING u ON t.id = u.id WHEN MATCHED UPDATE
+  WHEN NOT MATCHED INSERT`` with a deterministic recency rule (SURVEY
+  §7 risk register: Spark needs an explicit tiebreak where the
+  reference relied on dict overwrite order). Cost is O(affected
+  buckets), not O(table) — the Delta/Iceberg cost model — and readers
+  resolve the current version from the commit state, so they see
+  strictly old-version-or-new-version, never a partial or missing
   table. The newest ``RETAIN_VERSIONS`` versions are retained (for
   in-flight readers and ``read_version`` time travel) and everything
   older is GC'd — the snapshot-retention window every real lake tunes
-  (Delta ``VERSION AS OF`` + ``VACUUM``); an ordered ``_VERSIONS``
-  log records publish order so "N back" is well-defined even when a
-  crashed merge leaves an orphaned directory.
-- ``read_merged`` = the pointer-resolving reader.
+  (Delta ``VERSION AS OF`` + ``VACUUM``); the commit state's ordered
+  version log records publish order so "N back" is well-defined even
+  when a crashed merge leaves an orphaned directory.
+- ``read_merged`` = the reader of the current version.
 - ``backfill_partitions`` = dynamic partition overwrite — only the
   partitions present in the incoming frame are replaced, everything
   else untouched: exactly ``replaceWhere`` for the written keys.
+
+**One record of commit state.** A versioned table's pointer, version
+log and bucket count are one ``CommitState`` held by the table's
+arbiter (:func:`_commit_store`): the sqlite store
+(``<table>/_commit.sqlite``) on every host-local table, or the
+HTTP/S3 conditional-put store where the table carries that marker.
+Every reader and writer asks the arbiter (:func:`_state`), as a Delta
+table is resolved from its log alone; no copy of that state exists
+anywhere else, so no copy can fall behind or run ahead of it.
 
 **Concurrent writers** (a 100 TB lake has streaming + backfill writers
 by construction) are handled with optimistic concurrency, the Delta
 commit protocol's shape: every merge records the version it computed
 FROM, and the publish CAS-checks the table's commit state against that
-base before flipping the pointer. A writer that lost the race gets
-``ConcurrentWriteError`` and re-runs its merge off the new current
-(automatic, ``MERGE_MAX_ATTEMPTS``), so both merges land and neither is
-silently discarded. The whole commit is ONE conditional put of the
-table's ``CommitState`` (``commit_protocol.cas_publish``), arbitered
-per table by :func:`_commit_store`: the sqlite store
-(``<table>/_commit.sqlite``, one ``BEGIN IMMEDIATE`` transaction per
-put — sqlite's journal rolls back a writer that dies mid-commit, so
-there is no lock to break) on every host-local table, or the HTTP/S3
-conditional-put store where the table carries that marker. Either way
-the ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files are a read projection
-written inside the arbiter's critical section, so readers never touch
-the arbiter. GC distinguishes logged directories (safe to remove
-immediately — the arbiter's log only gains a name inside a commit, so
-a logged directory's writer is finished or dead) from never-logged
-ones, which might be a concurrent writer's merge awaiting publish and
-are only reclaimed past ``ORPHAN_GRACE_SECONDS``.
+base. A writer that lost the race gets ``ConcurrentWriteError`` and
+re-runs its merge off the new current (automatic,
+``MERGE_MAX_ATTEMPTS``), so both merges land and neither is silently
+discarded. The whole commit is ONE conditional put of the table's
+``CommitState`` (``commit_protocol.cas_publish``): sqlite runs it as
+one ``BEGIN IMMEDIATE`` transaction (its journal rolls back a writer
+that dies mid-commit, so there is no lock to break), HTTP as one
+conditional ``PUT``. GC distinguishes logged directories (safe to
+remove immediately — the arbiter's log only gains a name inside a
+commit, so a logged directory's writer is finished or dead) from
+never-logged ones, which might be a concurrent writer's merge awaiting
+publish and are only reclaimed past ``ORPHAN_GRACE_SECONDS``.
 
 Scale notes: the MERGE shuffle is one hash partition by key (the
 window dedupe) over the AFFECTED buckets only; ``n_buckets`` should
@@ -63,7 +67,7 @@ scale with table size (buckets ≈ table_bytes / target_rewrite_bytes)
 so a daily merge touching k keys rewrites ~k/n_buckets of the table.
 
 The versioned layout is the only one this module merges into or reads
-as a table. A plain parquet directory (no ``_CURRENT``) is read with
+as a table. A plain parquet directory (no commit state) is read with
 ``sinks.read_lake`` and rewritten with ``backfill_partitions``; a
 merge into one, and ``read_merged`` on one, raise ``ValueError``.
 """
@@ -99,9 +103,6 @@ MERGE_BUCKET_TARGET_BYTES = 256 << 20
 RETAIN_VERSIONS = 3
 _MAX_MERGE_BUCKETS = 1 << 16
 _BUCKET = "_mb"
-_PTR = "_CURRENT"
-_NB = "_BUCKETS"
-_LOG = "_VERSIONS"
 _SCHEMA_FILE = "_SCHEMA.json"
 # Optimistic-concurrency knobs. The orphan grace window protects a
 # CONCURRENT writer's not-yet-published version directory (written
@@ -147,59 +148,11 @@ def _estimated_plan_bytes(df: DataFrame) -> int:
         return 0
 
 
-def _stored_buckets(target_path: str) -> int | None:
-    try:
-        with open(os.path.join(target_path, _NB)) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        return None
-
-
 def _bucket_expr(key: str, n_buckets: int):
     """Deterministic bucket id for a merge key. Cast-to-string first so
     the bucket of a key never depends on its physical type; xxhash64 is
     stable across sessions/versions (recomputes agree at any time)."""
     return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int")
-
-
-def _current_version(target_path: str) -> str | None:
-    try:
-        with open(os.path.join(target_path, _PTR)) as f:
-            return f.read().strip() or None
-    except FileNotFoundError:
-        return None
-
-
-def _version_history(target_path: str) -> list[str]:
-    """Ordered publish history (oldest first) from the ``_VERSIONS``
-    log; empty before the first commit. ``_project_state`` writes the
-    log before the pointer, so every table with a ``_CURRENT`` has
-    one."""
-    try:
-        with open(os.path.join(target_path, _LOG)) as f:
-            return [line.strip() for line in f if line.strip()]
-    except FileNotFoundError:
-        return []
-
-
-def _published_history(target_path: str, current: str | None) -> list[str]:
-    """The version log truncated at the ``_CURRENT`` pointer, by the
-    same rule as ``CommitState.published``. A merge that crashed
-    between the log append and the pointer flip leaves a
-    never-published tail in ``_VERSIONS``; every consumer that reasons
-    about "prior versions" (time travel, vacuum, the next publish)
-    must ignore that tail — it was never current, so it is not a
-    readable prior, just an orphan directory awaiting GC."""
-    return CommitState(
-        tuple(_version_history(target_path)), current, None
-    ).published()
-
-
-def _write_atomic(target_path: str, name: str, content: str) -> None:
-    tmp = os.path.join(target_path, f".{name}.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        f.write(content)
-    os.replace(tmp, os.path.join(target_path, name))
 
 
 def _save_schema(version_dir: str, schema: StructType) -> None:
@@ -247,15 +200,28 @@ def _read_version_dir(spark: SparkSession, version_dir: str) -> DataFrame:
     return spark.read.schema(schema).parquet(version_dir).drop(_BUCKET)
 
 
-def read_merged(spark: SparkSession, target_path: str) -> DataFrame:
-    """Resolve the ``_CURRENT`` pointer and read the live version.
-    Readers never observe a mid-merge state: the pointer flips
-    atomically (``os.replace``) from one complete version directory to
-    another. A directory with no pointer is not a versioned table and
-    raises; plain parquet directories are read with ``sinks.read_lake``."""
-    version = _current_version(target_path)
-    if version is None:
+def _state(target_path: str) -> CommitState | None:
+    """The table's commit state as its arbiter holds it; None for a
+    plain or missing directory, or a table with no commit yet. Never
+    creates an arbiter database."""
+    got = _commit_store(target_path).get(COMMIT_KEY)
+    return CommitState.from_bytes(got[0]) if got is not None else None
+
+
+def _live_state(target_path: str) -> CommitState:
+    state = _state(target_path)
+    if state is None or state.current is None:
         raise ValueError(f"{target_path} is not a versioned (bucketed) table")
+    return state
+
+
+def read_merged(spark: SparkSession, target_path: str) -> DataFrame:
+    """Read the version the table's commit state names as current.
+    Readers never observe a mid-merge state: a commit moves the state
+    from one complete version directory to another in one conditional
+    put. A directory with no commit state is not a versioned table and
+    raises; plain parquet directories are read with ``sinks.read_lake``."""
+    version = _live_state(target_path).current
     return _read_version_dir(spark, os.path.join(target_path, version))
 
 
@@ -322,49 +288,30 @@ def _remove_versions(target_path: str, doomed: list[str]) -> list[str]:
     """rmtree the doomed version dirs — call AFTER the commit (see
     :func:`_doomed_versions` for why that is safe).
 
-    The live log/pointer is re-read PER DIRECTORY, immediately before
-    its rmtree, and anything it names is spared: the doomed list was
-    selected from a snapshot, and a publish can land between selection
-    and removal. Without this recheck, a remover stalled past the
-    orphan grace window could delete a directory that a concurrent
-    writer published as CURRENT in the meantime (version names are
+    The live log/pointer is re-read from the arbiter PER DIRECTORY,
+    immediately before its rmtree, and anything it names is spared:
+    the doomed list was selected from a snapshot, and a publish can
+    land between selection and removal. Without this recheck, a
+    remover stalled past the orphan grace window could delete a
+    directory that a concurrent writer published as CURRENT in the
+    meantime (version names are
     never reused — the log only ever appends fresh uuid-suffixed
     names — so a spared name can never become doomed-but-live again).
-    Re-reading per directory (two small file reads each; doomed lists
-    are at most a handful of names) narrows the residual exposure from
+    Re-reading per directory (one arbiter read each; doomed lists are
+    at most a handful of names) narrows the residual exposure from
     the full multi-directory removal pass to the instants between one
     recheck and its own rmtree — a writer stalled past the grace
     window publishing its never-logged version in exactly that sliver
     is the one case left, and the grace window (minutes, vs a
-    write-to-publish gap of seconds) is the real defense against it,
-    same as before deletion moved out of the lock."""
+    write-to-publish gap of seconds) is the real defense against it."""
     removed = []
     for d in doomed:
-        live = set(_version_history(target_path))
-        current = _current_version(target_path)
-        if current is not None:
-            live.add(current)
-        if d in live:
+        state = _state(target_path)
+        if state is not None and (d == state.current or d in state.versions):
             continue
         shutil.rmtree(os.path.join(target_path, d), ignore_errors=True)
         removed.append(d)
     return removed
-
-
-def _project_state(target_path: str, state: "CommitState") -> None:
-    """Decompose a CommitState to the table's file layout (_BUCKETS
-    sidecar -> _VERSIONS log -> _CURRENT pointer, in that crash-safe
-    order) — the ONE projection writer every table arbiter shares
-    (sqlite, http), so the layout can never diverge per backend.
-    Caller provides whatever serialization its arbiter requires."""
-    if (
-        state.n_buckets is not None
-        and _stored_buckets(target_path) != state.n_buckets
-    ):
-        _write_atomic(target_path, _NB, str(state.n_buckets))
-    _write_atomic(target_path, _LOG, "\n".join(state.versions) + "\n")
-    if state.current is not None:
-        _write_atomic(target_path, _PTR, state.current)
 
 
 def _commit_store(target_path: str):
@@ -372,8 +319,8 @@ def _commit_store(target_path: str):
     the table carries the ``_commit.http`` marker (see
     ``http_store.HttpTableCommitStore``), else the sqlite store
     (``sqlite_store.SqliteTableCommitStore``, whose ``_commit.sqlite``
-    database is created on first use and adopts a table that so far
-    has only its ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files).
+    database is created by the first commit, or by adopting a table
+    written before the arbiter).
     Per-table and layout-bound: the marker travels with the directory,
     so every writer on every process picks the same arbiter with no
     configuration to drift."""
@@ -392,7 +339,7 @@ def _publish(
     n_buckets: int | None = None,
 ) -> None:
     """Commit ``new_version``: append it to the ordered version log,
-    atomically repoint ``_CURRENT``, and GC versions past the retention
+    make it current, and GC versions past the retention
     window (the newest ``retain`` versions — current plus ``retain-1``
     priors — stay readable via ``read_version``).
 
@@ -400,7 +347,7 @@ def _publish(
     commit runs through the store-agnostic protocol
     (:func:`~ad_data_lake_spark.commit_protocol.cas_publish`) against
     this table's arbiter (:func:`_commit_store`). When ``base_version``
-    is given, the publish first re-checks that the current pointer still
+    is given, the publish first re-checks that the current version still
     equals the version this merge was computed FROM — if another
     writer published in between, committing would silently discard
     that writer's merge (lost update), so this raises
@@ -411,18 +358,18 @@ def _publish(
     conditional-put (see commit_protocol's backend mapping); only the
     store adapter differs.
 
-    Write order inside the arbiter's critical section is
-    buckets-sidecar → log → pointer, so a crash at any boundary
-    leaves the table consistent: an unpointed log tail is just an
-    orphaned directory a later publish GCs, never a dangling pointer.
-    The history this publish extends is truncated at the CURRENT
-    pointer first, so a prior crash's never-published tail is dropped
-    from the log (and its directory GC'd below) instead of surviving
-    as a readable 'prior' ahead of the version it never superseded.
+    The log, pointer and bucket count change together in that one
+    conditional put, so a writer that dies anywhere leaves the state
+    either wholly before or wholly after its commit. The history this
+    publish extends is truncated at the current pointer first, so an
+    unpointed log tail (adopted from a table written before the
+    arbiter) is dropped from the log (and its directory GC'd below)
+    instead of surviving as a readable 'prior' ahead of the version it
+    never superseded.
     The ``rmtree`` of doomed versions runs AFTER the commit — it is
     the only unbounded-cost step, and keeping it out of the critical
-    section keeps commits at a few metadata writes (so waiters are
-    never starved behind a large GC)."""
+    section keeps commits at one small write (so waiters are never
+    starved behind a large GC)."""
     result = cas_publish(
         _commit_store(target_path),
         new_version,
@@ -437,12 +384,12 @@ def _publish(
 
 
 def _check_mergeable(target_path: str) -> None:
-    """Refuse a merge into a directory with no ``_CURRENT`` that holds
+    """Refuse a merge into a directory with no commit state that holds
     anything this layout did not write. Checked before anything is
     written, the arbiter database included. The layout's own names
     pass: ``v-*`` (a first merge that died before publishing leaves
-    one for the age-gated orphan GC), ``_*`` (the arbiter files,
-    ``_BUCKETS``, ``_VERSIONS``) and ``.*`` (temporary files)."""
+    one for the age-gated orphan GC), ``_*`` (the arbiter files) and
+    ``.*`` (temporary files)."""
     if not os.path.isdir(target_path):
         return
     foreign = sorted(
@@ -451,9 +398,9 @@ def _check_mergeable(target_path: str) -> None:
     if foreign:
         raise ValueError(
             f"{target_path} is not a versioned (bucketed) table: it holds "
-            f"{foreign[0]!r} and no {_PTR}. Plain parquet directories are "
-            "read with sinks.read_lake and written with backfill_partitions, "
-            "never merged into."
+            f"{foreign[0]!r} and no commit state. Plain parquet directories "
+            "are read with sinks.read_lake and written with "
+            "backfill_partitions, never merged into."
         )
 
 
@@ -469,8 +416,8 @@ def _apply_bucketed(
 ) -> None:
     """Shared bucket-scoped write core for MERGE and CDC-apply, with
     optimistic-concurrency retry: each attempt computes the merged
-    state from the version ``_CURRENT`` points at, and the publish
-    CAS-checks that the pointer hasn't advanced since (see
+    state from the current version, and the publish CAS-checks that
+    the commit state hasn't advanced since (see
     :func:`_publish`). A lost race raises ``ConcurrentWriteError``
     internally and the attempt re-runs off the new current — the batch
     is re-applied, which the last-wins recency rule makes correct and
@@ -507,18 +454,19 @@ def _apply_bucketed_once(
             return deduped
         return deduped.where(~F.col(delete_col)).drop(delete_col)
 
-    prev_version = _current_version(target_path)
+    state = _state(target_path)
+    prev_version = state.current if state is not None else None
     if prev_version is None:
         _check_mergeable(target_path)
         if n_buckets is None:
             n_buckets = buckets_for_bytes(_estimated_plan_bytes(batch))
     else:
-        # layout-bound: the stored count always wins
-        n_buckets = _stored_buckets(target_path)
+        # layout-bound: the committed count always wins
+        n_buckets = state.n_buckets
         if n_buckets is None:
             raise ValueError(
-                f"{os.path.join(target_path, _NB)} is missing: cannot "
-                "resolve the bucket count"
+                f"{target_path}: the commit state records no bucket "
+                "count, so it cannot be resolved"
             )
 
     batch_b = batch.withColumn(_BUCKET, _bucket_expr(key, n_buckets))
@@ -580,9 +528,9 @@ def _apply_bucketed_once(
             if d.startswith(f"{_BUCKET}=") and int(d.split("=", 1)[1]) not in touched:
                 _link_tree(os.path.join(cur_dir, d), os.path.join(new_dir, d))
     _save_schema(new_dir, deduped.drop(_BUCKET).schema)
-    # the _NB sidecar is written INSIDE the commit critical section
-    # (after the CAS passes) so a losing concurrent first-write can
-    # never stamp its bucket count over the winner's layout
+    # the bucket count commits in the same conditional put, so a
+    # losing concurrent first write never stamps its count over the
+    # winner's layout
     try:
         _publish(
             target_path, new_version, base_version=prev_version, n_buckets=n_buckets
@@ -614,7 +562,7 @@ def merge_upsert(
     the layout — changing it would scatter keys across old buckets), a
     first write sizes from the incoming frame via ``buckets_for_bytes``
     so the count GROWS with data instead of pinning the fixture's 8.
-    The resolved count is persisted next to ``_CURRENT``."""
+    The resolved count is committed with the table's state."""
     _apply_bucketed(
         spark, target_path, updates, key, order_col, tiebreak, n_buckets, None
     )
@@ -677,24 +625,23 @@ def read_version(
 ) -> DataFrame:
     """Time travel: read the table as of ``steps_back`` merges ago
     (0 = current) — ``VERSION AS OF`` on the versioned layout. The
-    version is resolved from the ordered ``_VERSIONS`` log relative to
-    the ``_CURRENT`` pointer (never from directory-listing order, which
+    version is resolved from the commit state's ordered log relative to
+    its current pointer (never from directory-listing order, which
     a crashed merge's orphan dir would scramble), so "previous" is
     always the version the last publish actually superseded. Depth is
     bounded by the ``RETAIN_VERSIONS`` retention window; past it the
     version is GC'd and this raises — the reference instead retains
     every dated snapshot folder forever (src/main_extractor.py:363),
     which is this layout with retention = ∞."""
-    current = _current_version(target_path)
-    if current is None:
-        raise ValueError(f"{target_path} is not a versioned (bucketed) table")
+    state = _live_state(target_path)
+    current = state.current
     if steps_back < 0:
         raise ValueError(f"steps_back must be >= 0, got {steps_back}")
     if steps_back == 0:
         return _read_version_dir(spark, os.path.join(target_path, current))
-    # truncated-at-current history: a crashed merge's unpointed log
-    # tail is never resolvable as a prior version
-    history = _published_history(target_path, current)
+    # truncated-at-current history: an unpointed log tail is never
+    # resolvable as a prior version
+    history = state.published()
     try:
         idx = history.index(current) - steps_back
     except ValueError:
@@ -719,7 +666,7 @@ def read_previous(spark: SparkSession, target_path: str) -> DataFrame:
 def vacuum(target_path: str, retain: int = 1) -> list[str]:
     """Explicit retention tightening — the ``VACUUM`` analog: keep only
     the newest ``retain`` versions (the current version is always
-    kept), truncate the ``_VERSIONS`` log to match, delete the rest.
+    kept), truncate the commit state's log to match, delete the rest.
     Returns the removed version names. Complements the automatic
     per-publish window: a pipeline that just finished an audited
     backfill calls this to reclaim the space early instead of waiting
@@ -732,10 +679,6 @@ def vacuum(target_path: str, retain: int = 1) -> list[str]:
     Never-logged version directories — possibly a concurrent writer's
     merge awaiting publish — are only removed past the orphan grace
     window; logged tails GC immediately."""
-    if _current_version(target_path) is None:
-        # checked on the files first, so a plain or missing directory
-        # never gets an arbiter database created by a failing call
-        raise ValueError(f"{target_path} is not a versioned (bucketed) table")
     store = _commit_store(target_path)
     for _ in range(MERGE_MAX_ATTEMPTS):
         got = store.get(COMMIT_KEY)
@@ -745,8 +688,8 @@ def vacuum(target_path: str, retain: int = 1) -> list[str]:
         if state.current is None:
             raise ValueError(f"{target_path} is not a versioned (bucketed) table")
         # Truncate at the pointer BEFORE applying the retention window:
-        # a crashed merge's unpointed log tail must be GC'd as the
-        # orphan it is, never retained ahead of current as a 'prior'.
+        # an unpointed log tail must be GC'd as the orphan it is, never
+        # retained ahead of current as a 'prior'.
         history = state.published()
         kept = history[-max(1, retain):]
         if state.current not in kept:
@@ -767,10 +710,15 @@ def lake_stats(target_path: str) -> dict:
     """Table-inspection utility (DESCRIBE DETAIL analog): version
     history, live-version file/byte/bucket counts, and how many bytes
     the live version SHARES with prior versions via hardlinks (the
-    observable form of the O(affected-buckets) merge cost). Pure
-    driver-side directory walk — no Spark job."""
-    current = _current_version(target_path)
-    if current is None:
+    observable form of the O(affected-buckets) merge cost).
+
+    ``schema_gaps`` names each column that a live bucket file's footer
+    carries but the version's ``_SCHEMA.json`` lacks. Reads drop such a
+    column; a merge written by an earlier release could leave one (see
+    README, "Known limitation"). Footers are read in this process with
+    pyarrow: no Spark job runs."""
+    state = _state(target_path)
+    if state is None or state.current is None:
         n_files = n_bytes = 0
         for root, _dirs, files in os.walk(target_path):
             for f in files:
@@ -782,10 +730,13 @@ def lake_stats(target_path: str) -> dict:
             "n_files": n_files,
             "n_bytes": n_bytes,
         }
-    history = _version_history(target_path)
-    vdir = os.path.join(target_path, current)
+    import pyarrow.parquet as pq
+
+    vdir = os.path.join(target_path, state.current)
+    stored = set(_stored_schema(vdir).fieldNames())
     n_files = n_bytes = shared_bytes = 0
     buckets = set()
+    gaps = set()
     for root, _dirs, files in os.walk(vdir):
         b = os.path.basename(root)
         if b.startswith(f"{_BUCKET}="):
@@ -793,19 +744,22 @@ def lake_stats(target_path: str) -> dict:
         for f in files:
             if not f.endswith(".parquet"):
                 continue
-            st = os.stat(os.path.join(root, f))
+            path = os.path.join(root, f)
+            st = os.stat(path)
             n_files += 1
             n_bytes += st.st_size
             if st.st_nlink > 1:  # hardlinked into other versions
                 shared_bytes += st.st_size
+            gaps.update(set(pq.read_schema(path).names) - stored)
     return {
         "versioned": True,
-        "current_version": current,
-        "n_versions": len(history),
-        "version_history": history,
-        "n_buckets": _stored_buckets(target_path),
+        "current_version": state.current,
+        "n_versions": len(state.versions),
+        "version_history": list(state.versions),
+        "n_buckets": state.n_buckets,
         "n_bucket_dirs": len(buckets),
         "n_files": n_files,
         "n_bytes": n_bytes,
         "shared_bytes": shared_bytes,
+        "schema_gaps": sorted(gaps),
     }

@@ -104,7 +104,7 @@ def lake_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer A computes a merge of the EVEN event_ids (+100, ts+1h) from
     the seed version; before A publishes, writer B runs a COMPLETE
     merge of the ODD event_ids (+200, ts+1h) and commits. A's publish
-    must CAS-fail against the advanced ``_CURRENT``, retry off B's
+    must CAS-fail against the advanced commit state, retry off B's
     version, and land — so the final table carries BOTH updates and a
     publish history of exactly depth 3 (seed → B → A-retried). Without
     the CAS (reference has a single-writer overwrite contract,
@@ -121,20 +121,24 @@ def lake_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_concurrent_writers_sqlite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T20 twin with the arbiter planted up front: the identical
     lost-update interleave as ``lake_concurrent_writers``, but the
-    table's sqlite arbiter
+    table's sqlite arbiter database
     (:class:`~ad_data_lake_spark.sqlite_store.SqliteTableCommitStore`,
     a real transactional conditional-put — sqlite's write lock is the
-    CAS) is created explicitly before the first merge instead of by
-    the first publish — the only difference from
+    CAS) is created explicitly, empty, before the first merge instead
+    of by the first publish — the only difference from
     ``lake_concurrent_writers``, which runs the same arbiter. Same
     oracle, same expected final state and publish depth."""
 
     def plant(target: str) -> None:
         from ad_data_lake_spark.commit_protocol import COMMIT_KEY
-        from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
+        from ad_data_lake_spark.sqlite_store import (
+            TABLE_COMMIT_DB,
+            SqliteConditionalStore,
+        )
 
-        # the first get creates the arbiter's database (no commit yet)
-        SqliteTableCommitStore(target).get(COMMIT_KEY)
+        # the generic store's first get creates the database (no row)
+        os.makedirs(target, exist_ok=True)
+        SqliteConditionalStore(os.path.join(target, TABLE_COMMIT_DB)).get(COMMIT_KEY)
 
     return _concurrent_writers_run(spark, sf_dir, "concurrent_sqlite", plant)
 
@@ -158,9 +162,10 @@ def lake_concurrent_writers_http(spark: SparkSession, sf_dir: str) -> DataFrame:
         def plant(target: str) -> None:
             HttpTableCommitStore(target, base_url=url)
 
-        # every publish runs eagerly inside this block; the returned
-        # DataFrame reads only the local file projection, so it stays
-        # valid after the endpoint goes away
+        # read_merged resolves the current version from the endpoint
+        # inside this block; the returned DataFrame reads only that
+        # version directory's parquet, so it stays valid after the
+        # endpoint goes away
         return _concurrent_writers_run(spark, sf_dir, "concurrent_http", plant)
 
 
@@ -202,11 +207,7 @@ def _concurrent_writers_run(
     finally:
         incremental._publish = orig_publish
 
-    depth = len(
-        incremental._published_history(
-            target, incremental._current_version(target)
-        )
-    )
+    depth = len(incremental._state(target).published())
     return incremental.read_merged(spark, target).select(
         "event_id",
         "ts",

@@ -18,40 +18,21 @@ object-store backends the protocol documents (S3 ``If-Match``, GCS
   monotonically increasing per-key generation (GCS's scheme verbatim;
   ``if_none_match`` maps to GCS ``ifGenerationMatch=0``).
 - :class:`SqliteTableCommitStore` — the versioned table layout with
-  sqlite as its commit arbiter. The canonical ``CommitState`` lives in
-  ``<table>/_commit.sqlite`` (created on the table's first commit by
-  ``incremental._publish``/``vacuum``); the
-  ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files are decomposed inside
-  the same transaction as a read projection, so every reader
-  (``read_merged``, time travel, GC, ``lake_stats``) works unchanged.
+  sqlite as its commit arbiter. The table's ``CommitState`` (pointer,
+  version log, bucket count) lives only in ``<table>/_commit.sqlite``,
+  created by the table's first commit; every reader and writer asks
+  this store for it. A ``get`` on a directory without the database
+  creates none.
 
-Crash window note for the table store: a writer dying between the file
-decomposition and the sqlite COMMIT leaves the files one commit AHEAD
-of the arbiter (sqlite rolls its transaction back; the file writes are
-not transactional). The pointed-at directory is complete (data is
-written before any publish), so readers only ever see whole versions —
-and the window is self-healing via HEAL-ON-READ: every publish begins
-with ``get``, which re-projects the arbiter's canonical state over the
-files whenever the pointers disagree (r12 — a put_if-only heal was
-circular: merges derive their CAS base from the FILES, so an ahead
-projection made every merge CAS-fail forever before any put_if could
-re-decompose). What can never happen is two writers interleaving their
-file writes: decomposition and the heal both run only while holding
-sqlite's write lock, so files advance strictly in commit order.
-
-Adoption: a table whose commit state lives only in its
-``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files (written by a release
-that arbitered commits with a per-table file lock, or by hand) has no
-database row yet. Its first ``get`` seeds the row from those files,
-under ``BEGIN IMMEDIATE`` and only while the row is still absent, so N
-processes racing to adopt one table agree on a single seed and then
-CAS against it as usual. The same rule covers a FIRST commit that died
-between its file decomposition and COMMIT: its version directory is
-complete and the files already point at it, so it is adopted as
-published rather than wedging every later merge. Adoption makes the
-database the arbiter from then on, so an old release and this one must
-not write the same table at the same time — the old release would
-commit through its file lock, which this store never consults.
+Adoption: a table written by a release that kept its commit state in
+``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files has no database row yet.
+Its first ``get`` seeds the row from those files, under ``BEGIN
+IMMEDIATE`` and only while the row is still absent, so N processes
+racing to adopt one table agree on a single seed and then CAS against
+it as usual. Those files are read nowhere else and written by nothing:
+after adoption they are inert. Adoption makes the database the
+arbiter from then on, so an old release and this one must not write
+the same table at the same time.
 """
 
 from __future__ import annotations
@@ -150,88 +131,72 @@ class SqliteConditionalStore:
                 "data = excluded.data, gen = excluded.gen",
                 (key, bytes(data), gen),
             )
-            self._in_transaction(key, data)
         return str(gen)
 
-    def _in_transaction(self, key: str, data: bytes) -> None:
-        """Subclass hook: runs after the conditional write, before
-        COMMIT, while sqlite's write lock is held — i.e. serialized in
-        commit order across every writer."""
+
+# the commit-state files of tables written before this arbiter; only
+# _adopt reads them, and nothing writes them
+_PTR = "_CURRENT"
+_LOG = "_VERSIONS"
+_NB = "_BUCKETS"
+
+
+def _file_current(target_path: str) -> str | None:
+    try:
+        with open(os.path.join(target_path, _PTR)) as f:
+            return f.read().strip() or None
+    except FileNotFoundError:
+        return None
+
+
+def _file_versions(target_path: str) -> list[str]:
+    try:
+        with open(os.path.join(target_path, _LOG)) as f:
+            return [line.strip() for line in f if line.strip()]
+    except FileNotFoundError:
+        return []
+
+
+def _file_buckets(target_path: str) -> int | None:
+    try:
+        with open(os.path.join(target_path, _NB)) as f:
+            return int(f.read().strip())
+    except (OSError, ValueError):
+        return None
 
 
 class SqliteTableCommitStore(SqliteConditionalStore):
     """The versioned-lake table layout arbitered by sqlite (see module
-    docstring). Constructing it creates the table directory if it is
-    missing; the first ``get`` or ``put_if`` creates the
-    ``_commit.sqlite`` database."""
+    docstring). The first ``put_if``, or the adoption of a files-only
+    table, creates the ``_commit.sqlite`` database."""
 
     def __init__(self, target_path: str, timeout: float = 30.0):
         self.target_path = target_path
-        os.makedirs(target_path, exist_ok=True)
         super().__init__(os.path.join(target_path, TABLE_COMMIT_DB), timeout)
 
     def get(self, key: str) -> tuple[bytes, str] | None:
-        from ad_data_lake_spark import incremental
-
-        got = super().get(key)
-        if got is None:
-            return self._adopt(key)
-        # heal-on-read for the files-AHEAD crash window (writer died
-        # between its file decomposition and the sqlite COMMIT): the
-        # arbiter rolled back but the files name the never-committed
-        # version, so every merge derives a base the arbiter rejects
-        # and retries forever off the same files — the sqlite mirror of
-        # the HTTP backend's wedge (r12 review). Cheap guard first: only
-        # re-project when the files' pointer disagrees with the
-        # arbiter's truth. The projection runs under its own BEGIN
-        # IMMEDIATE so it serializes against writers' decompositions,
-        # and it RE-READS the arbiter state inside that lock (r13 — the
-        # pre-lock SELECT can be one commit BEHIND a writer whose
-        # put_if already decomposed newer files inside its still-open
-        # transaction; projecting the stale snapshot would move the
-        # files BACKWARDS, breaking the strictly-in-commit-order
-        # invariant). A LOCAL failure is best-effort on the read path
-        # (the state is already in hand; the next successful sync
-        # heals) — including SQLITE_BUSY on the BEGIN IMMEDIATE under
-        # writer contention.
-        state = CommitState.from_bytes(got[0])
-        if incremental._current_version(self.target_path) != state.current:
-            try:
-                with self._immediate() as con:
-                    row = con.execute(
-                        "SELECT data FROM objects WHERE key = ?", (key,)
-                    ).fetchone()
-                    if row is not None:
-                        fresh = CommitState.from_bytes(bytes(row[0]))
-                        if (
-                            incremental._current_version(self.target_path)
-                            != fresh.current
-                        ):
-                            incremental._project_state(self.target_path, fresh)
-            except (OSError, sqlite3.OperationalError):
-                pass  # read succeeded; projection heals next sync
-        return got
+        # no database: nothing committed here, unless the table predates
+        # the arbiter; either way opening one would create it
+        got = super().get(key) if os.path.exists(self.db_path) else None
+        return got if got is not None else self._adopt(key)
 
     def _adopt(self, key: str) -> tuple[bytes, str] | None:
         """Seed an absent row from the table's files (see module
-        docstring, "Adoption"); None for a table with no commit yet.
-        The row is re-checked under the write lock, so of N racing
-        adopters one seeds and the rest read its seed."""
-        from ad_data_lake_spark import incremental
-
+        docstring, "Adoption"); None, with no database created, for a
+        directory with no such files. The row is re-checked under the
+        write lock, so of N racing adopters one seeds and the rest read
+        its seed."""
+        current = _file_current(self.target_path)
+        versions = _file_versions(self.target_path)
+        if current is None and not versions:
+            return None
         with self._immediate() as con:
             row = con.execute(
                 "SELECT data, gen FROM objects WHERE key = ?", (key,)
             ).fetchone()
             if row is None:
-                current = incremental._current_version(self.target_path)
-                versions = incremental._version_history(self.target_path)
-                if current is None and not versions:
-                    return None  # fresh table: no commit object yet
                 data = CommitState(
-                    tuple(versions),
-                    current,
-                    incremental._stored_buckets(self.target_path),
+                    tuple(versions), current, _file_buckets(self.target_path)
                 ).to_bytes()
                 con.execute(
                     "INSERT INTO objects (key, data, gen) VALUES (?, ?, 1)",
@@ -239,17 +204,6 @@ class SqliteTableCommitStore(SqliteConditionalStore):
                 )
                 row = (data, 1)
         return bytes(row[0]), str(row[1])
-
-    def _in_transaction(self, key: str, data: bytes) -> None:
-        # decompose the winning state to the table files (the read
-        # projection) while holding the write lock: file writes happen
-        # strictly in commit order, and readers keep resolving _CURRENT
-        # without ever opening the database
-        from ad_data_lake_spark import incremental
-
-        incremental._project_state(
-            self.target_path, CommitState.from_bytes(data)
-        )
 
 
 __all__ = ["SqliteConditionalStore", "SqliteTableCommitStore", "TABLE_COMMIT_DB"]

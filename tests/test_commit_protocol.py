@@ -152,22 +152,27 @@ def test_crashed_first_commit_tail_is_not_a_readable_prior():
 
 
 def test_crashed_first_commit_interleave_on_file_backend(tmp_path):
-    """The same crashed-first-commit state on the FILE layout: a
-    ``_VERSIONS`` log naming a version with no ``_CURRENT`` pointer.
-    The next ``_publish`` must land as the first readable version,
-    report a depth-1 history, and GC the crashed directory (logged →
-    immediately eligible, no grace wait)."""
+    """The same crashed-first-commit state in a table's arbiter: a log
+    naming a version with no pointer (what adopting a table whose
+    first file-era commit crashed yields). The next ``_publish`` must
+    land as the first readable version, report a depth-1 history, and
+    GC the crashed directory (logged → immediately eligible, no grace
+    wait)."""
+    from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
+
     target = str(tmp_path / "crashfirst_t")
-    os.makedirs(target)
-    incremental._write_atomic(target, incremental._LOG, "v-crashed\n")
     os.makedirs(os.path.join(target, "v-crashed"))
     os.makedirs(os.path.join(target, "v-real"))
+    crashed = CommitState(("v-crashed",), None, None)
+    SqliteTableCommitStore(target).put_if(
+        COMMIT_KEY, crashed.to_bytes(), if_none_match=True
+    )
 
-    assert incremental._published_history(target, None) == []
+    assert incremental._state(target).published() == []
     incremental._publish(target, "v-real", base_version=None)
-    current = incremental._current_version(target)
-    assert current == "v-real"
-    assert incremental._published_history(target, current) == ["v-real"]
+    state = incremental._state(target)
+    assert state.current == "v-real"
+    assert state.published() == ["v-real"]
     assert not os.path.isdir(os.path.join(target, "v-crashed"))
     assert os.path.isdir(os.path.join(target, "v-real"))
 
@@ -212,12 +217,13 @@ def test_all_backends_are_equivalent(tmp_path):
     mem = _script(MemoryConditionalStore())
     sql = _script(SqliteConditionalStore(str(tmp_path / "kv.sqlite")))
     starget = str(tmp_path / "sqlite_t")
+    os.makedirs(starget)
     stab = _script(SqliteTableCommitStore(starget))
     assert mem == sql == stab
-    # and the table adapter actually decomposed to the on-disk layout
-    assert incremental._current_version(starget) == "v-0003"
-    assert incremental._version_history(starget) == ["v-0002", "v-0003"]
-    assert incremental._stored_buckets(starget) == 8
+    # and the table's readers see exactly the arbiter's state
+    assert incremental._state(starget) == CommitState(
+        ("v-0002", "v-0003"), "v-0003", 8
+    )
 
 
 def test_sqlite_store_multi_writer_hammer(tmp_path):
@@ -455,25 +461,23 @@ def test_http_client_killed_between_get_and_put_leaves_no_trace():
 
 # ---------------------------------------------------------------------------
 # HTTP TABLE backend (http_store.HttpTableCommitStore): a versioned
-# table whose commits CAS through the S3 wire shape end-to-end, with
-# the local _CURRENT/_VERSIONS files maintained as a read projection —
-# plus the ambiguous-PUT recovery rule real conditional writes need.
+# table whose commit state lives only at the S3-wire endpoint — plus
+# the ambiguous-PUT recovery rule real conditional writes need.
 # ---------------------------------------------------------------------------
 
 
 def test_http_table_store_matches_the_equivalence_script(tmp_path):
-    """The fourth table adapter runs the identical publish script and
-    decomposes the identical on-disk layout — backend swap changes the
-    durability story, not one observable byte."""
+    """The fourth table adapter runs the identical publish script, and
+    the table's readers resolve the identical state from it — backend
+    swap changes the durability story, not one observable byte."""
     from ad_data_lake_spark.http_store import EtagStoreServer, HttpTableCommitStore
 
     target = str(tmp_path / "http_t")
     with EtagStoreServer() as url:
         out = _script(HttpTableCommitStore(target, base_url=url))
+        state = incremental._state(target)
     assert out == _script(MemoryConditionalStore())
-    assert incremental._current_version(target) == "v-0003"
-    assert incremental._version_history(target) == ["v-0002", "v-0003"]
-    assert incremental._stored_buckets(target) == 8
+    assert state == CommitState(("v-0002", "v-0003"), "v-0003", 8)
 
 
 def test_http_table_marker_routes_commit_store(tmp_path):
@@ -495,7 +499,7 @@ def test_http_table_marker_routes_commit_store(tmp_path):
         again = incremental._commit_store(target)
         res = cas_publish(again, "v-0002", base_version="v-0001")
         assert list(res.kept) == ["v-0001", "v-0002"]
-        assert incremental._current_version(target) == "v-0002"
+        assert incremental._state(target).current == "v-0002"
 
 
 def test_http_put_recovery_response_lost_after_commit():
@@ -647,8 +651,8 @@ def test_http_periodic_landed_drop_mode_recovers_exactly_once():
 
 def test_http_table_ambiguous_put_inside_cas_publish(tmp_path):
     """The recovery rule composed with the protocol: a publish whose
-    winning PUT's response is lost still completes, returns the landed
-    state, and the file projection catches up."""
+    winning PUT's response is lost still completes, and the table's
+    readers see the landed state."""
     from ad_data_lake_spark.http_store import EtagStoreServer, HttpTableCommitStore
 
     target = str(tmp_path / "amb_t")
@@ -658,68 +662,17 @@ def test_http_table_ambiguous_put_inside_cas_publish(tmp_path):
         cas_publish(store, "v-0001")
         srv.inject_put_fault("after_commit")
         res = cas_publish(store, "v-0002", base_version="v-0001")
-        state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
+        state = incremental._state(target)
     assert list(res.kept) == ["v-0001", "v-0002"]
     assert state.current == "v-0002"
-    assert incremental._current_version(target) == "v-0002"
-
-
-def test_http_table_projection_behind_arbiter_self_heals(tmp_path):
-    """The backend's crash window, exercised: a writer that dies
-    between its winning PUT and the file projection leaves the files
-    one commit BEHIND the arbiter (stale but consistent — the mirror
-    of sqlite's files-ahead window). The next successful publish's
-    projection catches the files up to the arbiter's state."""
-    from ad_data_lake_spark.http_store import (
-        EtagStoreServer,
-        HttpConditionalStore,
-        HttpTableCommitStore,
-    )
-
-    target = str(tmp_path / "heal_t")
-    with EtagStoreServer() as url:
-        store = HttpTableCommitStore(target, base_url=url)
-        cas_publish(store, "v-0001")
-        assert incremental._current_version(target) == "v-0001"
-        # crashed writer: lands v-0002 at the arbiter directly (the
-        # PUT succeeded), dies before _sync_projection runs
-        raw = HttpConditionalStore(url)
-        data, etag = raw.get(store._table_key)
-        state = CommitState.from_bytes(data)
-        crashed = CommitState(
-            state.versions + ("v-0002",), "v-0002", state.n_buckets
-        )
-        raw.put_if(store._table_key, crashed.to_bytes(), if_match=etag)
-        # files are now BEHIND the arbiter — stale but consistent
-        assert incremental._current_version(target) == "v-0001"
-        # the REAL writer path derives its base from the FILES (as
-        # merge_upsert does). First attempt: stale base -> CAS reject
-        # — but the publish's opening GET heals the projection, so the
-        # retry reads the true current from the files and lands.
-        # (Without heal-on-read this loop never converges: every retry
-        # re-reads the same stale files — the wedge the r12 review
-        # found.)
-        for _attempt in range(incremental.MERGE_MAX_ATTEMPTS):
-            base = incremental._current_version(target)
-            try:
-                res = cas_publish(store, "v-0003", base_version=base)
-                break
-            except ConcurrentWriteError:
-                continue
-        else:
-            raise AssertionError("merge-style retry never converged")
-        assert _attempt == 1  # exactly one CAS reject, then healed
-    assert list(res.kept) == ["v-0001", "v-0002", "v-0003"]
-    assert incremental._current_version(target) == "v-0003"
-    assert incremental._version_history(target)[-2:] == ["v-0002", "v-0003"]
 
 
 def test_http_table_cross_process_churn(tmp_path):
     """4 writer PROCESSES x 5 publishes each against one endpoint and
     ONE table directory — every writer resolves the arbiter from the
-    marker alone (incremental._commit_store), retries on
-    ConcurrentWriteError, and the concurrent file projections (local
-    flock, project-from-GET) end at the arbiter's final state."""
+    marker alone (incremental._commit_store), takes its base from
+    incremental._state as a merge does, retries on
+    ConcurrentWriteError, and every commit lands exactly once."""
     import subprocess
     import sys
     import textwrap
@@ -733,13 +686,13 @@ def test_http_table_cross_process_churn(tmp_path):
         sys.path.insert(0, {repo!r})
         from ad_data_lake_spark import incremental
         from ad_data_lake_spark.commit_protocol import (
-            COMMIT_KEY, CommitState, ConcurrentWriteError, cas_publish)
+            ConcurrentWriteError, cas_publish)
         target, wid = sys.argv[1], sys.argv[2]
         store = incremental._commit_store(target)
         for i in range(5):
             while True:
-                got = store.get(COMMIT_KEY)
-                base = CommitState.from_bytes(got[0]).current if got else None
+                state = incremental._state(target)
+                base = state.current if state else None
                 try:
                     cas_publish(store, f"v-p{{wid}}i{{i}}",
                                 base_version=base, retain=100)
@@ -758,80 +711,10 @@ def test_http_table_cross_process_churn(tmp_path):
         for p in procs:
             assert p.wait(timeout=120) == 0
         state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
-        # the projection (last writer's sync) matches the arbiter
-        store._sync_projection()
     assert len(state.versions) == 20
     assert len(set(state.versions)) == 20
     assert state.current == state.versions[-1]
-    assert incremental._current_version(target) == state.current
-    assert incremental._version_history(target) == list(state.published())
-
-
-def test_sqlite_table_files_ahead_of_arbiter_self_heals(tmp_path):
-    """The sqlite mirror of the HTTP wedge (r12 review): a writer dying
-    between its file decomposition and the sqlite COMMIT leaves the
-    files one commit AHEAD of the arbiter. Merges derive their CAS base
-    from the FILES, so without heal-on-read every retry re-reads the
-    never-committed version and the table wedges. get() must re-project
-    the arbiter's truth so the merge-style retry converges."""
-    from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
-
-    target = str(tmp_path / "ahead_t")
-    store = SqliteTableCommitStore(target)
-    cas_publish(store, "v-0001")
-    # crashed writer: decomposed its files for v-0002, died before
-    # COMMIT — sqlite rolled back, files point at the orphan version
-    phantom = CommitState(("v-0001", "v-0002"), "v-0002", None)
-    incremental._project_state(target, phantom)
-    assert incremental._current_version(target) == "v-0002"
-    # merge-style loop: base from FILES each attempt
-    for attempt in range(incremental.MERGE_MAX_ATTEMPTS):
-        base = incremental._current_version(target)
-        try:
-            res = cas_publish(store, "v-0003", base_version=base)
-            break
-        except ConcurrentWriteError:
-            continue
-    else:
-        raise AssertionError("merge-style retry never converged")
-    assert attempt == 1  # one CAS reject (healed files), then lands
-    assert incremental._current_version(target) == "v-0003"
-    assert incremental._version_history(target) == ["v-0001", "v-0003"]
-
-
-def test_sqlite_heal_projects_fresh_state_not_prelock_snapshot(
-    tmp_path, monkeypatch
-):
-    """r13 advice (medium): the heal-on-read must re-read the arbiter
-    state INSIDE its BEGIN IMMEDIATE and project THAT, not the pre-lock
-    SELECT's snapshot. A reader whose SELECT captured V1 while a
-    concurrent writer was committing V2 (files already decomposed to V2
-    inside the writer's still-open transaction) must not project V1
-    over the newer files — that projection would move the files
-    BACKWARDS, breaking 'files advance strictly in commit order'."""
-    from ad_data_lake_spark.sqlite_store import (
-        SqliteConditionalStore,
-        SqliteTableCommitStore,
-    )
-
-    target = str(tmp_path / "fresh_t")
-    store = SqliteTableCommitStore(target)
-    cas_publish(store, "v-0001")
-    stale = SqliteConditionalStore.get(store, COMMIT_KEY)  # V1 snapshot
-    cas_publish(store, "v-0002")  # arbiter AND files now at V2
-    assert incremental._current_version(target) == "v-0002"
-
-    # Replay the race window: the reader's pre-lock SELECT returned the
-    # V1 snapshot even though arbiter + files have moved to V2.
-    monkeypatch.setattr(
-        SqliteConditionalStore, "get", lambda self, key: stale
-    )
-    got = store.get(COMMIT_KEY)
-    assert got == stale  # the read returns its consistent snapshot...
-    # ...but the heal projected the FRESH in-lock state (a no-op here),
-    # never the stale snapshot:
-    assert incremental._current_version(target) == "v-0002"
-    assert incremental._version_history(target) == ["v-0001", "v-0002"]
+    assert state.published() == list(state.versions)
 
 
 def test_cas_no_unbounded_starvation_under_contention():
@@ -893,7 +776,8 @@ def test_cas_no_unbounded_starvation_under_contention():
 def test_sqlite_publish_opens_two_connections(tmp_path, monkeypatch):
     """A steady-state publish on a sqlite-arbitered table opens one
     connection for ``get`` and one for ``put_if``; constructing the
-    store opens none."""
+    store opens none. A whole merge adds one read for its base version
+    (pinned in tests/test_lake.py)."""
     import sqlite3
 
     target = str(tmp_path / "conn_t")
@@ -911,4 +795,4 @@ def test_sqlite_publish_opens_two_connections(tmp_path, monkeypatch):
     monkeypatch.setattr(sqlite3, "connect", counting_connect)
     incremental._publish(target, "v-2", base_version="v-1")
     assert len(opened) == 2, opened
-    assert incremental._current_version(target) == "v-2"
+    assert incremental._state(target).current == "v-2"

@@ -27,6 +27,24 @@ def events(spark):
     return load_table(spark, "events", SF_SMOKE)
 
 
+def _plant_state(target: str, state) -> None:
+    """Overwrite a table's commit state at its sqlite arbiter."""
+    from ad_data_lake_spark.commit_protocol import COMMIT_KEY
+    from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
+
+    store = SqliteTableCommitStore(target)
+    got = store.get(COMMIT_KEY)
+    if got is None:
+        store.put_if(COMMIT_KEY, state.to_bytes(), if_none_match=True)
+    else:
+        store.put_if(COMMIT_KEY, state.to_bytes(), if_match=got[1])
+
+
+def _write_file(target: str, name: str, content: str) -> None:
+    with open(os.path.join(target, name), "w") as f:
+        f.write(content)
+
+
 def _table_hash(df) -> int:
     # order-insensitive, overflow-free content hash (ANSI mode rejects
     # a sum() of xxhash64 longs)
@@ -86,13 +104,15 @@ def test_sqlite_arbitered_table_full_merge_surface(spark, events, tmp_path):
     """A table whose commits are arbitered by the sqlite store (its
     database created before the first merge) must carry the WHOLE
     versioned-lake surface unchanged: idempotent last-wins MERGE,
-    pointer-resolving reads, time travel, vacuum — readers and GC only
-    ever see the decomposed files, publishes only ever go through
-    sqlite's conditional-put."""
-    from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
+    pointer-resolving reads, time travel, vacuum — readers, GC and
+    publishes all go through sqlite."""
+    from ad_data_lake_spark.commit_protocol import COMMIT_KEY
+    from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB, SqliteConditionalStore
 
     path = str(tmp_path / "sqlite_silver")
-    SqliteTableCommitStore(path)  # plant the arbiter before first merge
+    os.makedirs(path)
+    # plant the (empty) arbiter database before the first merge
+    SqliteConditionalStore(os.path.join(path, TABLE_COMMIT_DB)).get(COMMIT_KEY)
     base = events.select("event_id", "ts", "user_id", "event_type", "value")
     incremental.merge_upsert(spark, path, base, "event_id", "ts", "value")
     h0 = _table_hash(incremental.read_merged(spark, path))
@@ -111,7 +131,7 @@ def test_sqlite_arbitered_table_full_merge_surface(spark, events, tmp_path):
     # idempotency on the sqlite arbiter
     incremental.merge_upsert(spark, path, updates, "event_id", "ts", "value")
     assert _table_hash(incremental.read_merged(spark, path)) == h1
-    # time travel still resolves through the decomposed log
+    # time travel resolves through the arbiter's log
     assert _table_hash(incremental.read_previous(spark, path)) == h1
     assert (
         _table_hash(incremental.read_version(spark, path, steps_back=2)) == h0
@@ -135,9 +155,9 @@ def test_merge_rewrites_only_touched_buckets(spark, events, tmp_path):
         .withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
         .withColumn("value", F.lit(777.0))
     )
-    v_old = incremental._current_version(path)
+    v_old = incremental._state(path).current
     incremental.merge_upsert(spark, path, one, "event_id", "ts", "value")
-    v_new = incremental._current_version(path)
+    v_new = incremental._state(path).current
     assert v_new != v_old
 
     key_row = one.select("event_id").collect()[0]
@@ -231,12 +251,11 @@ def _dir_snapshot(path):
 
 def test_merge_into_plain_directory_is_rejected(spark, events, tmp_path):
     """The versioned layout is the only one a merge writes. A plain
-    parquet directory (no _CURRENT) is refused by merge_upsert,
+    parquet directory (no commit state) is refused by merge_upsert,
     cdc_apply and SQL MERGE INTO before anything is written: its files
-    and bytes stay as they were and no pointer or arbiter database
-    appears. read_merged refuses it too. A versioned table that lost
-    its _BUCKETS file refuses a merge and names the file, instead of
-    guessing a bucket count."""
+    and bytes stay as they were and no arbiter database appears.
+    read_merged refuses it too. A versioned table whose commit state
+    records no bucket count refuses a merge, instead of guessing one."""
     from ad_data_lake_spark.sql import execute
     from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB
 
@@ -268,15 +287,15 @@ def test_merge_into_plain_directory_is_rejected(spark, events, tmp_path):
         with pytest.raises(ValueError, match="sinks.read_lake"):
             attempt()
         assert _dir_snapshot(path) == before
-        assert not os.path.exists(os.path.join(path, incremental._PTR))
         assert not os.path.exists(os.path.join(path, TABLE_COMMIT_DB))
     with pytest.raises(ValueError, match="not a versioned"):
         incremental.read_merged(spark, path)
 
     table = str(tmp_path / "lost_buckets_t")
     incremental.merge_upsert(spark, table, base, "event_id", "ts", "value")
-    os.remove(os.path.join(table, incremental._NB))
-    with pytest.raises(ValueError, match=incremental._NB):
+    state = incremental._state(table)
+    _plant_state(table, incremental.CommitState(state.versions, state.current, None))
+    with pytest.raises(ValueError, match="no bucket count"):
         incremental.merge_upsert(spark, table, updates, "event_id", "ts", "value")
 
 
@@ -735,7 +754,7 @@ def test_merge_bucket_count_scales_and_persists(spark, events, tmp_path):
     count."""
     from ad_data_lake_spark.incremental import (
         N_MERGE_BUCKETS,
-        _stored_buckets,
+        _state,
         buckets_for_bytes,
         merge_upsert,
         read_merged,
@@ -754,10 +773,10 @@ def test_merge_bucket_count_scales_and_persists(spark, events, tmp_path):
     target = str(tmp_path / "scaled_table")
     base = events.select("event_id", "ts", "value")
     merge_upsert(spark, target, base, "event_id", "ts", "value", n_buckets=16)
-    assert _stored_buckets(target) == 16
+    assert _state(target).n_buckets == 16
     # default resolution must honor the stored layout, not re-derive
     merge_upsert(spark, target, base.limit(10), "event_id", "ts", "value")
-    assert _stored_buckets(target) == 16
+    assert _state(target).n_buckets == 16
     assert read_merged(spark, target).count() == base.dropDuplicates(["event_id"]).count()
 
 
@@ -937,22 +956,18 @@ def test_time_travel_depth_and_orphan_robustness(spark, events, tmp_path):
 
 
 def test_crashed_merge_log_tail_never_resolves_as_prior(spark, events, tmp_path):
-    """Crash-consistency contract: a merge that appended its version to
-    ``_VERSIONS`` but died BEFORE flipping ``_CURRENT`` leaves an
-    unpointed log tail. That tail must never resolve as 'previous'
-    (it was never current), vacuum must GC it rather than retain it,
-    and the next publish must drop it from the log. Also pins the
-    ``steps_back >= 0`` ValueError contract.
-
-    The sqlite arbiter never logged the crashed writer's version (it
-    died before COMMIT; only the files name it), so its directory is a
-    never-logged orphan that GC reclaims only past the grace window —
-    each scenario ages it past ``ORPHAN_GRACE_SECONDS`` first."""
+    """Crash-consistency contract: a commit state whose log names a
+    version past its pointer (what adopting a table whose file-era
+    merge died between its log append and its pointer flip yields)
+    holds an unpointed log tail. That tail must never resolve as
+    'previous' (it was never current), vacuum must GC it rather than
+    retain it, and the next publish must drop it from the log. Also
+    pins the ``steps_back >= 0`` ValueError contract. The tail is
+    logged, so GC reclaims its directory without the grace wait."""
     import pytest as _pytest
 
     from ad_data_lake_spark.incremental import (
-        _LOG,
-        ORPHAN_GRACE_SECONDS,
+        _state,
         merge_upsert,
         read_merged,
         read_version,
@@ -972,12 +987,18 @@ def test_crashed_merge_log_tail_never_resolves_as_prior(spark, events, tmp_path)
     merge_upsert(spark, target, upd, "event_id", "ts", "value")
     h1 = _table_hash(read_merged(spark, target))
 
-    # simulate the crash: log appended + data dir written, pointer NOT
-    # flipped (the exact interleaving _publish's write order allows)
+    # the crash: data dir written and logged, pointer NOT moved
     orphan = "v-ffffdead"
-    os.makedirs(os.path.join(target, orphan))
-    with open(os.path.join(target, _LOG), "a") as f:
-        f.write(orphan + "\n")
+
+    def plant_tail() -> None:
+        os.makedirs(os.path.join(target, orphan))
+        st = _state(target)
+        _plant_state(
+            target,
+            incremental.CommitState(st.versions + (orphan,), st.current, st.n_buckets),
+        )
+
+    plant_tail()
 
     with _pytest.raises(ValueError):
         read_version(spark, target, steps_back=-1)
@@ -986,23 +1007,16 @@ def test_crashed_merge_log_tail_never_resolves_as_prior(spark, events, tmp_path)
     assert _table_hash(read_version(spark, target, 0)) == h1
     assert _table_hash(read_version(spark, target, 1)) == h0
 
-    aged = time.time() - ORPHAN_GRACE_SECONDS - 60
-    os.utime(os.path.join(target, orphan), (aged, aged))
     removed = vacuum(target, retain=2)
     assert orphan in removed, "vacuum must GC the unpointed tail"
     assert not os.path.isdir(os.path.join(target, orphan))
-    with open(os.path.join(target, _LOG)) as f:
-        assert orphan not in f.read()
+    assert orphan not in _state(target).versions
     assert _table_hash(read_version(spark, target, 1)) == h0  # prior intact
 
     # same scenario resolved by the NEXT publish instead of vacuum
-    os.makedirs(os.path.join(target, orphan))
-    with open(os.path.join(target, _LOG), "a") as f:
-        f.write(orphan + "\n")
-    os.utime(os.path.join(target, orphan), (aged, aged))
+    plant_tail()
     merge_upsert(spark, target, upd, "event_id", "ts", "value")
-    with open(os.path.join(target, _LOG)) as f:
-        assert orphan not in f.read()
+    assert orphan not in _state(target).versions
     assert not os.path.isdir(os.path.join(target, orphan))
     assert _table_hash(read_version(spark, target, 1)) == h1
 
@@ -1142,7 +1156,7 @@ def test_dead_first_merge_leftover_is_not_legacy_data(spark, events, tmp_path):
         "event_id", F.lit(10**12)
     )
     incremental.merge_upsert(spark, target, new, "event_id", "ts", "value")
-    assert os.path.exists(os.path.join(target, incremental._PTR))
+    assert incremental._state(target).current is not None
     got = incremental.read_merged(spark, target).collect()
     assert [r.event_id for r in got] == [10**12]
     assert "_mb" not in incremental.read_merged(spark, target).columns
@@ -1150,13 +1164,13 @@ def test_dead_first_merge_leftover_is_not_legacy_data(spark, events, tmp_path):
 
 
 def test_publish_cas_rejects_stale_base(spark, events, tmp_path):
-    """_publish with a base_version that no longer matches _CURRENT
-    must raise ConcurrentWriteError (and leave the table untouched);
+    """_publish with a base_version that is no longer current must
+    raise ConcurrentWriteError (and leave the table untouched);
     with the matching base it commits."""
     target = str(tmp_path / "cas_t")
     base = _ev_base(events)
     incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
-    current = incremental._current_version(target)
+    current = incremental._state(target).current
     h0 = _table_hash(incremental.read_merged(spark, target))
 
     stale_dir = os.path.join(target, "v-57a1ebad")
@@ -1164,7 +1178,7 @@ def test_publish_cas_rejects_stale_base(spark, events, tmp_path):
     with pytest.raises(incremental.ConcurrentWriteError):
         incremental._publish(target, "v-57a1ebad", base_version="v-other")
     # pointer and data untouched by the failed commit
-    assert incremental._current_version(target) == current
+    assert incremental._state(target).current == current
     assert _table_hash(incremental.read_merged(spark, target)) == h0
     # the same commit with the TRUE base succeeds (dir has no parquet,
     # so only check the pointer moved)
@@ -1172,7 +1186,7 @@ def test_publish_cas_rejects_stale_base(spark, events, tmp_path):
         stale_dir, incremental.read_merged(spark, target).schema
     )
     incremental._publish(target, "v-57a1ebad", base_version=current)
-    assert incremental._current_version(target) == "v-57a1ebad"
+    assert incremental._state(target).current == "v-57a1ebad"
 
 
 def test_interleaved_merges_no_lost_update(spark, events, tmp_path, monkeypatch):
@@ -1212,10 +1226,7 @@ def test_interleaved_merges_no_lost_update(spark, events, tmp_path, monkeypatch)
         assert rows[eid] == pytest.approx(want), f"event {eid}: lost update"
     # and the retry consumed exactly one extra version: history is
     # v0 -> B -> A(retried)
-    hist = incremental._published_history(
-        target, incremental._current_version(target)
-    )
-    assert len(hist) == 3
+    assert len(incremental._state(target).published()) == 3
 
 
 def test_threaded_concurrent_merges_both_land(spark, events, tmp_path):
@@ -1281,19 +1292,20 @@ def test_orphan_gc_is_age_gated_for_unlogged_dirs(spark, events, tmp_path):
 
 
 def test_remove_versions_rechecks_liveness_per_directory(tmp_path):
-    """GC re-reads the live log immediately before EACH rmtree, not
-    once up front: a version that becomes live between two removals of
-    the same doomed batch must be spared. Simulated by publishing a
-    doomed name back into the log from inside the first rmtree (the
-    narrowest interleave the per-directory recheck closes)."""
+    """GC re-reads the arbiter's live log immediately before EACH
+    rmtree, not once up front: a version that becomes live between two
+    removals of the same doomed batch must be spared. Simulated by
+    publishing a doomed name back into the log from inside the first
+    rmtree (the narrowest interleave the per-directory recheck
+    closes)."""
     import shutil as _shutil
 
+    from ad_data_lake_spark.commit_protocol import CommitState
+
     target = str(tmp_path / "gc_recheck_t")
-    os.makedirs(target)
-    incremental._write_atomic(target, incremental._PTR, "v-live")
-    incremental._write_atomic(target, incremental._LOG, "v-live\n")
     for d in ("v-live", "v-doom1", "v-doom2"):
         os.makedirs(os.path.join(target, d))
+    _plant_state(target, CommitState(("v-live",), "v-live", 8))
 
     real_rmtree = _shutil.rmtree
     fired = {"done": False}
@@ -1303,10 +1315,9 @@ def test_remove_versions_rechecks_liveness_per_directory(tmp_path):
             fired["done"] = True
             # a concurrent publish lands v-doom2 while v-doom1 is
             # being removed: the per-dir recheck must spare it
-            incremental._write_atomic(
-                target, incremental._LOG, "v-live\nv-doom2\n"
+            _plant_state(
+                target, CommitState(("v-live", "v-doom2"), "v-doom2", 8)
             )
-            incremental._write_atomic(target, incremental._PTR, "v-doom2")
         return real_rmtree(path, **kwargs)
 
     _shutil.rmtree = hooked
@@ -1323,35 +1334,120 @@ def test_files_only_table_is_adopted_by_sqlite(tmp_path):
     """A table whose commit state exists only as files (no database;
     e.g. written before sqlite was its arbiter) is adopted on its first
     commit: the seeded row carries the files' log, pointer and bucket
-    count, so the base-checked publish lands instead of CAS-failing.
-    vacuum on a directory that is not a versioned table raises without
-    creating an arbiter database there."""
+    count, so the base-checked publish lands instead of CAS-failing."""
     from ad_data_lake_spark.commit_protocol import COMMIT_KEY, CommitState
-    from ad_data_lake_spark.sqlite_store import (
-        TABLE_COMMIT_DB,
-        SqliteTableCommitStore,
-    )
+    from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
 
     target = str(tmp_path / "files_only_t")
     os.makedirs(target)
     for v in ("v-0001", "v-0002", "v-0003"):
         os.makedirs(os.path.join(target, v))
-    incremental._write_atomic(target, incremental._NB, "16")
-    incremental._write_atomic(target, incremental._LOG, "v-0001\nv-0002\n")
-    incremental._write_atomic(target, incremental._PTR, "v-0002")
+    _write_file(target, "_BUCKETS", "16")
+    _write_file(target, "_VERSIONS", "v-0001\nv-0002\n")
+    _write_file(target, "_CURRENT", "v-0002")
 
     incremental._publish(target, "v-0003", base_version="v-0002")
     state = CommitState.from_bytes(
         SqliteTableCommitStore(target).get(COMMIT_KEY)[0]
     )
     assert state == CommitState(("v-0001", "v-0002", "v-0003"), "v-0003", 16)
-    assert incremental._current_version(target) == "v-0003"
+    assert incremental._state(target) == state
+    # the adopted files are inert: nothing rewrites them
+    with open(os.path.join(target, "_CURRENT")) as f:
+        assert f.read() == "v-0002"
+
+
+_STATE_FILES = ("_CURRENT", "_VERSIONS", "_BUCKETS")
+
+
+def test_merges_leave_no_commit_state_files(spark, events, tmp_path):
+    """The arbiter is the only record of a table's commit state: merges
+    on a sqlite table and on an HTTP table write no pointer, log or
+    bucket-count file into the table directory."""
+    from ad_data_lake_spark.http_store import EtagStoreServer, HttpTableCommitStore
+
+    base = _ev_base(events)
+    sq = str(tmp_path / "sqlite_t")
+    ht = str(tmp_path / "http_t")
+    with EtagStoreServer() as url:
+        HttpTableCommitStore(ht, base_url=url)
+        for target in (sq, ht):
+            incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
+            incremental.merge_upsert(
+                spark, target, _ev_upd(base, 0, 1), "event_id", "ts", "value"
+            )
+            assert len(incremental._state(target).published()) == 2
+            assert not set(_STATE_FILES) & set(os.listdir(target)), target
+
+
+def test_stray_commit_state_files_change_no_read_or_merge(spark, events, tmp_path):
+    """Garbage ``_CURRENT``/``_VERSIONS``/``_BUCKETS`` files beside a
+    live arbiter row are never read: reads, time travel and merges
+    resolve the arbiter's state alone, so the files-ahead and
+    files-behind wedges cannot happen."""
+    target = str(tmp_path / "stray_t")
+    base = _ev_base(events)
+    incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
+    h0 = _table_hash(incremental.read_merged(spark, target))
+    n_buckets = incremental._state(target).n_buckets
+    for name, junk in zip(_STATE_FILES, ("v-nosuchdir", "v-a\nv-nosuchdir\n", "3")):
+        _write_file(target, name, junk)
+
+    assert _table_hash(incremental.read_merged(spark, target)) == h0
+    incremental.merge_upsert(
+        spark, target, _ev_upd(base, 0, 100), "event_id", "ts", "value"
+    )
+    assert _table_hash(incremental.read_version(spark, target, 1)) == h0
+    state = incremental._state(target)
+    assert state.n_buckets == n_buckets != 3
+    assert len(state.published()) == 2
+
+
+def test_reads_of_plain_or_missing_directory_create_no_database(spark, events, tmp_path):
+    """read_merged, read_version and vacuum on a plain parquet directory
+    or a missing path raise ValueError and create no arbiter database
+    (and no directory)."""
+    from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB
 
     plain = str(tmp_path / "plain_t")
-    os.makedirs(plain)
-    with pytest.raises(ValueError):
-        incremental.vacuum(plain)
-    assert not os.path.exists(os.path.join(plain, TABLE_COMMIT_DB))
+    events.limit(5).write.parquet(plain)
+    missing = str(tmp_path / "missing_t")
+    for path in (plain, missing):
+        for call in (
+            lambda: incremental.read_merged(spark, path),
+            lambda: incremental.read_version(spark, path, 1),
+            lambda: incremental.vacuum(path),
+        ):
+            with pytest.raises(ValueError, match="not a versioned"):
+                call()
+        assert not os.path.exists(os.path.join(path, TABLE_COMMIT_DB))
+    assert not os.path.exists(missing)
+
+
+def test_sqlite_merge_opens_three_connections(spark, events, tmp_path, monkeypatch):
+    """A steady-state merge on a sqlite table opens three connections:
+    one to read its base version and bucket count, then the publish's
+    ``get`` and ``put_if``. (A merge that retires versions past the
+    retention window adds one read per directory it removes.)"""
+    import sqlite3
+
+    target = str(tmp_path / "conn_t")
+    base = _ev_base(events)
+    incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
+
+    opened = []
+    real_connect = sqlite3.connect
+
+    def counting_connect(*args, **kwargs):
+        opened.append(args[0] if args else kwargs.get("database"))
+        return real_connect(*args, **kwargs)
+
+    monkeypatch.setattr(sqlite3, "connect", counting_connect)
+    incremental.merge_upsert(
+        spark, target, _ev_upd(base, 0, 1), "event_id", "ts", "value"
+    )
+    assert len(opened) == 3, opened
+    assert len(incremental._state(target).published()) == 2
 
 
 @pytest.mark.parametrize("backend", ["adopted", "sqlite"])
@@ -1375,13 +1471,10 @@ def test_publish_cas_across_processes(tmp_path, backend):
     os.makedirs(target)
     os.makedirs(os.path.join(target, "v-seed0000"))
     if backend == "sqlite":
-        from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
-
-        SqliteTableCommitStore(target)  # create the arbiter's database
         incremental._publish(target, "v-seed0000", base_version=None)
     else:
-        incremental._write_atomic(target, incremental._PTR, "v-seed0000")
-        incremental._write_atomic(target, incremental._LOG, "v-seed0000\n")
+        _write_file(target, "_CURRENT", "v-seed0000")
+        _write_file(target, "_VERSIONS", "v-seed0000\n")
         from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB
 
         assert not os.path.exists(os.path.join(target, TABLE_COMMIT_DB))
@@ -1396,7 +1489,7 @@ def test_publish_cas_across_processes(tmp_path, backend):
             name = f"v-w{{wid}}n{{i}}"
             os.makedirs(os.path.join(target, name), exist_ok=True)
             for attempt in range(50):
-                base = inc._current_version(target)
+                base = inc._state(target).current
                 try:
                     inc._publish(target, name, base_version=base)
                     break
@@ -1420,18 +1513,10 @@ def test_publish_cas_across_processes(tmp_path, backend):
         assert p.returncode == 0, err.decode()[-500:]
         assert out.strip() == b"ok"
 
-    current = incremental._current_version(target)
-    history = incremental._published_history(target, current)
-    assert history[-1] == current
+    state = incremental._state(target)
+    history = state.published()
+    assert history[-1] == state.current
     assert len(history) == min(20 + 1, incremental.RETAIN_VERSIONS)
-    # the sqlite arbiter's canonical state agrees with the decomposed files
-    from ad_data_lake_spark.commit_protocol import COMMIT_KEY, CommitState
-    from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
-
-    state = CommitState.from_bytes(
-        SqliteTableCommitStore(target).get(COMMIT_KEY)[0]
-    )
-    assert state.current == current
     assert list(state.versions) == history
     # every retained version's directory exists (nothing GC'd wrongly)
     for v in history:

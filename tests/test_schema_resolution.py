@@ -176,7 +176,7 @@ def test_version_without_stored_schema_raises_naming_the_path(spark, base, tmp_p
     target = str(tmp_path / "t")
     incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
     path = os.path.join(
-        target, incremental._current_version(target), incremental._SCHEMA_FILE
+        target, incremental._state(target).current, incremental._SCHEMA_FILE
     )
     os.remove(path)
     with pytest.raises(ValueError, match=re.escape(path)):
@@ -193,7 +193,7 @@ def test_bucket_type_disagreeing_with_stored_schema_fails_loudly(spark, base, tm
 
     target = str(tmp_path / "t")
     incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
-    vdir = os.path.join(target, incremental._current_version(target))
+    vdir = os.path.join(target, incremental._state(target).current)
     stored = incremental._stored_schema(vdir)
     wrong = StructType(
         [
@@ -216,7 +216,7 @@ def test_merge_into_absent_buckets_keeps_stored_columns(spark, base, tmp_path):
     target = str(tmp_path / "t")
     two = base.orderBy("event_id").limit(2).withColumn("status", F.lit("old"))
     incremental.merge_upsert(spark, target, two, "event_id", "ts", "value", n_buckets=8)
-    vdir = os.path.join(target, incremental._current_version(target))
+    vdir = os.path.join(target, incremental._state(target).current)
     present = {int(d.split("=", 1)[1]) for d in os.listdir(vdir) if d.startswith("_mb=")}
     probe = spark.range(1000, 1200).withColumn(
         "b", incremental._bucket_expr("id", 8)
@@ -229,3 +229,21 @@ def test_merge_into_absent_buckets_keeps_stored_columns(spark, base, tmp_path):
     assert len(got) == 3
     assert got[fresh_key] is None
     assert sorted(v for v in got.values() if v is not None) == ["old", "old"]
+
+
+def test_lake_stats_flags_columns_missing_from_stored_schema(spark, base, tmp_path):
+    """A version whose ``_SCHEMA.json`` lacks a column its bucket files
+    carry (what an earlier release's merge into absent buckets could
+    leave) reads without that column; ``lake_stats`` names it in
+    ``schema_gaps`` from the footers, without a Spark job."""
+    target = str(tmp_path / "t")
+    wide = base.withColumn("status", F.lit("old"))
+    incremental.merge_upsert(spark, target, wide, "event_id", "ts", "value")
+    assert incremental.lake_stats(target)["schema_gaps"] == []
+
+    vdir = os.path.join(target, incremental._state(target).current)
+    incremental._save_schema(vdir, base.schema)  # drop "status" from it
+    assert "status" not in incremental.read_merged(spark, target).columns
+    stats, jobs = _jobs(spark, lambda: incremental.lake_stats(target))
+    assert jobs == 0
+    assert stats["schema_gaps"] == ["status"]
