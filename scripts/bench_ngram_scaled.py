@@ -12,9 +12,8 @@ says nothing about the operator at 100 TB.
 This script measures the operator the way a scaled deployment runs
 it: ``mod`` grows with the corpus (mod = 50·rep), holding
 candidates-per-doc CONSTANT — the same discipline as scaling shuffle
-partitions with data. Linear wall-clock here is the scale evidence;
-the fixed-mod registry row is additionally timed at each rep as the
-what-if-you-don't contrast (skipped past its time budget).
+partitions with data. Linear wall-clock here is the scale evidence.
+Each rep is timed by ``bench.min_walls``; the row counts the pairs.
 
 Usage: python scripts/bench_ngram_scaled.py [rep ...]  (default 10 30 100)
 """
@@ -23,12 +22,12 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import min_walls  # noqa: E402
 from scripts.bench_scale import build_fixture  # noqa: E402
 
 BASE_MOD = 50  # the registry row's mod at sf0.1
@@ -45,30 +44,18 @@ def main() -> None:
     spark = get_spark("bench-ngram-scaled")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def mat(df):
-        df.write.format("noop").mode("overwrite").save()
-
     results = []
     for rep in reps:
         sf_dir = build_fixture(rep)
         sf = round(0.1 * rep, 4)
         corpus = load_table(spark, "documents", sf_dir).select("doc_id", "text")
         mod = BASE_MOD * rep
-
-        def run(m):
-            df = ngram_jaccard_pairs(corpus, mod=m)
-            mat(df.select(F.count("*")))
-
-        run(mod)  # warm
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            run(mod)
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        results.append({"sf": sf, "mod": mod, "wall_sec": round(best, 2)})
+        wall = min_walls(
+            spark, {"pairs": lambda: ngram_jaccard_pairs(corpus, mod=mod).select(F.count("*"))}
+        )["pairs"]
+        results.append({"sf": sf, "mod": mod, "wall_sec": wall})
         print(
-            f"sf{sf}: mod={mod} (constant candidates/doc) wall={best:.2f}s",
+            f"sf{sf}: mod={mod} (constant candidates/doc) wall={wall}s",
             file=sys.stderr,
             flush=True,
         )

@@ -18,9 +18,9 @@ script builds that scale:
   split (benchmark_mod, dataset splits, query_mod) keeps its sf0.1
   proportions. Both engines read the SAME files, so the ratio is
   apples-to-apples whatever the generator's quirks.
-- Timing: identical discipline to bench.py / fill_baseline.py — noop
-  sink for Spark, fetchall for DuckDB, warm pass discarded, min of two
-  timed passes.
+- Timing: ``bench.min_walls`` for Spark (noop sink, warm pass
+  discarded, min of two timed passes); ``duckdb_timings`` below for
+  DuckDB (fetchall, same passes, in a spawned child process).
 
 Usage: python scripts/bench_scale.py [--rep 10] [--queries a,b,c]
 Prints one JSON line; paste the table into BASELINE.md.
@@ -33,12 +33,15 @@ import json
 import os
 import sys
 import time
+from functools import partial
 from pathlib import Path
 
 import duckdb
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import min_walls  # noqa: E402
 
 SRC_DIR = "/root/testdata/sf0.1"
 
@@ -136,16 +139,18 @@ def _fetch_with_timeout(con, sql: str, seconds: float) -> None:
 
 def duckdb_timings(
     sf_dir: str, names: list[str], memlimit: str = "64GB", timeout: float = 180.0
-) -> dict[str, float | None]:
+) -> tuple[dict[str, float | None], int | None]:
     """Run the DuckDB side in a SPAWNED CHILD PROCESS and return its
-    timings. Isolation is a measurement-correctness requirement, found
-    the hard way (r11): tens of seconds of 32-thread DuckDB execution
-    leave the host Python process in a state that slows SUBSEQUENT
-    driver-side Spark work (the k-means collect+numpy rows measured
-    1.6-4× their clean walls when DuckDB had run in-process first —
-    semantic_dedup_ivf 5.2 s clean vs 20.3 s polluted in the 133-row
-    protocol, while a clean session reproduces neither). A child
-    process gives DuckDB its own heap and dies with it."""
+    timings (min of two after a warm run, None for a DNF) and the
+    child's DuckDB ``threads`` setting (None if it died). Isolation is
+    a measurement-correctness requirement, found the hard way (r11):
+    tens of seconds of 32-thread DuckDB execution leave the host Python
+    process in a state that slows SUBSEQUENT driver-side Spark work
+    (the k-means collect+numpy rows measured 1.6-4× their clean walls
+    when DuckDB had run in-process first — semantic_dedup_ivf 5.2 s
+    clean vs 20.3 s polluted in the 133-row protocol, while a clean
+    session reproduces neither). A child process gives DuckDB its own
+    heap and dies with it."""
     import multiprocessing as mp
 
     ctx = mp.get_context("spawn")
@@ -172,12 +177,12 @@ def duckdb_timings(
         except _queue.Empty:
             if not p.is_alive():
                 _progress("duckdb child died without publishing; DNF all")
-                out = {n: None for n in names}
+                out = {n: None for n in names}, None
                 break
             if time.monotonic() > deadline:
                 _progress("duckdb child exceeded the bench budget; DNF all")
                 p.kill()
-                out = {n: None for n in names}
+                out = {n: None for n in names}, None
                 break
     p.join(timeout=30)
     if p.is_alive():
@@ -190,13 +195,13 @@ def _duckdb_timings_child(sf_dir, names, memlimit, timeout, q) -> None:
     try:
         q.put(_duckdb_timings_inproc(sf_dir, names, memlimit, timeout))
     except Exception:  # never leave the parent blocked on the queue
-        q.put({n: None for n in names})
+        q.put(({n: None for n in names}, None))
         raise
 
 
 def _duckdb_timings_inproc(
     sf_dir: str, names: list[str], memlimit: str = "64GB", timeout: float = 180.0
-) -> dict[str, float | None]:
+) -> tuple[dict[str, float | None], int]:
     """Per-query guarded: a row whose oracle blows up at scale (OOM or
     watchdog timeout on an unrolled-CTE oracle) records None (DNF)
     instead of killing the whole run — the full-registry sf1 run died
@@ -231,68 +236,22 @@ def _duckdb_timings_inproc(
         except Exception as exc:  # OOM / interrupt / resource errors
             out[name] = None
             _progress(f"duck  {name:40s} DNF ({type(exc).__name__})")
+    threads = con.execute("SELECT current_setting('threads')").fetchone()[0]
     con.close()
-    return out
+    return out, threads
 
 
-def _clear_persisted(spark) -> None:
-    """Unpersist every cached/localCheckpointed RDD between queries.
-    Each registry call builds FRESH RDDs (no reuse across calls), so
-    blocks left by the previous query are pure garbage — but the
-    ContextCleaner only reclaims them after the Python py4j refs are
-    GC'd, which lags a tight bench loop by hundreds of queries. Found
-    the hard way (r11): after ~100 queries the accumulated pinned
-    blocks inflate checkpoint-heavy rows 2-3.5× (semantic_dedup_ivf
-    5.2 s clean-session vs 16.2 s late in the 133-row protocol)."""
-    import gc
-
-    gc.collect()  # drop py4j refs first so nothing is resurrected
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(False)
-
-
-def spark_timings(sf_dir: str, names: list[str]) -> dict[str, float | None]:
+def spark_timings(sf_dir: str, names: list[str]) -> tuple[dict[str, float | None], str]:
+    """Per-row Spark walls from ``bench.min_walls``, and the master they ran on."""
     from ad_data_lake_spark.queries import REGISTRY
     from ad_data_lake_spark.session import get_spark
 
     spark = get_spark("bench-scale")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def mat(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    out: dict[str, float | None] = {}
-    ok = []
-    for name in names:
-        try:
-            mat(REGISTRY[name].fn(spark, sf_dir))  # warm
-            ok.append(name)
-        except Exception as exc:
-            out[name] = None
-            _progress(f"spark {name:40s} DNF ({type(exc).__name__})")
-        _clear_persisted(spark)
-    for _ in range(2):
-        for name in list(ok):
-            t0 = time.perf_counter()
-            try:
-                mat(REGISTRY[name].fn(spark, sf_dir))
-            except Exception as exc:
-                # a warm-pass survivor can still die in a timed round
-                # (OOM at larger reps); record the DNF and keep the
-                # remaining measurements instead of losing the run
-                out[name] = None
-                ok.remove(name)
-                _progress(f"spark {name:40s} DNF-timed ({type(exc).__name__})")
-                _clear_persisted(spark)
-                continue
-            el = time.perf_counter() - t0
-            prev = out.get(name)
-            out[name] = el if prev is None else min(prev, el)
-            _clear_persisted(spark)
-    for name in ok:
-        _progress(f"spark {name:40s} {out[name]:8.3f}s")
+    walls = min_walls(spark, {n: partial(REGISTRY[n].fn, spark, sf_dir) for n in names})
+    master = spark.sparkContext.master
     spark.stop()
-    return out
+    return walls, master
 
 
 def main() -> None:
@@ -313,12 +272,12 @@ def main() -> None:
 
     sf_dir = build_fixture(args.rep)
     sf = round(0.1 * args.rep, 4)
-    duck = (
-        {n: None for n in names}
+    duck, duck_threads = (
+        ({n: None for n in names}, None)
         if args.spark_only
         else duckdb_timings(sf_dir, names, args.memlimit, args.timeout)
     )
-    spark = spark_timings(sf_dir, names)
+    spark, master = spark_timings(sf_dir, names)
 
     rows = []
     for n in names:
@@ -354,6 +313,8 @@ def main() -> None:
             {
                 "sf": sf,
                 "rep": args.rep,
+                "spark_master": master,
+                "duckdb_threads": duck_threads,
                 "duckdb": duck,
                 "spark": spark,
                 "ratios": {n: r for n, _, _, r in rows},

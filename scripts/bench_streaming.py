@@ -6,11 +6,12 @@ but appear in no perf table — bench.py and the scale runs exclude
 the tier a REGRESSION baseline: one end-to-end wall measurement per
 row at sf0.1 and the implied drain rate.
 
-Method: warm pass discarded, min of two timed passes (the bench.py
-discipline). Wall is the WHOLE registry callable — source-fixture
-write + availableNow drain + result read-back — so events/s here is a
-conservative LOWER bound on pure drain rate; it is stable enough for
-regression detection, which is all this table claims. Input rows are
+Method: ``bench.min_walls`` (warm pass discarded, min of two timed
+passes), one row per child JVM. Wall is the WHOLE registry callable —
+source-fixture write + availableNow drain + result read-back — so
+events/s here is a conservative LOWER bound on pure drain rate; it is
+stable enough for regression detection, which is all this table
+claims. Input rows are
 the rows actually fed to the stream source (events fact = 100k at
 sf0.1; the two planted-duplicate pipelines feed 110k; the corpus rows
 feed the duplicated documents corpus, counted at runtime).
@@ -24,6 +25,7 @@ bench_scale.py's DuckDB side got in r11. A child that dies or exceeds
 its budget records DNF (null) instead of killing the table.
 
 Usage: python scripts/bench_streaming.py [sf_dir] [--rep N]
+(``--one NAME`` is the child entry: time one row and print its wall.)
 Prints a markdown table + one JSON line; paste the table into
 BASELINE.md.
 
@@ -39,21 +41,17 @@ staying bounded as the stream scales.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
-from functools import reduce
+from functools import partial, reduce
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-_args = [a for a in sys.argv[1:] if not a.startswith("--")]
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.1"
-REP = 1
-if "--rep" in sys.argv:
-    REP = int(sys.argv[sys.argv.index("--rep") + 1])
+from bench import min_walls  # noqa: E402
 
 # name -> how to count the rows the pipeline streams (evaluated once)
 _EVENTS = "events"
@@ -76,13 +74,13 @@ STREAM_ROWS: dict[str, str] = {
 }
 
 
-def _input_rows(spark) -> dict[str, int]:
+def _input_rows(spark, sf_dir: str) -> dict[str, int]:
     from ad_data_lake_spark.llm.corpus import dup_corpus
     from ad_data_lake_spark.sources.tables import load_table
 
-    n_events = load_table(spark, "events", SF_DIR).count()
-    n_docs = load_table(spark, "documents", SF_DIR).count()
-    n_dup_corpus = dup_corpus(load_table(spark, "documents", SF_DIR)).count()
+    n_events = load_table(spark, "events", sf_dir).count()
+    n_docs = load_table(spark, "documents", sf_dir).count()
+    n_dup_corpus = dup_corpus(load_table(spark, "documents", sf_dir)).count()
     return {
         _EVENTS: n_events,
         _EVENTS_PLUS_DUPS: n_events + n_events // 10,
@@ -143,40 +141,30 @@ def _build_stream_fixture(spark, base: str, rep: int) -> str:
     return out
 
 
-def _measure_one(name: str) -> None:
+def _measure_one(sf_dir: str, name: str) -> None:
     """Child entry: measure ONE row in a fresh JVM and print its wall
-    as the last stdout line (JSON)."""
+    (null if the row failed) as the last stdout line (JSON)."""
     from ad_data_lake_spark.queries import REGISTRY
     from ad_data_lake_spark.session import get_spark
 
     spark = get_spark(f"bench-streaming-{name}")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def mat(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    mat(REGISTRY[name].fn(spark, SF_DIR))  # warm
-    best = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        mat(REGISTRY[name].fn(spark, SF_DIR))
-        el = time.perf_counter() - t0
-        best = el if best is None else min(best, el)
-    print(json.dumps({"name": name, "wall": best}), flush=True)
+    walls = min_walls(spark, {name: partial(REGISTRY[name].fn, spark, sf_dir)})
+    print(json.dumps({"name": name, "wall": walls[name]}), flush=True)
     spark.stop()
 
 
 _CHILD_BUDGET = 1800.0  # generous: 3 full drains of the slowest row
 
 
-def _measure_in_child(name: str) -> float | None:
+def _measure_in_child(sf_dir: str, name: str) -> float | None:
     """Spawn ``bench_streaming.py <sf_dir> --one <name>`` and parse the
     wall off its last stdout line; None (DNF) on crash/budget."""
     import subprocess
 
     try:
         r = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), SF_DIR, "--one", name],
+            [sys.executable, os.path.abspath(__file__), sf_dir, "--one", name],
             capture_output=True,
             text=True,
             timeout=_CHILD_BUDGET,
@@ -194,34 +182,39 @@ def _measure_in_child(name: str) -> float | None:
         except json.JSONDecodeError:
             continue
         if d.get("name") == name:
-            return float(d["wall"])
+            return d["wall"]
     print(f"{name}: no wall published; DNF", file=sys.stderr, flush=True)
     return None
 
 
 def main() -> None:
-    global SF_DIR
-    if "--one" in sys.argv:
-        _measure_one(sys.argv[sys.argv.index("--one") + 1])
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("--rep", type=int, default=1)
+    ap.add_argument("--one")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
+    if args.one:
+        _measure_one(sf_dir, args.one)
         return
     from ad_data_lake_spark.session import get_spark
 
     spark = get_spark("bench-streaming")
     spark.sparkContext.setLogLevel("ERROR")
-    if REP > 1:
-        SF_DIR = _build_stream_fixture(spark, SF_DIR, REP)
-        print(f"stream fixture: {SF_DIR}", file=sys.stderr, flush=True)
-    counts = _input_rows(spark)
+    if args.rep > 1:
+        sf_dir = _build_stream_fixture(spark, sf_dir, args.rep)
+        print(f"stream fixture: {sf_dir}", file=sys.stderr, flush=True)
+    counts = _input_rows(spark, sf_dir)
     spark.stop()  # children get their own JVMs; free this one first
 
     walls: dict[str, float | None] = {}
     for name in STREAM_ROWS:
-        walls[name] = _measure_in_child(name)
+        walls[name] = _measure_in_child(sf_dir, name)
         shown = f"{walls[name]:7.2f}s" if walls[name] is not None else "    DNF"
         print(f"{name:32s} {shown}", file=sys.stderr, flush=True)
 
     sf = (
-        os.path.basename(SF_DIR.rstrip("/"))
+        os.path.basename(sf_dir.rstrip("/"))
         .removeprefix("stream_sf")
         .removeprefix("sf")
     )
@@ -239,10 +232,7 @@ def main() -> None:
             {
                 "metric": "streaming_drain",
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "walls": {
-                    k: round(v, 3) if v is not None else None
-                    for k, v in walls.items()
-                },
+                "walls": walls,
                 "rows_per_sec": rates,
                 "isolation": "one child JVM per row",
             }

@@ -1,7 +1,6 @@
 """Bench a SUBSET of registry rows at an arbitrary data dir / core
-count — the scale-probe harness (bench.py's exact methodology: noop
-sink, full warm pass, two timed passes, per-query min; the Bloom memo
-cleared before every timed invocation).
+count — the scale-probe harness. Timing is ``bench.min_walls``, the
+loop bench.py runs; ``value`` is null when any row failed.
 
 Usage: SPARK_GRAFT_CPUS=8 python scripts/bench_subset.py <dir> <q> [q ...]
 """
@@ -11,43 +10,29 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from bench import min_walls  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
-    from ad_data_lake_spark.llm.selection import clear_bitmap_cache
     from ad_data_lake_spark.queries import REGISTRY
     from ad_data_lake_spark.session import get_spark
 
     spark = get_spark("bench-subset")
     spark.sparkContext.setLogLevel("ERROR")
-    for name in names:
-        spark.sparkContext.setJobDescription(f"warm {name}")
-        _materialize(REGISTRY[name].fn(spark, sf_dir))
-    timings: dict[str, float] = {}
-    for _ in range(2):
-        for name in names:
-            clear_bitmap_cache()
-            spark.sparkContext.setJobDescription(f"timed {name}")
-            t0 = time.perf_counter()
-            _materialize(REGISTRY[name].fn(spark, sf_dir))
-            el = round(time.perf_counter() - t0, 3)
-            timings[name] = min(timings.get(name, el), el)
+    timings = min_walls(spark, {n: partial(REGISTRY[n].fn, spark, sf_dir) for n in names})
     out = {
         "metric": "subset_total",
-        "value": round(sum(timings.values()), 3),
+        "value": None if None in timings.values() else round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "dir": sf_dir,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "master": spark.sparkContext.master,
     }
     print(json.dumps(out))
     spark.stop()

@@ -1,7 +1,14 @@
 """Fill BASELINE.md's measurement table: DuckDB (oracle SQL) vs Spark
-(registry query) per query at sf0.1, both engines warm (first run
-discarded, second run timed). Rewrites everything below the
-``<!-- bench-table -->`` marker in BASELINE.md.
+(registry query) per query, both engines warm.
+
+Spark walls come from ``bench.min_walls``: the read rows (bench.py's
+row set) in one call, then the ``write``-tagged rows in a second call,
+so no write-path work runs between read-row timings. DuckDB walls come
+from ``bench_scale.duckdb_timings`` (a spawned child process, run
+before the Spark session starts) for the rows whose ratio the table
+shows. If any row fails on either engine, the failed rows go to stderr,
+BASELINE.md is left as it was and the exit status is 1; otherwise
+everything below the ``<!-- bench-table -->`` marker is rewritten.
 
 Usage: python scripts/fill_baseline.py  [sf_dir]
 """
@@ -9,98 +16,76 @@ Usage: python scripts/fill_baseline.py  [sf_dir]
 from __future__ import annotations
 
 import sys
-import time
+from functools import partial
 from pathlib import Path
-
-import duckdb
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import min_walls  # noqa: E402
+from scripts.bench_scale import duckdb_timings  # noqa: E402
+
 MARKER = "<!-- bench-table -->"
 
 
-def duckdb_timings(sf_dir: str, oracles: dict[str, str]) -> dict[str, float]:
-    con = duckdb.connect()
-    from ad_data_lake_spark.sources.tables import TABLE_NAMES
-
-    for t in TABLE_NAMES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    out: dict[str, float] = {}
-    for name, sql in oracles.items():
-        con.execute(sql).fetchall()  # warm
-        t0 = time.perf_counter()
-        con.execute(sql).fetchall()
-        out[name] = time.perf_counter() - t0
-    con.close()
-    return out
-
-
-def spark_timings(sf_dir: str) -> dict[str, float]:
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from ad_data_lake_spark.queries import REGISTRY
     from ad_data_lake_spark.session import get_spark
 
+    # A "demo" row does extra work on purpose (e.g. skew salting's ×8
+    # dim explode) that its plain-join oracle doesn't, and a "write" row
+    # does real IO where its oracle computes only the final state: both
+    # are correctness-comparable, but their wall-clock ratio is not.
+    ratio_rows = [
+        n for n, s in REGISTRY.items()
+        if s.oracle is not None and not {"write", "demo"} & set(s.tags)
+    ]
+    duck, duck_threads = duckdb_timings(sf_dir, ratio_rows)
+
     spark = get_spark("fill-baseline")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def mat(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    for spec in REGISTRY.values():
-        mat(spec.fn(spark, sf_dir))  # warm
-    # min of two timed passes, mirroring bench.py's variance handling
-    out: dict[str, float] = {}
-    for _ in range(2):
-        for name, spec in REGISTRY.items():
-            t0 = time.perf_counter()
-            mat(spec.fn(spark, sf_dir))
-            el = time.perf_counter() - t0
-            out[name] = min(out.get(name, el), el)
+    reads = [n for n, s in REGISTRY.items() if "write" not in s.tags]
+    writes = [n for n in REGISTRY if n not in reads]
+    walls: dict[str, float | None] = {}
+    for names in (reads, writes):
+        walls |= min_walls(spark, {n: partial(REGISTRY[n].fn, spark, sf_dir) for n in names})
+    master = spark.sparkContext.master
     spark.stop()
-    return out
 
-
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from ad_data_lake_spark.queries import oracle_sqls
-
-    oracles = oracle_sqls()
-    duck = duckdb_timings(sf_dir, oracles)
-    spark = spark_timings(sf_dir)
+    failed = [f"{n} (Spark)" for n, s_t in walls.items() if s_t is None]
+    failed += [f"{n} (DuckDB)" for n, d_t in duck.items() if d_t is None]
+    if failed:
+        print(f"fill_baseline: {len(failed)} failed, BASELINE.md unchanged: "
+              f"{', '.join(failed)}", file=sys.stderr)
+        return 1
 
     lines = [
         MARKER,
         "",
-        f"Measured on local[32], AQE on, UTC session tz, sf_dir={sf_dir}; both",
-        "engines warm (2nd run timed). Queries without a DuckDB-expressible",
-        "oracle show Spark time only.",
+        f"Measured with Spark on {master} (AQE on, UTC session tz) and DuckDB",
+        f"on {duck_threads} threads, sf_dir={sf_dir}. Both engines warm: each",
+        "query runs once untimed, then the faster of two timed runs counts.",
+        "Write-path rows are timed after all read rows. Queries without a",
+        "DuckDB-expressible oracle show Spark time only.",
         "",
         "| Query | DuckDB (s) | Spark (s) | Ratio | Oracle |",
         "|---|---|---|---|---|",
     ]
-    from ad_data_lake_spark.queries import REGISTRY
-
     d_tot = s_tot = 0.0
-    for name, s_t in spark.items():
-        d_t = duck.get(name)
-        is_write = "write" in REGISTRY[name].tags
-        is_demo = "demo" in REGISTRY[name].tags
-        if is_demo:
-            # technique demo: Spark deliberately does extra work (e.g.
-            # skew salting's ×8 dim explode) that the plain-join oracle
-            # doesn't — correctness-comparable, wall-clock not
+    for name, spec in REGISTRY.items():
+        s_t = walls[name]
+        if "demo" in spec.tags:
             lines.append(
                 f"| {name} | — | {s_t:.3f} | — | sql (technique demo vs plain-join oracle, excluded from total) |"
             )
-            continue
-        if d_t is not None and not is_write:
+        elif name in duck:
+            d_t = duck[name]
             d_tot += d_t
             s_tot += s_t
             ratio = f"{s_t / d_t:.1f}×" if d_t > 1e-4 else "—"
             lines.append(f"| {name} | {d_t:.3f} | {s_t:.3f} | {ratio} | sql |")
-        elif is_write:
-            # write-path query: Spark side does real IO (write+read), the
-            # oracle only computes final state — ratio not comparable
+        elif "write" in spec.tags:
             lines.append(f"| {name} | — | {s_t:.3f} | — | sql (write-path, excluded from total) |")
         else:
             lines.append(f"| {name} | — | {s_t:.3f} | — | rows-only |")
@@ -115,7 +100,8 @@ def main() -> None:
     head = text.split(MARKER)[0].rstrip()
     path.write_text(head + "\n\n" + "\n".join(lines))
     print(f"total duckdb={d_tot:.2f}s spark={s_tot:.2f}s ratio={s_tot / d_tot:.2f}x")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -3,7 +3,8 @@ optimize + physical planning), and execution (noop sink, incl. AQE).
 
 Usage: python scripts/profile_split.py [query ...]   (default: slowest
 rows from the current bench record). Each query is warmed once first so
-codegen/footer caching isn't billed, mirroring bench.py methodology.
+codegen/footer caching isn't billed; unlike ``bench.min_walls`` it times
+one pass, split into phases.
 Output: one line per query with build/plan/exec seconds plus the job
 and stage counts of the timed exec pass.
 """

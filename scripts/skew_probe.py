@@ -14,7 +14,8 @@ Three contenders, identical results:
            (what you get "for free" in session.py's defaults);
 - salted : layout.salted_join (deterministic xxhash salt x8).
 
-Prints one JSON line; REPORT.md records the verdict.
+Each contender is timed by ``bench.min_walls``. Prints one JSON line;
+REPORT.md records the verdict.
 
 Usage: python scripts/skew_probe.py [--rows 20000000]
 """
@@ -24,11 +25,12 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import min_walls  # noqa: E402
 
 
 def main() -> None:
@@ -74,18 +76,8 @@ def main() -> None:
         ),
     }
 
-    results: dict[str, float] = {}
-    rows_check: dict[str, int] = {}
-    for name, build in plans.items():
-        df = build()
-        df.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        results[name] = round(best, 2)
-        rows_check[name] = df.count()
+    results = min_walls(spark, plans)
+    rows_check = {name: build().count() for name, build in plans.items()}
 
     assert len(set(rows_check.values())) == 1, rows_check
     print(json.dumps({"rows": n, "dim": d, "seconds": results}))
