@@ -2,10 +2,12 @@
 conditional-put primitive (SURVEY §2.9 T20, VERDICT r9 "what's
 missing" #2).
 
-``incremental.py``'s MERGE publishes are optimistic-concurrency
-commits: compute from a base version, then atomically advance the
-table's commit state ONLY IF nobody advanced it in between (the Delta
-commit protocol's shape). On a host-local filesystem that
+``incremental.py``'s MERGE publishes and ``vacuum`` are
+optimistic-concurrency commits: read a snapshot of the table's commit
+state, compute from it, then atomically replace that state ONLY IF it
+is still the one read (the Delta commit protocol's shape: a writer
+that read version N commits N+1 only if N is still the latest, with
+no second read at commit time). On a host-local filesystem that
 "only if" needs a transactional store, because POSIX has no
 compare-and-swap across files. On every real object store it does
 not: S3 (conditional writes: ``If-Match`` / ``If-None-Match`` on
@@ -26,12 +28,19 @@ a docstring:
   version log, current pointer, bucket count) serialized as ONE
   canonical JSON object, so a single conditional-put covers the whole
   transition; torn multi-file reads cannot exist by construction.
-- :func:`cas_publish` — the commit itself: read state, verify the
-  caller's base version is still current, append, retain-truncate,
-  conditional-put. A precondition failure IS the lost-update signal
-  and surfaces as :class:`ConcurrentWriteError`; callers recompute
-  off the new current and retry (``incremental.merge_upsert`` already
-  does, bounded by its attempt budget).
+- :class:`Snapshot` / :func:`read_snapshot` — the state an operation
+  read together with the etag it was read at. That etag is the only
+  input to the operation's commit: the commit is made against the
+  state it was derived from, so no re-read at commit time can let a
+  commit land that was computed from an older state.
+- :func:`commit_state` — the commit itself: one conditional put of the
+  new state keyed on the snapshot's etag (``If-None-Match`` when the
+  snapshot found no state). A precondition failure IS the lost-update
+  signal and surfaces as :class:`ConcurrentWriteError`; callers read a
+  new snapshot, recompute and retry (``incremental`` merges and
+  ``vacuum`` do, bounded by their attempt budget).
+  :func:`cas_publish` derives a publish's new state from its snapshot
+  and commits it through this helper.
 - :class:`MemoryConditionalStore` — the in-memory reference backend:
   put_if is atomic under an internal mutex, standing in for the
   store's server-side atomicity. The concurrency tests hammer it with
@@ -64,21 +73,20 @@ from dataclasses import dataclass
 from typing import Protocol
 
 COMMIT_KEY = "commit"
-_UNSET = object()
 
 
 class ConcurrentWriteError(RuntimeError):
-    """The table's commit state advanced between a merge's base read
-    and its publish — committing would silently discard the other
-    writer's merge (the classic lost update). Callers re-run the merge
-    off the new current; ``merge_upsert``/``cdc_apply`` do so
-    automatically up to their attempt budget."""
+    """The table's commit state advanced between an operation's
+    snapshot read and its commit — committing would silently discard
+    the other writer's commit (the classic lost update). Callers re-run
+    the operation off a new snapshot; ``merge_upsert``/``cdc_apply``
+    and ``vacuum`` do so automatically up to their attempt budget."""
 
 
 class PreconditionFailed(Exception):
     """The store rejected a conditional put (etag/generation mismatch
     or the object already exists) — the raw store-level signal
-    ``cas_publish`` translates into :class:`ConcurrentWriteError`."""
+    :func:`commit_state` translates into :class:`ConcurrentWriteError`."""
 
 
 class ConditionalStore(Protocol):
@@ -151,6 +159,44 @@ class CommitState:
 
 
 @dataclass(frozen=True)
+class Snapshot:
+    """The commit state an operation read and the etag it was read at
+    (None: the store held no state, so the commit creates it)."""
+
+    state: CommitState
+    etag: str | None
+
+
+def read_snapshot(store: ConditionalStore) -> Snapshot:
+    """One ``get`` of the commit state; an absent key reads as the
+    empty state with no etag."""
+    got = store.get(COMMIT_KEY)
+    if got is None:
+        return Snapshot(CommitState((), None, None), None)
+    return Snapshot(CommitState.from_bytes(got[0]), got[1])
+
+
+def commit_state(
+    store: ConditionalStore, base: Snapshot, state: CommitState
+) -> None:
+    """Replace ``base`` with ``state`` in one conditional put keyed on
+    ``base.etag``. Any commit that landed after ``base`` was read moved
+    the etag, so the put is refused and this raises
+    :class:`ConcurrentWriteError`: the caller reads a new snapshot and
+    recomputes."""
+    etag = base.etag
+    try:
+        store.put_if(
+            COMMIT_KEY, state.to_bytes(), if_match=etag, if_none_match=etag is None
+        )
+    except PreconditionFailed as exc:
+        raise ConcurrentWriteError(
+            "the commit state advanced since this commit's snapshot was "
+            "read — recompute off a new snapshot and retry"
+        ) from exc
+
+
+@dataclass(frozen=True)
 class PublishResult:
     kept: tuple[str, ...]  # the post-commit retained log
     logged: frozenset[str]  # every version name the log EVER named
@@ -159,25 +205,22 @@ class PublishResult:
 
 def cas_publish(
     store: ConditionalStore,
+    base: Snapshot,
     new_version: str,
-    *,
-    base_version: object = _UNSET,
     retain: int = 3,
     n_buckets: int | None = None,
-    key: str = COMMIT_KEY,
 ) -> PublishResult:
-    """One publish attempt against ``store`` — the whole commit is a
-    single conditional-put of the new :class:`CommitState`:
+    """One publish attempt: commit ``new_version`` over the snapshot
+    ``base`` the caller computed it from. It issues no read:
 
-    1. ``get`` the current state (etag = the CAS token);
-    2. verify ``base_version`` is still the current pointer — if not,
-       another writer landed first and committing would discard their
-       merge: raise :class:`ConcurrentWriteError` (recompute, retry);
-    3. append ``new_version`` to the pointer-truncated history, keep
-       the newest ``retain``, carry/record the bucket count;
-    4. ``put_if`` keyed on the etag read in (1) — losing THIS race
-       (a writer landed between get and put) is the same lost-update
-       signal and raises the same error.
+    1. append ``new_version`` to ``base.state``'s pointer-truncated
+       history, keep the newest ``retain``, carry/record the bucket
+       count;
+    2. :func:`commit_state` it keyed on ``base.etag`` — if another
+       commit landed since ``base`` was read, committing would discard
+       it (the lost update), so the put is refused and this raises
+       :class:`ConcurrentWriteError` (read a new snapshot, recompute,
+       retry).
 
     Version DATA directories are written by the caller before this
     commit and garbage-collected by the caller after it (using
@@ -185,35 +228,12 @@ def cas_publish(
     that crashes anywhere before the put_if leaves the table state
     untouched — there is no lock to break, which is why this form
     needs no liveness logic at all."""
-    got = store.get(key)
-    if got is None:
-        state, etag = CommitState((), None, None), None
-    else:
-        state, etag = CommitState.from_bytes(got[0]), got[1]
-    if base_version is not _UNSET and state.current != base_version:
-        raise ConcurrentWriteError(
-            f"commit state is at {state.current!r}, but this merge was "
-            f"computed from {base_version!r} — another writer published "
-            "in between; recompute off the new current"
-        )
+    state = base.state
     history = [v for v in state.published() if v != new_version]
     history.append(new_version)
     kept = tuple(history[-max(1, retain):])
-    new_state = CommitState(
-        kept,
-        new_version,
-        n_buckets if n_buckets is not None else state.n_buckets,
-    )
-    try:
-        if etag is None:
-            store.put_if(key, new_state.to_bytes(), if_none_match=True)
-        else:
-            store.put_if(key, new_state.to_bytes(), if_match=etag)
-    except PreconditionFailed as exc:
-        raise ConcurrentWriteError(
-            f"commit state advanced between read and conditional-put "
-            f"while publishing {new_version!r} — recompute and retry"
-        ) from exc
+    nb = n_buckets if n_buckets is not None else state.n_buckets
+    commit_state(store, base, CommitState(kept, new_version, nb))
     return PublishResult(kept, frozenset(state.versions) | frozenset(history))
 
 
@@ -260,5 +280,8 @@ __all__ = [
     "MemoryConditionalStore",
     "PreconditionFailed",
     "PublishResult",
+    "Snapshot",
     "cas_publish",
+    "commit_state",
+    "read_snapshot",
 ]

@@ -187,8 +187,8 @@ class HttpConditionalStore:
         - the precondition is GONE (etag moved past ``if_match``, or
           the key exists under ``if_none_match``) and the bytes are not
           ours → some other writer committed first; surface the normal
-          :class:`PreconditionFailed` so ``cas_publish`` re-reads and
-          retries exactly as it would for an explicit 412;
+          :class:`PreconditionFailed` so the caller reads a new
+          snapshot and retries exactly as it would for an explicit 412;
         - the precondition still HOLDS → our PUT provably never
           landed; re-send it (the retry is unambiguous if it gets a
           response, and re-enters this rule if the connection dies
@@ -205,8 +205,8 @@ class HttpConditionalStore:
         (the byte comparison fails, the precondition is gone) and
         surfaces as :class:`PreconditionFailed`. Retries driven by
         that signal must therefore be RECOMPUTE-idempotent: re-derive
-        the merge from the freshly-read current state (as
-        ``cas_publish``/``merge_upsert`` do — re-applying a merge on
+        the merge from a freshly read snapshot (as
+        ``merge_upsert``/``cdc_apply`` do — re-applying a merge on
         top of its own landed effect is a no-op by construction), not
         re-apply a delta blindly, or the delta double-applies."""
         last_exc: Exception = cause

@@ -40,19 +40,22 @@ log and bucket count are one ``CommitState`` held by the table's
 arbiter (:func:`_commit_store`): the sqlite store
 (``<table>/_commit.sqlite``) on every host-local table, or the
 HTTP/S3 conditional-put store where the table carries that marker.
-Every reader and writer asks the arbiter (:func:`_state`), as a Delta
-table is resolved from its log alone; no copy of that state exists
-anywhere else, so no copy can fall behind or run ahead of it.
+Every reader and writer asks the arbiter (readers through
+:func:`_state`), as a Delta table is resolved from its log alone; no
+copy of that state exists anywhere else, so no copy can fall behind or
+run ahead of it.
 
 **Concurrent writers** (a 100 TB lake has streaming + backfill writers
 by construction) are handled with optimistic concurrency, the Delta
-commit protocol's shape: every merge records the version it computed
-FROM, and the publish CAS-checks the table's commit state against that
-base. A writer that lost the race gets ``ConcurrentWriteError`` and
-re-runs its merge off the new current (automatic,
-``MERGE_MAX_ATTEMPTS``), so both merges land and neither is silently
-discarded. The whole commit is ONE conditional put of the table's
-``CommitState`` (``commit_protocol.cas_publish``): sqlite runs it as
+commit protocol's shape: every merge attempt and every ``vacuum``
+attempt reads ONE snapshot of the table's commit state (state + etag,
+``commit_protocol.read_snapshot``), computes from it, and commits with
+ONE conditional put of the new ``CommitState`` keyed on that snapshot's
+etag (``commit_protocol.commit_state``). Any commit landing in between
+moves the etag, so the loser gets ``ConcurrentWriteError`` and re-runs
+off a new snapshot (automatic, ``MERGE_MAX_ATTEMPTS``): both land and
+neither is silently discarded. A steady-state merge therefore costs
+the arbiter one read and one conditional write. sqlite runs the put as
 one ``BEGIN IMMEDIATE`` transaction (its journal rolls back a writer
 that dies mid-commit, so there is no lock to break), HTTP as one
 conditional ``PUT``. GC distinguishes logged directories (safe to
@@ -85,11 +88,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
 
 from ad_data_lake_spark.commit_protocol import (
-    COMMIT_KEY,
     CommitState,
     ConcurrentWriteError,
-    PreconditionFailed,
+    Snapshot,
     cas_publish,
+    commit_state,
+    read_snapshot,
 )
 from ad_data_lake_spark.operators.windows import last_wins_dedupe
 
@@ -113,7 +117,6 @@ _SCHEMA_FILE = "_SCHEMA.json"
 # writer is dead by construction) and GC immediately.
 ORPHAN_GRACE_SECONDS = 600.0
 MERGE_MAX_ATTEMPTS = 5
-_UNSET = object()
 
 
 # ConcurrentWriteError is defined by the store-agnostic protocol
@@ -200,17 +203,16 @@ def _read_version_dir(spark: SparkSession, version_dir: str) -> DataFrame:
     return spark.read.schema(schema).parquet(version_dir).drop(_BUCKET)
 
 
-def _state(target_path: str) -> CommitState | None:
-    """The table's commit state as its arbiter holds it; None for a
-    plain or missing directory, or a table with no commit yet. Never
-    creates an arbiter database."""
-    got = _commit_store(target_path).get(COMMIT_KEY)
-    return CommitState.from_bytes(got[0]) if got is not None else None
+def _state(target_path: str) -> CommitState:
+    """The table's commit state as its arbiter holds it; a state with
+    no current version for a plain or missing directory, or a table
+    with no commit yet. Never creates an arbiter database."""
+    return read_snapshot(_commit_store(target_path)).state
 
 
 def _live_state(target_path: str) -> CommitState:
     state = _state(target_path)
-    if state is None or state.current is None:
+    if state.current is None:
         raise ValueError(f"{target_path} is not a versioned (bucketed) table")
     return state
 
@@ -284,12 +286,13 @@ def _doomed_versions(target_path: str, keep: set[str], logged: set[str]) -> list
     return sorted(doomed)
 
 
-def _remove_versions(target_path: str, doomed: list[str]) -> list[str]:
+def _remove_versions(target_path: str, store, doomed: list[str]) -> list[str]:
     """rmtree the doomed version dirs — call AFTER the commit (see
     :func:`_doomed_versions` for why that is safe).
 
-    The live log/pointer is re-read from the arbiter PER DIRECTORY,
-    immediately before its rmtree, and anything it names is spared:
+    The live log/pointer is re-read from ``store`` (the table's
+    arbiter) PER DIRECTORY, immediately before its rmtree, and
+    anything it names is spared:
     the doomed list was selected from a snapshot, and a publish can
     land between selection and removal. Without this recheck, a
     remover stalled past the orphan grace window could delete a
@@ -306,8 +309,8 @@ def _remove_versions(target_path: str, doomed: list[str]) -> list[str]:
     write-to-publish gap of seconds) is the real defense against it."""
     removed = []
     for d in doomed:
-        state = _state(target_path)
-        if state is not None and (d == state.current or d in state.versions):
+        state = read_snapshot(store).state
+        if d == state.current or d in state.versions:
             continue
         shutil.rmtree(os.path.join(target_path, d), ignore_errors=True)
         removed.append(d)
@@ -334,29 +337,28 @@ def _commit_store(target_path: str):
 def _publish(
     target_path: str,
     new_version: str,
-    retain: int = RETAIN_VERSIONS,
-    base_version: object = _UNSET,
+    store,
+    base: Snapshot,
     n_buckets: int | None = None,
 ) -> None:
-    """Commit ``new_version``: append it to the ordered version log,
-    make it current, and GC versions past the retention
-    window (the newest ``retain`` versions — current plus ``retain-1``
-    priors — stay readable via ``read_version``).
+    """Commit ``new_version`` over ``base``, the snapshot of ``store``
+    (this table's arbiter, :func:`_commit_store`) the merge was
+    computed from: append it to the ordered version log, make it
+    current, and GC versions past the retention window (the newest
+    ``RETAIN_VERSIONS`` — current plus ``RETAIN_VERSIONS-1`` priors —
+    stay readable via ``read_version``).
 
     **Optimistic concurrency (the Delta commit protocol's CAS):** the
-    commit runs through the store-agnostic protocol
-    (:func:`~ad_data_lake_spark.commit_protocol.cas_publish`) against
-    this table's arbiter (:func:`_commit_store`). When ``base_version``
-    is given, the publish first re-checks that the current version still
-    equals the version this merge was computed FROM — if another
-    writer published in between, committing would silently discard
-    that writer's merge (lost update), so this raises
-    :class:`ConcurrentWriteError` instead and the caller recomputes
-    off the new current. Two concurrent merges therefore serialize:
-    one commits, the other retries — no version is ever silently
-    lost. The same publish code runs unchanged over an object store's
-    conditional-put (see commit_protocol's backend mapping); only the
-    store adapter differs.
+    commit is :func:`~ad_data_lake_spark.commit_protocol.cas_publish`,
+    one conditional put keyed on ``base``'s etag, with no read of its
+    own. If any commit (another merge, or a ``vacuum``) landed since
+    ``base`` was read, committing would silently discard it (lost
+    update), so this raises :class:`ConcurrentWriteError` instead and
+    the caller recomputes off a new snapshot. Two concurrent merges
+    therefore serialize: one commits, the other retries — no version is
+    ever silently lost. The same publish code runs unchanged over an
+    object store's conditional-put (see commit_protocol's backend
+    mapping); only the store adapter differs.
 
     The log, pointer and bucket count change together in that one
     conditional put, so a writer that dies anywhere leaves the state
@@ -370,17 +372,24 @@ def _publish(
     the only unbounded-cost step, and keeping it out of the critical
     section keeps commits at one small write (so waiters are never
     starved behind a large GC)."""
-    result = cas_publish(
-        _commit_store(target_path),
-        new_version,
-        base_version=base_version,
-        retain=retain,
-        n_buckets=n_buckets,
-    )
+    result = cas_publish(store, base, new_version, RETAIN_VERSIONS, n_buckets)
     doomed = _doomed_versions(
         target_path, set(result.kept), set(result.logged)
     )
-    _remove_versions(target_path, doomed)
+    _remove_versions(target_path, store, doomed)
+
+
+def _with_retries(attempt):
+    """Run ``attempt`` (one snapshot read, one commit) until its commit
+    lands, at most ``MERGE_MAX_ATTEMPTS`` times; a lost race raises
+    ``ConcurrentWriteError`` and the next call reads a new snapshot.
+    The last attempt's error propagates."""
+    for i in range(MERGE_MAX_ATTEMPTS):
+        try:
+            return attempt()
+        except ConcurrentWriteError:
+            if i == MERGE_MAX_ATTEMPTS - 1:
+                raise
 
 
 def _check_mergeable(target_path: str) -> None:
@@ -415,27 +424,26 @@ def _apply_bucketed(
     delete_col: str | None,
 ) -> None:
     """Shared bucket-scoped write core for MERGE and CDC-apply, with
-    optimistic-concurrency retry: each attempt computes the merged
-    state from the current version, and the publish CAS-checks that
-    the commit state hasn't advanced since (see
+    optimistic-concurrency retry. The table's arbiter is resolved once;
+    each attempt reads one snapshot of its commit state, computes the
+    merged version from it, and commits over that same snapshot (see
     :func:`_publish`). A lost race raises ``ConcurrentWriteError``
-    internally and the attempt re-runs off the new current — the batch
+    internally and the attempt re-runs off a new snapshot — the batch
     is re-applied, which the last-wins recency rule makes correct and
     idempotent — so two concurrent merges both land, serialized."""
-    for attempt in range(MERGE_MAX_ATTEMPTS):
-        try:
-            return _apply_bucketed_once(
-                spark, target_path, batch, key, order_col, tiebreak,
-                n_buckets, delete_col,
-            )
-        except ConcurrentWriteError:
-            if attempt == MERGE_MAX_ATTEMPTS - 1:
-                raise
+    store = _commit_store(target_path)
+    _with_retries(
+        lambda: _apply_bucketed_once(
+            spark, target_path, store, batch, key, order_col, tiebreak,
+            n_buckets, delete_col,
+        )
+    )
 
 
 def _apply_bucketed_once(
     spark: SparkSession,
     target_path: str,
+    store,
     batch: DataFrame,
     key: str,
     order_col: str,
@@ -447,22 +455,22 @@ def _apply_bucketed_once(
     first write sizes from the batch), last-wins-dedupe current ∪ batch
     within the TOUCHED buckets only, optionally drop tombstoned keys
     (``delete_col``), write a new version, hardlink untouched buckets,
-    publish (CAS against the base version read here)."""
+    publish over the one snapshot of ``store`` read here."""
 
     def finalize(deduped: DataFrame) -> DataFrame:
         if delete_col is None:
             return deduped
         return deduped.where(~F.col(delete_col)).drop(delete_col)
 
-    state = _state(target_path)
-    prev_version = state.current if state is not None else None
+    base = read_snapshot(store)
+    prev_version = base.state.current
     if prev_version is None:
         _check_mergeable(target_path)
         if n_buckets is None:
             n_buckets = buckets_for_bytes(_estimated_plan_bytes(batch))
     else:
         # layout-bound: the committed count always wins
-        n_buckets = state.n_buckets
+        n_buckets = base.state.n_buckets
         if n_buckets is None:
             raise ValueError(
                 f"{target_path}: the commit state records no bucket "
@@ -532,9 +540,7 @@ def _apply_bucketed_once(
     # losing concurrent first write never stamps its count over the
     # winner's layout
     try:
-        _publish(
-            target_path, new_version, base_version=prev_version, n_buckets=n_buckets
-        )
+        _publish(target_path, new_version, store, base, n_buckets)
     except ConcurrentWriteError:
         # this attempt's version dir is ours alone — reclaim it now
         # rather than leaving it for the age-gated orphan GC
@@ -672,38 +678,36 @@ def vacuum(target_path: str, retain: int = 1) -> list[str]:
     backfill calls this to reclaim the space early instead of waiting
     ``RETAIN_VERSIONS`` more merges.
 
-    The log rewrite is one conditional put against the table's arbiter
-    (a publish that lands in between makes it re-read and re-derive);
-    the directory removal itself runs after that commit (see
+    The log rewrite commits exactly as a merge does: each attempt reads
+    one snapshot and commits the truncated log over it
+    (``commit_protocol.commit_state``), so a publish that lands in
+    between makes it re-read and re-derive — and a vacuum that lands
+    between a merge's snapshot read and its publish makes THAT merge
+    recompute. The directory removal itself runs after the commit (see
     :func:`_doomed_versions`).
     Never-logged version directories — possibly a concurrent writer's
     merge awaiting publish — are only removed past the orphan grace
     window; logged tails GC immediately."""
     store = _commit_store(target_path)
-    for _ in range(MERGE_MAX_ATTEMPTS):
-        got = store.get(COMMIT_KEY)
-        if got is None:
-            raise ValueError(f"{target_path} is not a versioned (bucketed) table")
-        state = CommitState.from_bytes(got[0])
+
+    def attempt() -> list[str]:
+        base = read_snapshot(store)
+        state = base.state
         if state.current is None:
             raise ValueError(f"{target_path} is not a versioned (bucketed) table")
         # Truncate at the pointer BEFORE applying the retention window:
         # an unpointed log tail must be GC'd as the orphan it is, never
         # retained ahead of current as a 'prior'.
-        history = state.published()
-        kept = history[-max(1, retain):]
+        kept = state.published()[-max(1, retain):]
         if state.current not in kept:
             kept = kept + [state.current]
-        new_state = CommitState(tuple(kept), state.current, state.n_buckets)
-        try:
-            store.put_if(COMMIT_KEY, new_state.to_bytes(), if_match=got[1])
-        except PreconditionFailed:
-            continue  # a publish landed mid-vacuum: re-read, re-derive
+        commit_state(
+            store, base, CommitState(tuple(kept), state.current, state.n_buckets)
+        )
         doomed = _doomed_versions(target_path, set(kept), set(state.versions))
-        return _remove_versions(target_path, doomed)
-    raise ConcurrentWriteError(
-        f"{target_path}: vacuum lost {MERGE_MAX_ATTEMPTS} publish races"
-    )
+        return _remove_versions(target_path, store, doomed)
+
+    return _with_retries(attempt)
 
 
 def lake_stats(target_path: str) -> dict:
@@ -718,7 +722,7 @@ def lake_stats(target_path: str) -> dict:
     README, "Known limitation"). Footers are read in this process with
     pyarrow: no Spark job runs."""
     state = _state(target_path)
-    if state is None or state.current is None:
+    if state.current is None:
         n_files = n_bytes = 0
         for root, _dirs, files in os.walk(target_path):
             for f in files:

@@ -221,7 +221,12 @@ def contamination_check(
     relative to the corpus (eval suites are MBs against TBs) and
     broadcasts; the corpus's exploded shingles stream past it in one
     scan — no corpus shuffle until the per-doc count aggregate on
-    doc_id, whose input is one row per (doc, distinct shingle)."""
+    doc_id, whose input is one row per (doc, distinct shingle).
+
+    Precondition: ``doc_id`` is unique per corpus row. The (doc_id,
+    h60) dedup is per row (:func:`doc_distinct_shingle_h60s`), so a
+    doc_id on two rows counts its shared shingles twice in
+    ``n_shingles`` and ``n_shared``."""
     if benchmark is None:
         benchmark = corpus.where(F.col("doc_id") % benchmark_mod == 0)
         corpus = corpus.where(F.col("doc_id") % benchmark_mod != 0)

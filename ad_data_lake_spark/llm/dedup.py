@@ -230,7 +230,12 @@ def _doc_h60_partials(batches):
 def doc_distinct_shingle_h60s(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, h60), h60 distinct within each document — globally
     distinct as (doc_id, h60) pairs by row atomicity. md5 family only
-    (the oracle path); xxhash64 callers keep the JVM explode."""
+    (the oracle path); xxhash64 callers keep the JVM explode.
+
+    Precondition: ``id_col`` is unique per row (one row per document).
+    The dedup is per row, not a global ``.distinct()``, so two rows
+    sharing a doc_id (a union, a re-read) emit their shared pairs twice
+    and every per-doc count downstream is inflated, not deduped."""
     src = df.select(F.col(id_col).alias("doc_id"), "text")
     return spread(src).mapInPandas(_doc_h60_partials, _DOC_H60_SCHEMA)
 
@@ -970,7 +975,12 @@ def novelty_profile(corpus: DataFrame, hash_family: str = "md5") -> DataFrame:
     reproduced bit-for-bit by the DuckDB oracle; pass
     ``hash_family="xxhash64"`` for the cheaper production family.
     Documents with fewer than 3 words have no shingles and are
-    excluded (mirrored by the oracle)."""
+    excluded (mirrored by the oracle).
+
+    Precondition (md5 family): ``doc_id`` is unique per row. The
+    (h60, doc_id) distinct of step 1 comes from a per-row kernel
+    (:func:`doc_distinct_shingle_h60s`), so a doc_id on two rows counts
+    its shared shingles twice in ``n_shingles`` and ``n_novel``."""
     if hash_family == "md5":
         # Arrow kernel: per-doc np.unique IS the (h60, doc_id) distinct
         # (row atomicity), zero exchange — see doc_distinct_shingle_h60s

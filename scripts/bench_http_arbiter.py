@@ -50,8 +50,8 @@ RTTS = [float(x) for x in _arg("--rtts", "0,0.01,0.05").split(",")]
 DROP_EVERY = int(_arg("--drop-every", "23"))
 DROP_LANDED_EVERY = int(_arg("--drop-landed-every", "7"))
 
-# Writer child: merge-style commit loop (base version read from the
-# arbiter each attempt, exactly like a merge does), unbounded
+# Writer child: merge-style commit loop (one snapshot read from the
+# arbiter per attempt, exactly like a merge does), unbounded
 # retry per commit so the run measures contention cost rather than
 # aborting — per-commit CAS losses are counted and the max streak is
 # the starvation metric.
@@ -59,8 +59,8 @@ _WRITER = textwrap.dedent(
     """
     import json, random, sys, time
     sys.path.insert(0, {repo!r})
-    from ad_data_lake_spark import incremental
-    from ad_data_lake_spark.commit_protocol import ConcurrentWriteError, cas_publish
+    from ad_data_lake_spark.commit_protocol import (
+        ConcurrentWriteError, cas_publish, read_snapshot)
     from ad_data_lake_spark.http_store import HttpTableCommitStore
 
     target, w, n = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
@@ -73,10 +73,9 @@ _WRITER = textwrap.dedent(
     for i in range(n):
         streak = 0
         while True:
-            base = incremental._state(target).current
             a0 = time.perf_counter()
             try:
-                cas_publish(store, f"v-w{{w}}-{{i:05d}}", base_version=base)
+                cas_publish(store, read_snapshot(store), f"v-w{{w}}-{{i:05d}}")
                 break
             except ConcurrentWriteError:
                 attempt_wall = time.perf_counter() - a0
@@ -102,7 +101,7 @@ _WRITER = textwrap.dedent(
 
 
 def run_condition(rtt: float, drop_every: int, drop_landed_every: int = 0) -> dict:
-    from ad_data_lake_spark.commit_protocol import COMMIT_KEY, CommitState, cas_publish
+    from ad_data_lake_spark.commit_protocol import cas_publish, read_snapshot
     from ad_data_lake_spark.http_store import EtagStoreServer, HttpTableCommitStore
 
     target = os.path.join(
@@ -115,7 +114,7 @@ def run_condition(rtt: float, drop_every: int, drop_landed_every: int = 0) -> di
     )
     with srv as url:
         store = HttpTableCommitStore(target, base_url=url)  # plant marker
-        cas_publish(store, "v-seed")  # so every writer starts from a state
+        cas_publish(store, read_snapshot(store), "v-seed")  # writers start from a state
         t0 = time.perf_counter()
         procs = [
             subprocess.Popen(
@@ -131,7 +130,7 @@ def run_condition(rtt: float, drop_every: int, drop_landed_every: int = 0) -> di
             assert p.returncode == 0, f"writer died: {out}"
             stats.append(json.loads(out.strip().splitlines()[-1]))
         wall = time.perf_counter() - t0
-        state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
+        state = read_snapshot(store).state
     # correctness under the condition, not just speed. What is
     # asserted: (a) every writer process exited 0 and reported each of
     # its commits landed (a writer only advances past a commit once its

@@ -19,13 +19,14 @@ from ad_data_lake_spark.commit_protocol import (
     MemoryConditionalStore,
     PreconditionFailed,
     cas_publish,
+    read_snapshot,
 )
 
 
 def test_publish_sequence_and_retention():
     store = MemoryConditionalStore()
     for i in range(5):
-        res = cas_publish(store, f"v-{i:04d}", retain=3)
+        res = cas_publish(store, read_snapshot(store), f"v-{i:04d}", retain=3)
         assert res.kept[-1] == f"v-{i:04d}"
     state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
     assert state.current == "v-0004"
@@ -35,59 +36,59 @@ def test_publish_sequence_and_retention():
 
 def test_base_version_cas_rejects_stale_writer():
     store = MemoryConditionalStore()
-    cas_publish(store, "v-0")
-    # A computes from v-0; B lands first; A must fail and retry off v-1
-    cas_publish(store, "v-b", base_version="v-0")
+    cas_publish(store, read_snapshot(store), "v-0")
+    # A and B both compute from v-0; B lands first; A must fail and
+    # retry off a snapshot at v-b
+    snap_a = read_snapshot(store)
+    cas_publish(store, read_snapshot(store), "v-b")
     with pytest.raises(ConcurrentWriteError):
-        cas_publish(store, "v-a", base_version="v-0")
-    res = cas_publish(store, "v-a", base_version="v-b")  # recompute, retry
+        cas_publish(store, snap_a, "v-a")
+    res = cas_publish(store, read_snapshot(store), "v-a")  # recompute, retry
     assert list(res.kept) == ["v-0", "v-b", "v-a"]
 
 
 def test_get_to_put_race_is_caught_by_the_etag():
-    """A writer can pass the base check and still lose to a publish
-    landing between its get and its put — the conditional-put itself
-    must catch that (the window the file backend closes with its lock
-    and an object store closes server-side)."""
+    """A commit landing after the snapshot read is refused: here the
+    intruder lands in the last instant before the publish's own put,
+    and the conditional put itself must catch it (an object store
+    closes that window server-side). The publish issues no read of its
+    own that could pick up the newer state."""
 
     class RacingStore(MemoryConditionalStore):
         def __init__(self):
             super().__init__()
             self.fired = False
+            self.gets = 0
 
         def get(self, key):
-            got = super().get(key)
-            if not self.fired and got is not None:
+            self.gets += 1
+            return super().get(key)
+
+        def put_if(self, key, data, **kwargs):
+            if not self.fired and kwargs.get("if_match") is not None:
                 self.fired = True
-                cas_publish(self, "v-intruder")  # lands after the get
-            return got
+                # lands after the loser's snapshot read, before its put
+                cas_publish(self, read_snapshot(self), "v-intruder")
+            return super().put_if(key, data, **kwargs)
 
     store = RacingStore()
-    cas_publish(store, "v-0")
+    cas_publish(store, read_snapshot(store), "v-0")
+    snap = read_snapshot(store)
+    gets = store.gets
     with pytest.raises(ConcurrentWriteError):
-        # base check passes (v-0 was current at get time); the
-        # conditional put must still refuse
-        cas_publish(store, "v-loser", base_version="v-0")
+        cas_publish(store, snap, "v-loser")
+    assert store.gets == gets + 1  # the intruder's read; none by the loser
     state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
     assert state.current == "v-intruder"
 
 
 def test_first_write_create_race_single_winner():
-    class CreateRace(MemoryConditionalStore):
-        def __init__(self):
-            super().__init__()
-            self.fired = False
-
-        def get(self, key):
-            got = super().get(key)
-            if not self.fired and got is None:
-                self.fired = True
-                cas_publish(self, "v-first")  # another first-writer lands
-            return got
-
-    store = CreateRace()
+    store = MemoryConditionalStore()
+    snap = read_snapshot(store)  # no state yet: commits If-None-Match
+    assert snap.etag is None
+    cas_publish(store, read_snapshot(store), "v-first")  # another first-writer lands
     with pytest.raises(ConcurrentWriteError):
-        cas_publish(store, "v-second", base_version=None)
+        cas_publish(store, snap, "v-second")
     state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
     assert state.current == "v-first"
 
@@ -98,7 +99,7 @@ def test_lock_free_multi_writer_hammer():
     server-side atomicity). Every publish must eventually land via the
     read-current/recompute/retry loop; the final log is consistent."""
     store = MemoryConditionalStore()
-    cas_publish(store, "v-seed")
+    cas_publish(store, read_snapshot(store), "v-seed")
     landed = []
     landed_lock = threading.Lock()
 
@@ -106,10 +107,8 @@ def test_lock_free_multi_writer_hammer():
         for i in range(10):
             name = f"v-t{tid}i{i}"
             while True:
-                got = store.get(COMMIT_KEY)
-                base = CommitState.from_bytes(got[0]).current
                 try:
-                    cas_publish(store, name, base_version=base, retain=100)
+                    cas_publish(store, read_snapshot(store), name, retain=100)
                     break
                 except ConcurrentWriteError:
                     continue
@@ -143,7 +142,7 @@ def test_crashed_first_commit_tail_is_not_a_readable_prior():
 
     store = MemoryConditionalStore()
     store.put_if(COMMIT_KEY, crashed.to_bytes(), if_none_match=True)
-    res = cas_publish(store, "v-real", base_version=None)
+    res = cas_publish(store, read_snapshot(store), "v-real")
     assert list(res.kept) == ["v-real"]
     assert "v-crashed" in res.logged  # GC-eligible immediately
     state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
@@ -169,7 +168,8 @@ def test_crashed_first_commit_interleave_on_file_backend(tmp_path):
     )
 
     assert incremental._state(target).published() == []
-    incremental._publish(target, "v-real", base_version=None)
+    store = incremental._commit_store(target)
+    incremental._publish(target, "v-real", store, read_snapshot(store))
     state = incremental._state(target)
     assert state.current == "v-real"
     assert state.published() == ["v-real"]
@@ -179,7 +179,7 @@ def test_crashed_first_commit_interleave_on_file_backend(tmp_path):
 
 def test_crash_before_put_leaves_state_untouched():
     store = MemoryConditionalStore()
-    cas_publish(store, "v-0")
+    cas_publish(store, read_snapshot(store), "v-0")
     before = store.get(COMMIT_KEY)
     # a crashed writer = one that read state and never called put_if;
     # there is nothing to clean up and nothing to break
@@ -190,14 +190,15 @@ def _script(store) -> list:
     """A fixed interleave script returning observable outcomes — run
     against both backends to prove behavioral equivalence."""
     out = []
-    cas_publish(store, "v-0001", base_version=None, retain=2, n_buckets=8)
-    cas_publish(store, "v-0002", base_version="v-0001", retain=2)
+    cas_publish(store, read_snapshot(store), "v-0001", retain=2, n_buckets=8)
+    at_0001 = read_snapshot(store)
+    cas_publish(store, at_0001, "v-0002", retain=2)
     try:
-        cas_publish(store, "v-0003", base_version="v-0001", retain=2)
+        cas_publish(store, at_0001, "v-0003", retain=2)  # stale snapshot
         out.append("stale-accepted")
     except ConcurrentWriteError:
         out.append("stale-rejected")
-    res = cas_publish(store, "v-0003", base_version="v-0002", retain=2)
+    res = cas_publish(store, read_snapshot(store), "v-0003", retain=2)
     out.append(tuple(res.kept))
     state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
     out.append((state.current, tuple(state.versions), state.n_buckets))
@@ -235,7 +236,7 @@ def test_sqlite_store_multi_writer_hammer(tmp_path):
     from ad_data_lake_spark.sqlite_store import SqliteConditionalStore
 
     store = SqliteConditionalStore(str(tmp_path / "hammer.sqlite"))
-    cas_publish(store, "v-seed")
+    cas_publish(store, read_snapshot(store), "v-seed")
     landed = []
     landed_lock = threading.Lock()
 
@@ -243,10 +244,8 @@ def test_sqlite_store_multi_writer_hammer(tmp_path):
         for i in range(10):
             name = f"v-t{tid}i{i}"
             while True:
-                got = store.get(COMMIT_KEY)
-                base = CommitState.from_bytes(got[0]).current
                 try:
-                    cas_publish(store, name, base_version=base, retain=100)
+                    cas_publish(store, read_snapshot(store), name, retain=100)
                     break
                 except ConcurrentWriteError:
                     continue
@@ -281,7 +280,7 @@ def test_sqlite_writer_killed_mid_transaction_rolls_back(tmp_path):
 
     db = str(tmp_path / "crash.sqlite")
     store = SqliteConditionalStore(db)
-    cas_publish(store, "v-seed")
+    cas_publish(store, read_snapshot(store), "v-seed")
     before = store.get(COMMIT_KEY)
 
     child = subprocess.Popen(
@@ -312,7 +311,7 @@ def test_sqlite_writer_killed_mid_transaction_rolls_back(tmp_path):
     # state must be exactly the pre-crash state (rollback, not the 999)
     assert store.get(COMMIT_KEY) == before
     # and the table is writable again immediately (lock died with fd)
-    res = cas_publish(store, "v-after", base_version="v-seed")
+    res = cas_publish(store, read_snapshot(store), "v-after")
     assert list(res.kept) == ["v-seed", "v-after"]
 
 
@@ -362,7 +361,7 @@ def test_http_store_multi_writer_hammer():
 
     with EtagStoreServer() as url:
         store = HttpConditionalStore(url)
-        cas_publish(store, "v-seed")
+        cas_publish(store, read_snapshot(store), "v-seed")
         landed = []
         landed_lock = th.Lock()
 
@@ -371,9 +370,8 @@ def test_http_store_multi_writer_hammer():
             for i in range(10):
                 name = f"v-t{tid}i{i}"
                 while True:
-                    base = CommitState.from_bytes(mine.get(COMMIT_KEY)[0]).current
                     try:
-                        cas_publish(mine, name, base_version=base, retain=100)
+                        cas_publish(mine, read_snapshot(mine), name, retain=100)
                         break
                     except ConcurrentWriteError:
                         continue
@@ -407,17 +405,15 @@ def test_http_store_cross_process_churn():
         import sys
         sys.path.insert(0, {repo!r})
         from ad_data_lake_spark.commit_protocol import (
-            COMMIT_KEY, CommitState, ConcurrentWriteError, cas_publish)
+            ConcurrentWriteError, cas_publish, read_snapshot)
         from ad_data_lake_spark.http_store import HttpConditionalStore
         url, wid = sys.argv[1], sys.argv[2]
         store = HttpConditionalStore(url)
         for i in range(5):
             while True:
-                got = store.get(COMMIT_KEY)
-                base = CommitState.from_bytes(got[0]).current if got else None
                 try:
-                    cas_publish(store, f"v-p{{wid}}i{{i}}",
-                                base_version=base, retain=100)
+                    cas_publish(store, read_snapshot(store),
+                                f"v-p{{wid}}i{{i}}", retain=100)
                     break
                 except ConcurrentWriteError:
                     continue
@@ -447,12 +443,12 @@ def test_http_client_killed_between_get_and_put_leaves_no_trace():
 
     with EtagStoreServer() as url:
         store = HttpConditionalStore(url)
-        cas_publish(store, "v-0001")
+        cas_publish(store, read_snapshot(store), "v-0001")
         # simulated death: a writer read state... and vanished. No
         # cleanup, no lock release, no heartbeat. The store is simply
         # untouched, so the next publish proceeds.
-        _abandoned_base = CommitState.from_bytes(store.get(COMMIT_KEY)[0]).current
-        res = cas_publish(store, "v-0002", base_version="v-0001")
+        _abandoned = read_snapshot(store)
+        res = cas_publish(store, read_snapshot(store), "v-0002")
         state = CommitState.from_bytes(store.get(COMMIT_KEY)[0])
     assert state.current == "v-0002"
     assert "v-dead" not in state.versions and len(state.versions) == 2
@@ -494,10 +490,10 @@ def test_http_table_marker_routes_commit_store(tmp_path):
         HttpTableCommitStore(target, base_url=url)  # plants the marker
         store = incremental._commit_store(target)
         assert isinstance(store, HttpTableCommitStore)
-        cas_publish(store, "v-0001")
+        cas_publish(store, read_snapshot(store), "v-0001")
         # a second resolve (another writer, another process in spirit)
         again = incremental._commit_store(target)
-        res = cas_publish(again, "v-0002", base_version="v-0001")
+        res = cas_publish(again, read_snapshot(again), "v-0002")
         assert list(res.kept) == ["v-0001", "v-0002"]
         assert incremental._state(target).current == "v-0002"
 
@@ -659,9 +655,9 @@ def test_http_table_ambiguous_put_inside_cas_publish(tmp_path):
     srv = EtagStoreServer()
     with srv as url:
         store = HttpTableCommitStore(target, base_url=url)
-        cas_publish(store, "v-0001")
+        cas_publish(store, read_snapshot(store), "v-0001")
         srv.inject_put_fault("after_commit")
-        res = cas_publish(store, "v-0002", base_version="v-0001")
+        res = cas_publish(store, read_snapshot(store), "v-0002")
         state = incremental._state(target)
     assert list(res.kept) == ["v-0001", "v-0002"]
     assert state.current == "v-0002"
@@ -670,9 +666,9 @@ def test_http_table_ambiguous_put_inside_cas_publish(tmp_path):
 def test_http_table_cross_process_churn(tmp_path):
     """4 writer PROCESSES x 5 publishes each against one endpoint and
     ONE table directory — every writer resolves the arbiter from the
-    marker alone (incremental._commit_store), takes its base from
-    incremental._state as a merge does, retries on
-    ConcurrentWriteError, and every commit lands exactly once."""
+    marker alone (incremental._commit_store), reads one snapshot per
+    attempt as a merge does, retries on ConcurrentWriteError, and
+    every commit lands exactly once."""
     import subprocess
     import sys
     import textwrap
@@ -686,16 +682,14 @@ def test_http_table_cross_process_churn(tmp_path):
         sys.path.insert(0, {repo!r})
         from ad_data_lake_spark import incremental
         from ad_data_lake_spark.commit_protocol import (
-            ConcurrentWriteError, cas_publish)
+            ConcurrentWriteError, cas_publish, read_snapshot)
         target, wid = sys.argv[1], sys.argv[2]
         store = incremental._commit_store(target)
         for i in range(5):
             while True:
-                state = incremental._state(target)
-                base = state.current if state else None
                 try:
-                    cas_publish(store, f"v-p{{wid}}i{{i}}",
-                                base_version=base, retain=100)
+                    cas_publish(store, read_snapshot(store),
+                                f"v-p{{wid}}i{{i}}", retain=100)
                     break
                 except ConcurrentWriteError:
                     continue
@@ -734,7 +728,8 @@ def test_cas_no_unbounded_starvation_under_contention():
     results: dict[int, int] = {}
     errors: list[Exception] = []
     with EtagStoreServer(latency=0.002) as url:  # ~2ms RTT: real races
-        cas_publish(HttpConditionalStore(url), "v-seed")
+        seed = HttpConditionalStore(url)
+        cas_publish(seed, read_snapshot(seed), "v-seed")
 
         def writer(w: int) -> None:
             try:
@@ -744,11 +739,9 @@ def test_cas_no_unbounded_starvation_under_contention():
                 for i in range(12):
                     streak = 0
                     while True:
-                        got = store.get(COMMIT_KEY)
-                        base = CommitState.from_bytes(got[0]).current
                         try:
                             cas_publish(
-                                store, f"v-w{w}-{i:03d}", base_version=base
+                                store, read_snapshot(store), f"v-w{w}-{i:03d}"
                             )
                             break
                         except ConcurrentWriteError:
@@ -773,17 +766,21 @@ def test_cas_no_unbounded_starvation_under_contention():
     assert max(results.values()) < 30, results
 
 
-def test_sqlite_publish_opens_two_connections(tmp_path, monkeypatch):
+def test_sqlite_publish_opens_one_connection(tmp_path, monkeypatch):
     """A steady-state publish on a sqlite-arbitered table opens one
-    connection for ``get`` and one for ``put_if``; constructing the
-    store opens none. A whole merge adds one read for its base version
-    (pinned in tests/test_lake.py)."""
+    connection, for its ``put_if``: it commits over the snapshot its
+    caller read and reads nothing itself (here it retires no version,
+    so GC re-reads nothing either). Constructing the store opens none.
+    A whole merge adds the one read of that snapshot (pinned in
+    tests/test_lake.py)."""
     import sqlite3
 
     target = str(tmp_path / "conn_t")
     for v in ("v-1", "v-2"):
         os.makedirs(os.path.join(target, v))
-    incremental._publish(target, "v-1", base_version=None)
+    store = incremental._commit_store(target)
+    incremental._publish(target, "v-1", store, read_snapshot(store))
+    base = read_snapshot(store)
 
     opened = []
     real_connect = sqlite3.connect
@@ -793,6 +790,47 @@ def test_sqlite_publish_opens_two_connections(tmp_path, monkeypatch):
         return real_connect(*args, **kwargs)
 
     monkeypatch.setattr(sqlite3, "connect", counting_connect)
-    incremental._publish(target, "v-2", base_version="v-1")
-    assert len(opened) == 2, opened
+    incremental._publish(target, "v-2", store, base)
+    assert len(opened) == 1, opened
     assert incremental._state(target).current == "v-2"
+
+
+# module -> why it may call ``.put_if(``: every lake commit goes
+# through commit_protocol.commit_state, so no caller hand-rolls a CAS
+PUT_IF_ALLOWED = {
+    "commit_protocol.py": "commit_state, the one conditional commit",
+    "sqlite_store.py": "a conditional-put store implementation",
+    "http_store.py": "the table adapter delegating to its HTTP client",
+}
+
+
+def test_only_the_commit_helper_calls_put_if():
+    """An ``ast`` scan of the package: ``.put_if(`` is called only in
+    the allowlisted modules, and in commit_protocol.py only by
+    ``commit_state``, so merges and ``vacuum`` share one CAS path."""
+    import ast
+    from pathlib import Path
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self):
+            self.func, self.found = None, []
+
+        def visit_FunctionDef(self, node):
+            outer, self.func = self.func, node.name
+            self.generic_visit(node)
+            self.func = outer
+
+        def visit_Call(self, node):
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "put_if":
+                self.found.append(self.func)
+            self.generic_visit(node)
+
+    pkg = Path(incremental.__file__).resolve().parent
+    calls = {}
+    for path in sorted(pkg.rglob("*.py")):
+        v = Calls()
+        v.visit(ast.parse(path.read_text()))
+        if v.found:
+            calls[path.relative_to(pkg).as_posix()] = v.found
+    assert set(calls) <= set(PUT_IF_ALLOWED), calls
+    assert calls["commit_protocol.py"] == ["commit_state"]

@@ -29,15 +29,11 @@ def events(spark):
 
 def _plant_state(target: str, state) -> None:
     """Overwrite a table's commit state at its sqlite arbiter."""
-    from ad_data_lake_spark.commit_protocol import COMMIT_KEY
+    from ad_data_lake_spark.commit_protocol import commit_state, read_snapshot
     from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
 
     store = SqliteTableCommitStore(target)
-    got = store.get(COMMIT_KEY)
-    if got is None:
-        store.put_if(COMMIT_KEY, state.to_bytes(), if_none_match=True)
-    else:
-        store.put_if(COMMIT_KEY, state.to_bytes(), if_match=got[1])
+    commit_state(store, read_snapshot(store), state)
 
 
 def _write_file(target: str, name: str, content: str) -> None:
@@ -1164,19 +1160,27 @@ def test_dead_first_merge_leftover_is_not_legacy_data(spark, events, tmp_path):
 
 
 def test_publish_cas_rejects_stale_base(spark, events, tmp_path):
-    """_publish with a base_version that is no longer current must
-    raise ConcurrentWriteError (and leave the table untouched);
-    with the matching base it commits."""
+    """_publish over a snapshot that another commit has since replaced
+    must raise ConcurrentWriteError (and leave the table untouched);
+    over a fresh snapshot it commits. The intervening commit is a
+    ``vacuum`` that changes nothing but the etag, so the refusal rests
+    on the etag alone, not on the pointer having moved."""
+    from ad_data_lake_spark.commit_protocol import read_snapshot
+
     target = str(tmp_path / "cas_t")
     base = _ev_base(events)
     incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
     current = incremental._state(target).current
     h0 = _table_hash(incremental.read_merged(spark, target))
+    store = incremental._commit_store(target)
+    stale = read_snapshot(store)
+    assert incremental.vacuum(target) == []
+    assert read_snapshot(store).state == stale.state
 
     stale_dir = os.path.join(target, "v-57a1ebad")
     os.makedirs(stale_dir)
     with pytest.raises(incremental.ConcurrentWriteError):
-        incremental._publish(target, "v-57a1ebad", base_version="v-other")
+        incremental._publish(target, "v-57a1ebad", store, stale)
     # pointer and data untouched by the failed commit
     assert incremental._state(target).current == current
     assert _table_hash(incremental.read_merged(spark, target)) == h0
@@ -1185,7 +1189,7 @@ def test_publish_cas_rejects_stale_base(spark, events, tmp_path):
     incremental._save_schema(
         stale_dir, incremental.read_merged(spark, target).schema
     )
-    incremental._publish(target, "v-57a1ebad", base_version=current)
+    incremental._publish(target, "v-57a1ebad", store, read_snapshot(store))
     assert incremental._state(target).current == "v-57a1ebad"
 
 
@@ -1322,7 +1326,9 @@ def test_remove_versions_rechecks_liveness_per_directory(tmp_path):
 
     _shutil.rmtree = hooked
     try:
-        removed = incremental._remove_versions(target, ["v-doom1", "v-doom2"])
+        removed = incremental._remove_versions(
+            target, incremental._commit_store(target), ["v-doom1", "v-doom2"]
+        )
     finally:
         _shutil.rmtree = real_rmtree
     assert removed == ["v-doom1"]
@@ -1334,8 +1340,13 @@ def test_files_only_table_is_adopted_by_sqlite(tmp_path):
     """A table whose commit state exists only as files (no database;
     e.g. written before sqlite was its arbiter) is adopted on its first
     commit: the seeded row carries the files' log, pointer and bucket
-    count, so the base-checked publish lands instead of CAS-failing."""
-    from ad_data_lake_spark.commit_protocol import COMMIT_KEY, CommitState
+    count, and the publish over the snapshot read from that seed lands
+    instead of CAS-failing."""
+    from ad_data_lake_spark.commit_protocol import (
+        COMMIT_KEY,
+        CommitState,
+        read_snapshot,
+    )
     from ad_data_lake_spark.sqlite_store import SqliteTableCommitStore
 
     target = str(tmp_path / "files_only_t")
@@ -1346,7 +1357,10 @@ def test_files_only_table_is_adopted_by_sqlite(tmp_path):
     _write_file(target, "_VERSIONS", "v-0001\nv-0002\n")
     _write_file(target, "_CURRENT", "v-0002")
 
-    incremental._publish(target, "v-0003", base_version="v-0002")
+    store = incremental._commit_store(target)
+    base = read_snapshot(store)
+    assert base.state.current == "v-0002"
+    incremental._publish(target, "v-0003", store, base)
     state = CommitState.from_bytes(
         SqliteTableCommitStore(target).get(COMMIT_KEY)[0]
     )
@@ -1424,11 +1438,12 @@ def test_reads_of_plain_or_missing_directory_create_no_database(spark, events, t
     assert not os.path.exists(missing)
 
 
-def test_sqlite_merge_opens_three_connections(spark, events, tmp_path, monkeypatch):
-    """A steady-state merge on a sqlite table opens three connections:
-    one to read its base version and bucket count, then the publish's
-    ``get`` and ``put_if``. (A merge that retires versions past the
-    retention window adds one read per directory it removes.)"""
+def test_sqlite_merge_opens_two_connections(spark, events, tmp_path, monkeypatch):
+    """A steady-state merge on a sqlite table opens two connections:
+    one to read its snapshot (base version, bucket count, etag), then
+    the publish's ``put_if`` over that snapshot. (A merge that retires
+    versions past the retention window adds one read per directory it
+    removes; this one retires none.)"""
     import sqlite3
 
     target = str(tmp_path / "conn_t")
@@ -1446,8 +1461,83 @@ def test_sqlite_merge_opens_three_connections(spark, events, tmp_path, monkeypat
     incremental.merge_upsert(
         spark, target, _ev_upd(base, 0, 1), "event_id", "ts", "value"
     )
-    assert len(opened) == 3, opened
+    assert len(opened) == 2, opened
     assert len(incremental._state(target).published()) == 2
+
+
+def test_http_merge_sends_one_get_and_one_put(spark, events, tmp_path, monkeypatch):
+    """A steady-state merge on an HTTP-arbitered table sends exactly one
+    GET (its snapshot) and one conditional PUT (its commit), counted at
+    the reference server's handler. It retires no version, so GC
+    re-reads nothing."""
+    from ad_data_lake_spark import http_store
+
+    target = str(tmp_path / "http_conn_t")
+    base = _ev_base(events)
+    seen = []
+    with http_store.EtagStoreServer() as url:
+        http_store.HttpTableCommitStore(target, base_url=url)
+        incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
+        for verb in ("GET", "PUT"):
+            real = getattr(http_store._Handler, f"do_{verb}")
+
+            def counting(self, real=real, verb=verb):
+                seen.append(verb)
+                return real(self)
+
+            monkeypatch.setattr(http_store._Handler, f"do_{verb}", counting)
+        incremental.merge_upsert(
+            spark, target, _ev_upd(base, 0, 1), "event_id", "ts", "value"
+        )
+        counted = sorted(seen)
+        assert len(incremental._state(target).published()) == 2
+    assert counted == ["GET", "PUT"], counted
+
+
+def test_vacuum_between_snapshot_and_publish_makes_the_merge_retry(
+    spark, events, tmp_path, monkeypatch
+):
+    """A ``vacuum`` that commits between a merge's snapshot read and its
+    publish moves the commit state's etag, so the merge's publish loses
+    the CAS like any other lost race: the attempt's version directory
+    is reclaimed, and the merge recomputes off a new snapshot and
+    lands. The final log is the vacuum's truncation plus the new
+    version."""
+    target = str(tmp_path / "vacuum_race_t")
+    base = _ev_base(events)
+    incremental.merge_upsert(spark, target, base, "event_id", "ts", "value")
+    incremental.merge_upsert(
+        spark, target, _ev_upd(base, 0, 1), "event_id", "ts", "value"
+    )
+    v0, v1 = incremental._state(target).published()
+
+    orig_publish = incremental._publish
+    attempts = []
+
+    def hooked(target_path, new_version, *args, **kwargs):
+        attempts.append(new_version)
+        if len(attempts) == 1:
+            assert incremental.vacuum(target_path) == [v0]
+        return orig_publish(target_path, new_version, *args, **kwargs)
+
+    monkeypatch.setattr(incremental, "_publish", hooked)
+    incremental.merge_upsert(
+        spark, target, _ev_upd(base, 1, 2), "event_id", "ts", "value"
+    )
+    assert len(attempts) == 2
+    state = incremental._state(target)
+    assert list(state.versions) == [v1, attempts[1]]
+    assert state.current == attempts[1]
+    assert not os.path.isdir(os.path.join(target, attempts[0]))
+    assert not os.path.isdir(os.path.join(target, v0))
+    rows = {
+        r["event_id"]: r["value"]
+        for r in incremental.read_merged(spark, target).collect()
+    }
+    src = {r["event_id"]: r["value"] for r in base.collect()}
+    assert rows == pytest.approx(
+        {eid: v + (1 if eid % 2 == 0 else 2) for eid, v in src.items()}
+    )
 
 
 @pytest.mark.parametrize("backend", ["adopted", "sqlite"])
@@ -1467,11 +1557,14 @@ def test_publish_cas_across_processes(tmp_path, backend):
     import sys
     import textwrap
 
+    from ad_data_lake_spark.commit_protocol import read_snapshot
+
     target = str(tmp_path / f"xproc_{backend}_t")
     os.makedirs(target)
     os.makedirs(os.path.join(target, "v-seed0000"))
     if backend == "sqlite":
-        incremental._publish(target, "v-seed0000", base_version=None)
+        store = incremental._commit_store(target)
+        incremental._publish(target, "v-seed0000", store, read_snapshot(store))
     else:
         _write_file(target, "_CURRENT", "v-seed0000")
         _write_file(target, "_VERSIONS", "v-seed0000\n")
@@ -1484,14 +1577,15 @@ def test_publish_cas_across_processes(tmp_path, backend):
         import os, sys
         sys.path.insert(0, {repo!r})
         from ad_data_lake_spark import incremental as inc
+        from ad_data_lake_spark.commit_protocol import read_snapshot
         target, wid = sys.argv[1], sys.argv[2]
+        store = inc._commit_store(target)
         for i in range(5):
             name = f"v-w{{wid}}n{{i}}"
             os.makedirs(os.path.join(target, name), exist_ok=True)
             for attempt in range(50):
-                base = inc._state(target).current
                 try:
-                    inc._publish(target, name, base_version=base)
+                    inc._publish(target, name, store, read_snapshot(store))
                     break
                 except inc.ConcurrentWriteError:
                     continue

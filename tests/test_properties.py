@@ -349,7 +349,7 @@ def test_webp_corruption_never_escapes_valueerror(seed, flip_to, data_st):
 @given(
     st.lists(
         st.one_of(
-            st.tuples(st.just("publish"), st.booleans()),  # stale_base?
+            st.tuples(st.just("publish"), st.booleans()),  # stale snapshot?
             st.tuples(st.just("vacuum"), st.integers(min_value=1, max_value=4)),
         ),
         min_size=1,
@@ -359,53 +359,53 @@ def test_webp_corruption_never_escapes_valueerror(seed, flip_to, data_st):
 )
 @settings(max_examples=60, deadline=None)
 def test_commit_protocol_invariants_under_random_schedules(ops, retain):
-    """Any sequence of publishes (some deliberately stale-based) and
-    vacuums preserves the commit-state invariants: versions unique,
+    """Any sequence of publishes (some deliberately over a stale
+    snapshot: one read before the latest commit, a publish or a vacuum)
+    and vacuums preserves the commit-state invariants: versions unique,
     current is the log's last entry, log length bounded by the largest
-    retention used, and a stale-based publish NEVER lands."""
+    retention used, and a stale-snapshot publish NEVER lands."""
     from ad_data_lake_spark.commit_protocol import (
         COMMIT_KEY,
         CommitState,
         ConcurrentWriteError,
         MemoryConditionalStore,
-        PreconditionFailed,
         cas_publish,
+        commit_state,
+        read_snapshot,
     )
 
     store = MemoryConditionalStore()
     current = None
+    stale = None  # a snapshot read before the latest commit
     seq = 0
     max_retain = retain
     for op in ops:
         if op[0] == "publish":
-            stale = op[1] and current is not None
-            base = "v-stale-base" if stale else current
+            use_stale = op[1] and stale is not None
+            snap = stale if use_stale else read_snapshot(store)
             name = f"v-{seq:04d}"
             try:
-                cas_publish(store, name, base_version=base, retain=retain)
-                assert not stale, "stale-based publish landed"
+                cas_publish(store, snap, name, retain=retain)
+                assert not use_stale, "stale-snapshot publish landed"
                 current = name
                 seq += 1
+                stale = snap
             except ConcurrentWriteError:
-                assert stale, "fresh-based publish was rejected"
+                assert use_stale, "fresh-snapshot publish was rejected"
         else:
-            got = store.get(COMMIT_KEY)
-            if got is None:
+            snap = read_snapshot(store)
+            if snap.etag is None:
                 continue
-            state = CommitState.from_bytes(got[0])
+            state = snap.state
             keep = state.published()[-op[1]:]
             if state.current is not None and state.current not in keep:
                 keep = keep + [state.current]
-            try:
-                store.put_if(
-                    COMMIT_KEY,
-                    CommitState(
-                        tuple(keep), state.current, state.n_buckets
-                    ).to_bytes(),
-                    if_match=got[1],
-                )
-            except PreconditionFailed:
-                pass
+            commit_state(
+                store,
+                snap,
+                CommitState(tuple(keep), state.current, state.n_buckets),
+            )
+            stale = snap
             max_retain = max(max_retain, op[1])
         got = store.get(COMMIT_KEY)
         if got is not None:
